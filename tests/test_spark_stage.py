@@ -59,6 +59,62 @@ def test_spark_equals_pure_python(spark, corpus_path):
         assert got[doc_id] == exp, doc_id
 
 
+def test_workers_guard_zip_rereads_and_import_new_py_files(spark, tmp_path):
+    """Doc-stage workers import ``xhtmlkit_spark`` and with it the zip
+    re-read guard; a zip added with ``addPyFile`` after the workers are
+    warm is still importable in them."""
+    import uuid
+    import zipfile
+
+    from pyspark.sql import types as T
+
+    from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn, run_doc_stage
+
+    def guard_installed():
+        import sys
+        import zipimport
+
+        pkg = sys.modules.get("xhtmlkit_spark")
+        return pkg is not None and (
+            zipimport.zipimporter.invalidate_caches is pkg._invalidate_if_changed
+        )
+
+    def report(kinds, texts, refs, offsets):
+        return ["text"], [str(guard_installed())], [None], [0]
+
+    df = spark.createDataFrame(
+        [(f"d{i}", [("text", "x", None, 0)]) for i in range(8)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    ).repartition(4)
+    got = run_doc_stage(df, lambda n_pt: make_doc_stage_fn(report, n_pt), ()).collect()
+    assert [r["spans"][0]["text"] for r in got] == ["True"] * 8
+
+    name = "xkit_pyfile_" + uuid.uuid4().hex
+    archive = tmp_path / f"{name}.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 'fresh'\n")
+    spark.sparkContext.addPyFile(str(archive))
+
+    def import_fresh(batches):
+        import importlib
+
+        value = importlib.import_module(name).VALUE
+        guarded = guard_installed()
+        for batch in batches:
+            n = batch.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([value] * n), pa.array([guarded] * n)], ["value", "guarded"]
+            )
+
+    schema = T.StructType(
+        [T.StructField("value", T.StringType()), T.StructField("guarded", T.BooleanType())]
+    )
+    rows = spark.range(0, 8, numPartitions=4).mapInArrow(import_fresh, schema).collect()
+    assert [r["value"] for r in rows] == ["fresh"] * 8
+    # the tasks ran in reused workers that already had the guard
+    assert any(r["guarded"] for r in rows)
+
+
 def test_determinism_across_parallelism(spark, corpus_path):
     from xhtmlkit_spark.operators.extract_stage import extract_spans
     from xhtmlkit_spark.plans.pipeline import with_size_salt
