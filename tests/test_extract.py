@@ -123,74 +123,3 @@ def test_null_offset_spans_never_crash():
     )
     # null offsets sort last, stable; batch must not die on None<int
     assert k == ["text", "text"] and "second" in t[0] and "first" in t[1]
-
-
-def test_fused_extractor_equals_token_reference_on_corpus():
-    """The fused production extract_html must be span-for-span equal to
-    the token-driven reference (_extract_html_tokens) on adversarial
-    markup, every golden case, and both option modes."""
-    import json
-    import os
-
-    from xkit.extract import _extract_html_tokens
-
-    cases = [
-        "",
-        "plain text no markup at all",
-        "ent &amp; ities &lt;kept&gt; flat",
-        "<p>one<p>two<div hidden><p>gone</div><p>three",
-        "<script>a < b && c</script><p>after</p>",
-        "<title>rc &amp; data</title><p>body</p>",
-        "<ul><li>a<li>b<li>c</ul>",
-        "<a href=x>link</a> prose around the anchor goes here ok",
-        "<img src=a.png><p>between</p><video src='v.mp4'>fallback</video>",
-        "<iframe src=f.html><p>never shown</p></iframe><p>shown</p>",
-        "< not a tag <1 also not <p>real</p> trailing <",
-        "</stray></p><p>recover</p></html>",
-        "<textarea>dropped &amp; raw</textarea><p>kept</p>",
-        "<table><tr><td>a<td>b<tr><td>c</table>",
-        "<!-- comment --><!DOCTYPE html><![CDATA[x]]><?pi?><p>doc</p>",
-        "<p>unterminated <b attr='",
-        "<script>never closed raw",
-        "<SELECT><OPTION>x</SELECT><p>after select</p>",
-        "<head><meta x><p>body starts</head><p>more",
-        "<x123 9=>< p>odd</ p>",
-        "\x00<p>nul</p>\x00",
-        "<p>" + "word " * 50 + "<br>" + "tail " * 30,
-    ]
-    golden_dir = os.path.join(os.path.dirname(__file__), "golden")
-    for fn in sorted(os.listdir(golden_dir)):
-        if fn.endswith(".json"):
-            for case in json.load(open(os.path.join(golden_dir, fn))).get("cases", []):
-                h = case.get("html")
-                if isinstance(h, str):
-                    cases.append(h)
-    opts = [
-        ExtractOptions(),
-        ExtractOptions(fragment=True, base_url="http://e.x/a/"),
-        ExtractOptions(min_block_chars=0, min_text_density=0.0, max_link_density=1.0),
-    ]
-    for h in cases:
-        for o in opts:
-            assert extract_html(h, o) == _extract_html_tokens(h, o), (h[:80], o)
-
-
-def test_fused_extractor_equals_token_reference_fuzz():
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from xkit.extract import _extract_html_tokens
-
-    soup = st.text(
-        alphabet=st.sampled_from(
-            list("<>/=\"' abcdef&#;!-?ptable srcimghdnul\t\n123")
-        ),
-        max_size=120,
-    )
-
-    @given(soup)
-    @settings(max_examples=300, deadline=None)
-    def check(s):
-        assert extract_html(s) == _extract_html_tokens(s)
-
-    check()

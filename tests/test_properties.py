@@ -5,13 +5,14 @@ example-based goldens pin."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from xkit.doc import extract_doc
 from xkit.dom import repair, serialize
 from xkit.encoding import decode_html_bytes
 from xkit.extract import extract_html
+from xkit.options import ExtractOptions
 from xkit.tokenizer import tokenize
 
 # text biased toward markup metacharacters so the generator actually
@@ -22,17 +23,62 @@ _markupish = st.text(
 _any_text = st.one_of(_markupish, st.text(max_size=200))
 
 
+# adversarial markup every extractor change must survive: no markup,
+# entities, implicit closes, RAWTEXT/RCDATA, media and iframe fallback,
+# literal '<', stray closes, declarations, EOF inside a tag or raw text
+_ADVERSARIAL = [
+    "",
+    "plain text no markup at all",
+    "ent &amp; ities &lt;kept&gt; flat",
+    "<p>one<p>two<div hidden><p>gone</div><p>three",
+    "<script>a < b && c</script><p>after</p>",
+    "<title>rc &amp; data</title><p>body</p>",
+    "<ul><li>a<li>b<li>c</ul>",
+    "<a href=x>link</a> prose around the anchor goes here ok",
+    "<img src=a.png><p>between</p><video src='v.mp4'>fallback</video>",
+    "<iframe src=f.html><p>never shown</p></iframe><p>shown</p>",
+    "< not a tag <1 also not <p>real</p> trailing <",
+    "</stray></p><p>recover</p></html>",
+    "<textarea>dropped &amp; raw</textarea><p>kept</p>",
+    "<table><tr><td>a<td>b<tr><td>c</table>",
+    "<!-- comment --><!DOCTYPE html><![CDATA[x]]><?pi?><p>doc</p>",
+    "<p>unterminated <b attr='",
+    "<script>never closed raw",
+    "<SELECT><OPTION>x</SELECT><p>after select</p>",
+    "<head><meta x><p>body starts</head><p>more",
+    "<x123 9=>< p>odd</ p>",
+    "\x00<p>nul</p>\x00",
+    "<p>" + "word " * 50 + "<br>" + "tail " * 30,
+]
+# default, fragment + base_url, and every threshold off
+_OPTION_MODES = [
+    ExtractOptions(),
+    ExtractOptions(fragment=True, base_url="http://e.x/a/"),
+    ExtractOptions(min_block_chars=0, min_text_density=0.0, max_link_density=1.0),
+]
+
+
+def _with_examples(cases):
+    def deco(f):
+        for c in cases:
+            f = example(c)(f)
+        return f
+
+    return deco
+
+
 @settings(max_examples=300, deadline=None)
+@_with_examples(_ADVERSARIAL)
 @given(_any_text)
 def test_extract_never_raises_and_is_well_formed(s):
-    spans = extract_html(s)
-    for kind, text, ref in spans:
-        assert kind in ("text", "media")
-        if kind == "text":
-            assert text and ref is None
-            assert text == " ".join(text.split())  # A25 collapse invariant
-        else:
-            assert ref and text is None
+    for opts in _OPTION_MODES:
+        for kind, text, ref in extract_html(s, opts):
+            assert kind in ("text", "media")
+            if kind == "text":
+                assert text and ref is None
+                assert text == " ".join(text.split())  # A25 collapse invariant
+            else:
+                assert ref and text is None
 
 
 @settings(max_examples=300, deadline=None)

@@ -126,6 +126,26 @@ def test_determinism_across_parallelism(spark, corpus_path):
     assert norm(a) == norm(b)
 
 
+def _multi_column_stage_fn():
+    """A kernel mapper with a spans + string + map output spec."""
+    from pyspark.sql import types as T
+
+    from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE, make_doc_stage_fn
+    from xkit.options import DEFAULT_OPTIONS
+
+    out = (
+        ("spans", SPANS_TYPE),
+        ("first_kind", T.StringType()),
+        ("meta", T.MapType(T.StringType(), T.StringType())),
+    )
+
+    def doc_fn(kinds, texts, refs, offsets):
+        spans = extract_doc(kinds, texts, refs, offsets, DEFAULT_OPTIONS)
+        return spans, kinds[0] if kinds else None, [("n", str(len(kinds)))]
+
+    return make_doc_stage_fn(doc_fn, 0, out)
+
+
 def test_sliced_batch_handled():
     """mapInArrow fns must survive sliced ListArrays (offset != 0)."""
     from xhtmlkit_spark.operators.extract_stage import make_extract_fn
@@ -158,6 +178,15 @@ def test_sliced_batch_handled():
     assert rows[0][0]["text"] == "doc one text"
     assert rows[1][0]["media_ref"] == "m.png"
 
+    # a multi-column output spec sees the same documents: the sliced
+    # batch's rows equal the unsliced batch's last two rows
+    multi = _multi_column_stage_fn()
+    (whole,) = list(multi(iter([batch])))
+    (part,) = list(multi(iter([sliced])))
+    assert part.schema == whole.schema
+    assert part.to_pylist() == whole.to_pylist()[1:]
+    assert part.to_pylist()[0]["first_kind"] == "html"
+
 
 def test_null_spans_row():
     from xhtmlkit_spark.operators.extract_stage import make_extract_fn
@@ -174,6 +203,13 @@ def test_null_spans_row():
     # NULL input spans stay NULL (not []) — the output ListArray carries
     # the null through, preserving the input's null-vs-empty distinction
     assert rows[0] is None and rows[1][0]["text"] == "kept text"
+
+    # a NULL spans row is NULL in every column of a multi-column spec
+    (multi,) = list(_multi_column_stage_fn()(iter([batch])))
+    null_row, kept = multi.to_pylist()
+    assert null_row == {"doc_id": "a", "spans": None, "first_kind": None, "meta": None}
+    assert kept["spans"][0]["text"] == "kept text"
+    assert kept["first_kind"] == "html" and kept["meta"] == [("n", "1")]
 
 
 def test_normalize_xhtml_matches_pure_python(spark, corpus_path):
@@ -411,11 +447,14 @@ def test_new_stages_survive_null_spans_rows(spark):
 
     from xhtmlkit_spark.operators.harvest_stage import (
         doc_links,
+        harvest_all,
         page_meta,
         table_rows,
     )
     from xhtmlkit_spark.operators.markdown_stage import markdown_docs
+    from xhtmlkit_spark.operators.normalize_stage import normalize_xhtml
     from xhtmlkit_spark.operators.project_stage import project_docs
+    from xhtmlkit_spark.operators.select_stage import select_multi
 
     span = Row("kind", "text", "media_ref", "offset")
     rows = [
@@ -445,6 +484,24 @@ def test_new_stages_survive_null_spans_rows(spark):
     assert pm["ok"]["title"] == "T"
     assert pm["null_spans"]["title"] is None and pm["null_spans"]["meta"] is None
     assert pm["null_text"]["title"] is None
+    xh = {r["doc_id"]: r["xhtml"] for r in normalize_xhtml(df).collect()}
+    assert xh["ok"] and xh["null_spans"] is None
+    assert xh["null_text"] is None and xh["empty_spans"] is None
+    sm = {
+        r["doc_id"]: r
+        for r in select_multi(df, {"cells": "td", "anchors": "a"}).collect()
+    }
+    assert sm["ok"]["cells"][0]["text"] == "c" and sm["ok"]["anchors"][0]["text"] == "l"
+    assert sm["null_spans"]["cells"] is None and sm["null_spans"]["anchors"] is None
+    assert sm["null_text"]["cells"] == [] and sm["empty_spans"]["anchors"] == []
+    ha = {r["doc_id"]: r for r in harvest_all(df).collect()}
+    assert ha["ok"]["tables"][0]["cells"] == ["c"] and ha["ok"]["links"][0]["url"] == "u"
+    assert ha["ok"]["title"] == "T"
+    assert all(
+        ha["null_spans"][c] is None
+        for c in ("tables", "links", "title", "lang", "canonical", "meta")
+    )
+    assert ha["null_text"]["tables"] == [] and ha["null_text"]["meta"] == {}
 
 
 def test_build_crawl_frontier(spark, tmp_path):

@@ -13,6 +13,9 @@ in a ``DataFrame.mapInArrow`` stage. Contract points (BASELINE.json
   no per-row list-of-dict materialization in either direction.
 * Passthrough columns (e.g. ``part`` for checkpointing) are copied
   column-wise, untouched by Python.
+* Every per-document stage of the package (select, normalize,
+  markdown, project, harvest) is a ``doc_fn`` plus an output spec run
+  by the one kernel here, :func:`make_doc_stage_fn`.
 
 Column pruning: :func:`extract_spans` selects only
 ``doc_id, *passthrough, spans`` before the stage, so Catalyst prunes
@@ -27,6 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from xkit.doc import extract_doc
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
@@ -52,22 +56,17 @@ SPAN_STRUCT = T.StructType(
 )
 SPANS_TYPE = T.ArrayType(SPAN_STRUCT)
 
-_PA_SPAN = pa.struct(
-    [
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("offset", pa.int32()),
-    ]
-)
+_PA_SPAN = to_arrow_type(SPAN_STRUCT)
+_PA_SPANS = pa.list_(_PA_SPAN)
+# the default output spec: one spans column, the extract_spans layout
+_SPANS_OUT = (("spans", SPANS_TYPE),)
 
 
 def unpack_spans(batch: pa.RecordBatch, spans_idx: int):
     """Flat-column view of a batch's spans ListArray: returns
     ``(offs, kind_l, text_l, ref_l, off_l, nulls, n_rows)``. Handles
     the sliced-batch case (``lists.offset != 0`` — re-materialized so
-    ``.offsets`` indexes ``.values``) and the row-validity mask in ONE
-    place for every doc-level stage (extract, select, normalize)."""
+    ``.offsets`` indexes ``.values``) and the row-validity mask."""
     lists = batch.column(spans_idx)
     if lists.offset != 0:
         lists = pa.concat_arrays([lists])
@@ -83,63 +82,91 @@ def unpack_spans(batch: pa.RecordBatch, spans_idx: int):
     )
 
 
-def make_doc_stage_fn(doc_fn, n_passthrough: int):
+def _spans_array(values) -> pa.ListArray:
+    """One ``(k, t, m, o)`` parallel-list tuple (or None) per row → a
+    list<span> column, assembled as flat child arrays + list offsets."""
+    ok: list = []
+    ot: list = []
+    om: list = []
+    oo: list = []
+    # a None start offset marks the row's output list as NULL (pyarrow
+    # reads the row's end from the next non-null offset) — NULL input
+    # spans stay NULL, not []
+    list_offs: list = []
+    for v in values:
+        if v is None:
+            list_offs.append(None)
+            continue
+        list_offs.append(len(ok))
+        k, t, m, o = v
+        ok += k
+        ot += t
+        om += m
+        oo += o
+    list_offs.append(len(ok))
+    struct = pa.StructArray.from_arrays(
+        [
+            pa.array(ok, pa.string()),
+            pa.array(ot, pa.string()),
+            pa.array(om, pa.string()),
+            pa.array(oo, pa.int32()),
+        ],
+        fields=list(_PA_SPAN),
+    )
+    return pa.ListArray.from_arrays(pa.array(list_offs, pa.int32()), struct)
+
+
+def make_doc_stage_fn(doc_fn, n_passthrough: int, out: tuple = _SPANS_OUT):
     """Build an Arrow-batch mapper around any per-doc parallel-list
-    function ``doc_fn(kinds, texts, refs, offsets) -> (k, t, m, o)``
-    (extract_doc, selector.select_doc, ...).
+    function ``doc_fn(kinds, texts, refs, offsets)`` — THE kernel of
+    every per-document stage (extract, select, markdown, harvest, ...).
+
+    ``out`` lists the output columns as ``(name, Spark DataType)``
+    pairs; the default is one ``spans`` column. ``doc_fn`` returns one
+    value per output column (a tuple; with a one-column ``out``, the
+    value itself). A ``SPANS_TYPE`` value is a ``(k, t, m, o)``
+    parallel-list tuple, assembled flat; any other column is built by
+    ``pa.array`` with the Arrow type derived here, on the driver, from
+    the Spark type. A NULL spans row gives NULL in every output column.
 
     Expects batches with columns ``[doc_id, <n_passthrough cols>, spans]``
-    (enforced by :func:`run_doc_stage`'s select) and emits the same
-    layout with the function's output spans.
+    (enforced by :func:`run_doc_stage`'s select) and emits
+    ``[doc_id, <n_passthrough cols>, <out columns>]``.
     """
+    spans_idx = n_passthrough + 1
+    single = len(out) == 1
+    null_row = None if single else (None,) * len(out)
+    # None marks a spans column (flat assembly)
+    types = [None if dt == SPANS_TYPE else to_arrow_type(dt) for _, dt in out]
+    fields = [
+        pa.field(name, _PA_SPANS if t is None else t)
+        for (name, _), t in zip(out, types)
+    ]
 
-    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def doc_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            spans_idx = n_passthrough + 1
             offs, kind_l, text_l, ref_l, off_l, nulls, n_rows = unpack_spans(
                 batch, spans_idx
             )
-            ok: list = []
-            ot: list = []
-            om: list = []
-            oo: list = []
-            # a None start offset marks the row's output list as NULL
-            # (pyarrow reads the row's end from the next non-null
-            # offset) — NULL input spans stay NULL, not []
-            list_offs: list = []
+            rows: list = []
             for i in range(n_rows):
                 if nulls is None or nulls[i]:
-                    list_offs.append(len(ok))
                     s, e = offs[i], offs[i + 1]
-                    k, t, m, o = doc_fn(
-                        kind_l[s:e], text_l[s:e], ref_l[s:e], off_l[s:e]
+                    rows.append(
+                        doc_fn(kind_l[s:e], text_l[s:e], ref_l[s:e], off_l[s:e])
                     )
-                    ok += k
-                    ot += t
-                    om += m
-                    oo += o
                 else:
-                    list_offs.append(None)
-            list_offs.append(len(ok))
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(ok, pa.string()),
-                    pa.array(ot, pa.string()),
-                    pa.array(om, pa.string()),
-                    pa.array(oo, pa.int32()),
-                ],
-                fields=list(_PA_SPAN),
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(list_offs, pa.int32()), struct
-            )
-            cols = [batch.column(j) for j in range(spans_idx)] + [spans_out]
+                    rows.append(null_row)
+            columns = [rows] if single else (list(zip(*rows)) or [()] * len(out))
+            cols = [batch.column(j) for j in range(spans_idx)] + [
+                _spans_array(c) if t is None else pa.array(c, t)
+                for c, t in zip(columns, types)
+            ]
             yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(
-                [batch.schema.field(j) for j in range(spans_idx)]
-                + [pa.field("spans", pa.list_(_PA_SPAN))]
+                [batch.schema.field(j) for j in range(spans_idx)] + fields
             ))
 
-    return extract_batches
+    return doc_batches
 
 
 def make_extract_fn(options: ExtractOptions, n_passthrough: int):
@@ -152,16 +179,19 @@ def make_extract_fn(options: ExtractOptions, n_passthrough: int):
     return make_doc_stage_fn(doc_fn, n_passthrough)
 
 
-def run_doc_stage(df: DataFrame, batch_fn, passthrough: tuple) -> DataFrame:
+def run_doc_stage(
+    df: DataFrame, batch_fn, passthrough: tuple, out: tuple = _SPANS_OUT
+) -> DataFrame:
     """Prune to ``doc_id, *passthrough, spans`` (Catalyst pushes the
     column pruning into the scan) and run an Arrow-batch mapper built
-    by :func:`make_doc_stage_fn` over it."""
+    by :func:`make_doc_stage_fn` over it; ``out`` is the mapper's
+    output spec (the same one passed to :func:`make_doc_stage_fn`)."""
     pt = [c for c in passthrough if c in df.columns]
     pruned = df.select("doc_id", *pt, "spans")
     out_schema = T.StructType(
         [T.StructField("doc_id", T.StringType())]
         + [pruned.schema[c] for c in pt]
-        + [T.StructField("spans", SPANS_TYPE)]
+        + [T.StructField(name, dt) for name, dt in out]
     )
     return pruned.mapInArrow(batch_fn(len(pt)), out_schema)
 

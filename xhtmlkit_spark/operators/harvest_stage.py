@@ -28,12 +28,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from xhtmlkit_spark.operators.extract_stage import (
     make_doc_stage_fn,
     run_doc_stage,
 )
-from xkit.encoding import decode_html_bytes
+from xkit.doc import iter_spans
 from xkit.dom import repair
 from xkit.harvest import (
     harvest_links,
@@ -62,19 +63,9 @@ __all__ = [
 
 def _doc_events(kinds, texts, offsets, fragment):
     """Per-span repaired event streams of one document, offset order."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
-    for i in order:
-        if kinds[i] != "html":
-            continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
-        yield repair(tokenize(raw), fragment=fragment)
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind == "html" and raw is not None:
+            yield repair(tokenize(raw), fragment=fragment)
 
 
 def harvest_doc_tables(
@@ -345,6 +336,26 @@ def doc_links(
     )
 
 
+_META_OUT = (
+    ("title", T.StringType()),
+    ("lang", T.StringType()),
+    ("canonical", T.StringType()),
+    ("meta", T.MapType(T.StringType(), T.StringType())),
+)
+
+
+def _merge_meta(acc: list, events, base) -> None:
+    """First-wins merge of one html span's harvest_meta into ``acc`` =
+    ``[title, lang, canonical, meta_dict]`` (a doc's spans in offset
+    order, mirroring the in-page first-wins rule)."""
+    t, lg, cn, m = harvest_meta(events, base=base)
+    for j, v in enumerate((t, lg, cn)):
+        if acc[j] is None:
+            acc[j] = v
+    for k, v in m.items():
+        acc[3].setdefault(k, v)
+
+
 def page_meta(
     df: DataFrame,
     options: ExtractOptions = DEFAULT_OPTIONS,
@@ -356,85 +367,52 @@ def page_meta(
     and the <meta name/property → content> map. The ONE projection
     that reads head content (extraction/markdown drop it). A doc's
     html spans are scanned in offset order; the first span providing
-    each piece wins, mirroring the in-page first-wins rule. Own
-    mapInArrow (the outputs are typed scalars + a map column, not
-    span-shaped) — same pruned-scan plan as every per-doc stage."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import unpack_spans
-
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
+    each piece wins, mirroring the in-page first-wins rule. Typed
+    scalar + map columns out of the same doc-stage kernel."""
     base = options.base_url
     fragment = options.fragment
 
-    def doc_meta(kinds, texts, offsets):
-        title = lang = canonical = None
-        meta: dict = {}
+    def doc_fn(kinds, texts, refs, offsets):
+        acc = [None, None, None, {}]
         for events in _doc_events(kinds, texts, offsets, fragment):
-            t, lg, cn, m = harvest_meta(events, base=base)
-            title = title if title is not None else t
-            lang = lang if lang is not None else lg
-            canonical = canonical if canonical is not None else cn
-            for k, v in m.items():
-                if k not in meta:
-                    meta[k] = v
-        return title, lang, canonical, list(meta.items())
+            _merge_meta(acc, events, base)
+        return acc[0], acc[1], acc[2], list(acc[3].items())
 
-    def batches(it):
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            titles: list = []
-            langs: list = []
-            canons: list = []
-            metas: list = []
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    t, lg, cn, m = doc_meta(kind_l[s:e], text_l[s:e], off_l[s:e])
-                    titles.append(t)
-                    langs.append(lg)
-                    canons.append(cn)
-                    metas.append(m)
-                else:
-                    titles.append(None)
-                    langs.append(None)
-                    canons.append(None)
-                    metas.append(None)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(titles, pa.string()),
-                pa.array(langs, pa.string()),
-                pa.array(canons, pa.string()),
-                pa.array(metas, pa.map_(pa.string(), pa.string())),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [
-                        pa.field("title", pa.string()),
-                        pa.field("lang", pa.string()),
-                        pa.field("canonical", pa.string()),
-                        pa.field("meta", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [
-            T.StructField("title", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("canonical", T.StringType()),
-            T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        ]
+    return run_doc_stage(
+        df,
+        lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, _META_OUT),
+        passthrough,
+        _META_OUT,
     )
-    return pruned.mapInArrow(batches, out_schema)
+
+
+_ALL_OUT = (
+    (
+        "tables",
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("table_idx", T.IntegerType()),
+                    T.StructField("row_idx", T.IntegerType()),
+                    T.StructField("is_header", T.BooleanType()),
+                    T.StructField("cells", T.ArrayType(T.StringType())),
+                ]
+            )
+        ),
+    ),
+    (
+        "links",
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("link_idx", T.IntegerType()),
+                    T.StructField("url", T.StringType()),
+                    T.StructField("anchor_text", T.StringType()),
+                ]
+            )
+        ),
+    ),
+) + _META_OUT
 
 
 def harvest_all(
@@ -451,37 +429,13 @@ def harvest_all(
     projection's price instead of three (same fused-pass rationale as
     project_docs / select_multi). Explode the arrays downstream for
     the row-shaped twins of table_rows / doc_links."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import unpack_spans
-
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
     base = options.base_url
     fragment = options.fragment
 
-    pa_table = pa.struct(
-        [
-            pa.field("table_idx", pa.int32()),
-            pa.field("row_idx", pa.int32()),
-            pa.field("is_header", pa.bool_()),
-            pa.field("cells", pa.list_(pa.string())),
-        ]
-    )
-    pa_link = pa.struct(
-        [
-            pa.field("link_idx", pa.int32()),
-            pa.field("url", pa.string()),
-            pa.field("anchor_text", pa.string()),
-        ]
-    )
-
-    def doc_all(kinds, texts, offsets):
+    def doc_fn(kinds, texts, refs, offsets):
         tables: list = []
         links: list = []
-        title = lang = canonical = None
-        meta: dict = {}
+        acc = [None, None, None, {}]
         t_base = 0
         for events in _doc_events(kinds, texts, offsets, fragment):
             rows = harvest_tables(events)
@@ -500,89 +454,12 @@ def harvest_all(
                 links.append(
                     {"link_idx": len(links), "url": url, "anchor_text": text}
                 )
-            t, lg, cn, m = harvest_meta(events, base=base)
-            title = title if title is not None else t
-            lang = lang if lang is not None else lg
-            canonical = canonical if canonical is not None else cn
-            for k, v in m.items():
-                if k not in meta:
-                    meta[k] = v
-        return tables, links, title, lang, canonical, list(meta.items())
+            _merge_meta(acc, events, base)
+        return tables, links, acc[0], acc[1], acc[2], list(acc[3].items())
 
-    def batches(it):
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            cols_out = {k: [] for k in ("tables", "links", "title", "lang", "canonical", "meta")}
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    tb, lk, t, lg, cn, m = doc_all(
-                        kind_l[s:e], text_l[s:e], off_l[s:e]
-                    )
-                    vals = (tb, lk, t, lg, cn, m)
-                else:
-                    vals = (None, None, None, None, None, None)
-                for k, v in zip(cols_out, vals):
-                    cols_out[k].append(v)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(cols_out["tables"], pa.list_(pa_table)),
-                pa.array(cols_out["links"], pa.list_(pa_link)),
-                pa.array(cols_out["title"], pa.string()),
-                pa.array(cols_out["lang"], pa.string()),
-                pa.array(cols_out["canonical"], pa.string()),
-                pa.array(cols_out["meta"], pa.map_(pa.string(), pa.string())),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [
-                        pa.field("tables", pa.list_(pa_table)),
-                        pa.field("links", pa.list_(pa_link)),
-                        pa.field("title", pa.string()),
-                        pa.field("lang", pa.string()),
-                        pa.field("canonical", pa.string()),
-                        pa.field("meta", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [
-            T.StructField(
-                "tables",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("table_idx", T.IntegerType()),
-                            T.StructField("row_idx", T.IntegerType()),
-                            T.StructField("is_header", T.BooleanType()),
-                            T.StructField("cells", T.ArrayType(T.StringType())),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField(
-                "links",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("link_idx", T.IntegerType()),
-                            T.StructField("url", T.StringType()),
-                            T.StructField("anchor_text", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("title", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("canonical", T.StringType()),
-            T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        ]
+    return run_doc_stage(
+        df,
+        lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, _ALL_OUT),
+        passthrough,
+        _ALL_OUT,
     )
-    return pruned.mapInArrow(batches, out_schema)

@@ -4,11 +4,11 @@ The column most large-scale text pipelines materialize from crawled
 HTML is markdown: structure (headings/lists/tables/links) survives in
 a form both humans and tokenizers handle, while markup noise drops.
 This stage is the markdown twin of normalize_stage — same Arrow
-discipline (flat child arrays in, one string column out, zero per-row
-Python objects at the Spark boundary), same per-document span
-assembly, but rendering via :func:`xkit.markdown.to_markdown` over
-the repaired event stream (every tag-soup recovery rule A14–A17
-applies before rendering).
+kernel (``make_doc_stage_fn``: flat child arrays in, one string column
+out, zero per-row Python objects at the Spark boundary), same
+per-document span assembly, but rendering via
+:func:`xkit.markdown.to_markdown` over the repaired event stream
+(every tag-soup recovery rule A14–A17 applies before rendering).
 
 100 TB shape: identical to extract_spans — a 3-column pruned scan
 feeding one mapInArrow stage; no shuffle, no driver round-trip. Pair
@@ -17,18 +17,18 @@ with plans/pipeline.py's salted repartition for skewed doc sizes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from xkit.encoding import decode_html_bytes
-from xkit.markdown import to_markdown
+from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn, run_doc_stage
+from xkit.doc import iter_spans
 from xkit.dom import repair
+from xkit.markdown import to_markdown
 from xkit.tokenizer import tokenize
 
 __all__ = ["markdown_doc", "markdown_docs"]
+
+_OUT = (("markdown", T.StringType()),)
 
 
 def markdown_doc(
@@ -44,19 +44,10 @@ def markdown_doc(
     "had no HTML" signal in the column. Spans render independently and
     join with a blank line (block separation), mirroring
     normalize_doc's per-span concatenation."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     parts: list = []
-    for i in order:
-        if kinds[i] != "html":
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind != "html" or raw is None:
             continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
         md = to_markdown(
             repair(tokenize(raw), fragment=fragment), base=base, fragment=fragment
         )
@@ -72,42 +63,10 @@ def markdown_docs(
     base: str | None = None,
 ) -> DataFrame:
     """(doc_id, *passthrough, markdown) — markdown projection per doc."""
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
 
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from xhtmlkit_spark.operators.extract_stage import unpack_spans
+    def doc_fn(kinds, texts, refs, offsets):
+        return markdown_doc(kinds, texts, offsets, fragment, base)
 
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            out: list = []
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    out.append(
-                        markdown_doc(
-                            kind_l[s:e], text_l[s:e], off_l[s:e], fragment, base
-                        )
-                    )
-                else:
-                    out.append(None)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(out, pa.string())
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [pa.field("markdown", pa.string())]
-                ),
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [T.StructField("markdown", T.StringType())]
+    return run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, _OUT), passthrough, _OUT
     )
-    return pruned.mapInArrow(batches, out_schema)

@@ -9,8 +9,9 @@ stray-close handling, EOF recovery — xkit.dom.repair) and serialized
 to the canonical XHTML-ish form the serialization goldens freeze
 (xkit.dom.serialize), concatenated per document in span order.
 
-Same Arrow discipline as the other stages: flat child arrays in, one
-string column out, zero per-row Python objects at the boundary. The
+Same Arrow discipline as the other stages (the shared
+``make_doc_stage_fn`` kernel): flat child arrays in, one string column
+out, zero per-row Python objects at the boundary. The
 output is line-of-sight to the Spark SQL ``xpath_*`` functions for
 users who want XPath over the repaired tree (out of the hot path, as
 SURVEY A27 notes).
@@ -18,17 +19,17 @@ SURVEY A27 notes).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn, run_doc_stage
+from xkit.doc import iter_spans
 from xkit.dom import repair, serialize
-from xkit.encoding import decode_html_bytes
 from xkit.tokenizer import tokenize
 
 __all__ = ["normalize_doc", "normalize_xhtml"]
+
+_OUT = (("xhtml", T.StringType()),)
 
 
 def normalize_doc(
@@ -40,19 +41,10 @@ def normalize_doc(
     distinction survives the column. ``fragment`` turns off the
     full-page head auto-close rule for snippet corpora (A18/§3.3),
     mirroring ExtractOptions.fragment."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     parts: list = []
-    for i in order:
-        if kinds[i] != "html":
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind != "html" or raw is None:
             continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
         # xml_safe: this is the XML-emitting path, so A19 name
         # sanitization and comment legality apply (the goldens pin the
         # default serialize() form separately)
@@ -64,40 +56,10 @@ def normalize_xhtml(
     df: DataFrame, passthrough: tuple = ("part",), fragment: bool = False
 ) -> DataFrame:
     """(doc_id, *passthrough, xhtml) — repaired canonical XHTML per doc."""
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
 
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from xhtmlkit_spark.operators.extract_stage import unpack_spans
+    def doc_fn(kinds, texts, refs, offsets):
+        return normalize_doc(kinds, texts, offsets, fragment)
 
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            out: list = []
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    out.append(
-                        normalize_doc(kind_l[s:e], text_l[s:e], off_l[s:e], fragment)
-                    )
-                else:
-                    out.append(None)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(out, pa.string())
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [pa.field("xhtml", pa.string())]
-                ),
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [T.StructField("xhtml", T.StringType())]
+    return run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, _OUT), passthrough, _OUT
     )
-    return pruned.mapInArrow(batches, out_schema)

@@ -5,8 +5,8 @@ Running extract_spans then markdown_docs scans the corpus twice and
 tokenizes every document twice; tokenization dominates per-doc cost,
 so a pipeline materializing both views pays ~2× for one page. This
 stage shares one tokenize per document across all projections inside
-a single MapInArrow — same flat-Arrow discipline as the single
-stages (list offsets for spans, plain string columns for
+a single MapInArrow — the same ``make_doc_stage_fn`` kernel as the
+single stages (list offsets for spans, plain string columns for
 markdown/xhtml; zero per-row Python objects at the Spark boundary).
 
 100 TB shape: the flagship plan, unchanged — one column-pruned scan,
@@ -18,16 +18,13 @@ output view is zero.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from xhtmlkit_spark.operators.extract_stage import (
     SPANS_TYPE,
-    _PA_SPAN,
-    unpack_spans,
+    make_doc_stage_fn,
+    run_doc_stage,
 )
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.project import project_doc
@@ -46,78 +43,14 @@ def project_docs(
     every document from one shared parse. Column-for-column identical
     to extract_spans / markdown_docs / normalize_xhtml run separately
     (asserted by tests), at ~one parse instead of N."""
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            ok: list = []
-            ot: list = []
-            om: list = []
-            oo: list = []
-            list_offs: list = []
-            mds: list = []
-            xhs: list = []
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    list_offs.append(len(ok))
-                    s, e = offs[i], offs[i + 1]
-                    (k, t, m, o), md, xh = project_doc(
-                        kind_l[s:e],
-                        text_l[s:e],
-                        ref_l[s:e],
-                        off_l[s:e],
-                        options,
-                        want_xhtml,
-                    )
-                    ok += k
-                    ot += t
-                    om += m
-                    oo += o
-                    mds.append(md)
-                    xhs.append(xh)
-                else:  # NULL input spans stay NULL across every view
-                    list_offs.append(None)
-                    mds.append(None)
-                    xhs.append(None)
-            list_offs.append(len(ok))
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(ok, pa.string()),
-                    pa.array(ot, pa.string()),
-                    pa.array(om, pa.string()),
-                    pa.array(oo, pa.int32()),
-                ],
-                fields=list(_PA_SPAN),
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(list_offs, pa.int32()), struct
-            )
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                spans_out,
-                pa.array(mds, pa.string()),
-            ]
-            fields = [batch.schema.field(j) for j in range(spans_idx)] + [
-                pa.field("spans", pa.list_(_PA_SPAN)),
-                pa.field("markdown", pa.string()),
-            ]
-            if want_xhtml:
-                cols.append(pa.array(xhs, pa.string()))
-                fields.append(pa.field("xhtml", pa.string()))
-            yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
-
-    out_fields = (
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [
-            T.StructField("spans", SPANS_TYPE),
-            T.StructField("markdown", T.StringType()),
-        ]
-    )
+    out = (("spans", SPANS_TYPE), ("markdown", T.StringType()))
     if want_xhtml:
-        out_fields.append(T.StructField("xhtml", T.StringType()))
-    return pruned.mapInArrow(batches, T.StructType(out_fields))
+        out += (("xhtml", T.StringType()),)
+
+    def doc_fn(kinds, texts, refs, offsets):
+        spans, md, xh = project_doc(kinds, texts, refs, offsets, options, want_xhtml)
+        return (spans, md, xh) if want_xhtml else (spans, md)
+
+    return run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, out), passthrough, out
+    )

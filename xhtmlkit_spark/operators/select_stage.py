@@ -17,17 +17,12 @@ executor spins up), then shipped pre-parsed inside the closure.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 from xhtmlkit_spark.operators.extract_stage import (
     SPANS_TYPE,
-    _PA_SPAN,
     make_doc_stage_fn,
     run_doc_stage,
-    unpack_spans,
 )
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.selector import parse_selector, select_doc, select_doc_multi
@@ -133,8 +128,6 @@ def select_multi(
     (pruned scan → optional salt exchange → ONE MapInArrow) with a
     wider output row.
     """
-    import pyarrow as pa
-
     if not queries:
         raise ValueError("select_multi needs at least one query")
     pt = [c for c in passthrough if c in df.columns]
@@ -144,63 +137,13 @@ def select_multi(
         raise ValueError(
             f"query names must be identifiers not in {sorted(reserved)}: {bad}"
         )
-    names = list(queries)
-    parsed = [_parse_query_spec(n, queries[n]) for n in names]
-    n_pt = len(pt)
-    nq = len(names)
+    parsed = [_parse_query_spec(n, spec) for n, spec in queries.items()]
+    out = tuple((n, SPANS_TYPE) for n in queries)
 
-    def multi_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            spans_idx = n_pt + 1
-            offs, kind_l, text_l, ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            accs = [([], [], [], []) for _ in range(nq)]  # k, t, m, o flats
-            list_offs = [[] for _ in range(nq)]
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    per_q = select_doc_multi(
-                        kind_l[s:e], text_l[s:e], ref_l[s:e], off_l[s:e],
-                        parsed, options,
-                    )
-                    for q in range(nq):
-                        list_offs[q].append(len(accs[q][0]))
-                        k, t, m, o = per_q[q]
-                        accs[q][0].extend(k)
-                        accs[q][1].extend(t)
-                        accs[q][2].extend(m)
-                        accs[q][3].extend(o)
-                else:
-                    for q in range(nq):
-                        list_offs[q].append(None)  # NULL in → NULL out
-            cols = [batch.column(j) for j in range(n_pt + 1)]
-            fields = [batch.schema.field(j) for j in range(n_pt + 1)]
-            for q in range(nq):
-                list_offs[q].append(len(accs[q][0]))
-                struct = pa.StructArray.from_arrays(
-                    [
-                        pa.array(accs[q][0], pa.string()),
-                        pa.array(accs[q][1], pa.string()),
-                        pa.array(accs[q][2], pa.string()),
-                        pa.array(accs[q][3], pa.int32()),
-                    ],
-                    fields=list(_PA_SPAN),
-                )
-                cols.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(list_offs[q], pa.int32()), struct
-                    )
-                )
-                fields.append(pa.field(names[q], pa.list_(_PA_SPAN)))
-            yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
+    def doc_fn(kinds, texts, refs, offsets):
+        per_q = select_doc_multi(kinds, texts, refs, offsets, parsed, options)
+        return per_q if len(per_q) > 1 else per_q[0]
 
-    pruned = df.select("doc_id", *pt, "spans")
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [T.StructField(n, SPANS_TYPE) for n in names]
+    return run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, out), passthrough, out
     )
-    return pruned.mapInArrow(multi_batches, out_schema)

@@ -21,7 +21,25 @@ from xkit.extract import extract_html
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.pdfmini import extract_pdf_text
 
-__all__ = ["extract_doc"]
+__all__ = ["extract_doc", "iter_spans"]
+
+
+def iter_spans(kinds: list, texts: list, offsets: list):
+    """Yield ``(i, kind, text)`` for every input span in offset order —
+    NULL offsets after the real ones, stable by input position (the
+    schema allows them, and a None<int comparison would kill the whole
+    Arrow batch: A17 never-fail) — with html ``bytes`` decoded (the
+    encoding fixtures, A3–A4). ``i`` indexes the input lists."""
+    order = sorted(
+        range(len(kinds)),
+        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
+    )
+    for i in order:
+        kind = kinds[i]
+        text = texts[i]
+        if kind == "html" and isinstance(text, (bytes, bytearray)):
+            text = decode_html_bytes(bytes(text))
+        yield i, kind, text
 
 
 def extract_doc(
@@ -41,30 +59,18 @@ def extract_doc(
     Returns ``(kinds, texts, media_refs, offsets)`` of the output
     spans, offsets = 0..m-1.
     """
-    # null offsets sort after the real ones, stable by input position —
-    # the schema allows them and a None<int comparison would kill the
-    # whole Arrow batch (A17 never-fail)
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     ok: list = []
     ot: list = []
     om: list = []
-    for i in order:
-        kind = kinds[i]
+    for i, kind, raw in iter_spans(kinds, texts, offsets):
         if kind == "html":
-            raw = texts[i]
             if raw is None:
                 continue
-            if isinstance(raw, (bytes, bytearray)):  # encoding fixtures (A3–A4)
-                raw = decode_html_bytes(bytes(raw))
             for k, t, m in extract_html(raw, options):
                 ok.append(k)
                 ot.append(t)
                 om.append(m)
         elif kind == "pdf":
-            raw = texts[i]
             if raw is None:
                 continue
             for block in extract_pdf_text(raw, options.pdf_password):

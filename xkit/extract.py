@@ -1,13 +1,14 @@
 """Boilerplate strip + ordered span emission (SURVEY.md A22–A25).
 
-Single fused pass: the tag-soup repair rules (xkit.dom: implicit
-sibling closes, void/self-close units, stray-close handling, EOF
-recovery) are folded directly into the extraction consumer, so no
-intermediate event list is materialized per document — the Spark-side
-hot path runs this per document inside an Arrow batch. ``xkit.dom.
-repair`` remains the reference implementation of the repair rules
-(used by the serialization goldens); the fusion is behavior-identical
-and differentially fuzz-tested against the two-pass pipeline.
+:func:`extract_html` consumes the ``tokenize()`` token list with the
+tag-soup repair rules (xkit.dom: implicit sibling closes, void/self-
+close units, stray-close handling, EOF recovery) folded into the
+consumer, so no repaired event list is materialized per document —
+the Spark-side hot path runs it per document inside an Arrow batch.
+``xkit.dom.repair`` remains the reference implementation of the
+repair rules (used by the serialization goldens), which pin this
+consumer's behaviour. Callers that already tokenized a document
+(xkit.project) pass their token list in.
 
 Pipeline-spec heuristics (authoritative: BASELINE.json north_star
 "boilerplate-strip heuristics (script/style/comment removal,
@@ -41,14 +42,7 @@ from urllib.parse import urljoin
 from xkit.dom import CLOSED_BY, VOID_TAGS, _HEAD_ONLY
 from xkit.entities import decode_entities
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
-from xkit.tokenizer import (
-    RAWTEXT_TAGS,
-    RCDATA_TAGS,
-    _read_attrs,
-    _read_markup_decl,
-    _TAG_NAME_RE,
-    tokenize,
-)
+from xkit.tokenizer import tokenize
 
 __all__ = ["extract_html", "DROP_TAGS", "BLOCK_TAGS", "MEDIA_TAGS"]
 
@@ -77,27 +71,36 @@ def _collapse(s: str) -> str:
     return " ".join(s.split())
 
 
-def _extract_html_tokens(
-    html: str, options: ExtractOptions = DEFAULT_OPTIONS, _tokens: list | None = None
+def extract_html(
+    html: str, options: ExtractOptions = DEFAULT_OPTIONS, tokens: list | None = None
 ) -> list:
-    """Token-driven REFERENCE implementation of :func:`extract_html`.
+    """Extract ordered ``(kind, text, media_ref)`` spans from one HTML doc.
 
-    Consumes ``tokenize()`` output; kept as the readable spec of the
-    consumer semantics and as the differential-test twin of the fused
-    production path below (test_extract.py asserts equality on goldens
-    and fuzz input). Not on the single-projection hot path — but it IS
-    the extraction half of the fused multi-projection pass
-    (xkit.project), which passes its shared token list via ``_tokens``
-    (``html`` is then ignored; fusing the tokenizer into this consumer
-    was measured at only ~1.4%, so token-driven ≈ the fused path).
+    kind ∈ {"text", "media"}; text spans carry ``media_ref=None``,
+    media spans carry ``text=None``. ``tokens`` is ``tokenize(html)``
+    when the caller already has it (xkit.project shares one token list
+    across projections); otherwise the document is tokenized here.
     """
+    opt = options
+    # per-flush option lookups hoisted (67k flushes per MB-scale batch)
+    min_chars = opt.min_block_chars
+    min_density = opt.min_text_density
+    max_link = opt.max_link_density
+
+    # no-markup fast path: the whole doc is one text block (density
+    # denominator 1, link ratio 0 — same result the loop would produce)
+    if "<" not in html:
+        text = " ".join((decode_entities(html) if "&" in html else html).split())
+        if text and len(text) >= min_chars and len(text) >= min_density:
+            return [("text", text, None)]
+        return []
+
     out: list = []
     pieces: list = []  # raw text fragments of the in-progress block
     anchor_pieces: list = []  # fragments contributed inside <a>
     inline_tags = 0  # inline opens inside the block (density denominator)
     drop_depth = 0
     anchor_depth = 0
-    opt = options
     base = opt.base_url
     fragment = opt.fragment
     # fragment mode (A18/§3.3): a snippet has no document structure —
@@ -105,11 +108,6 @@ def _extract_html_tokens(
     # rule is off (see options.ExtractOptions.fragment)
     drop_tags = _FRAGMENT_DROP_TAGS if fragment else DROP_TAGS
     stack: list = []  # open-element stack (repair state, A14–A17)
-
-    # per-flush option lookups hoisted (67k flushes per MB-scale batch)
-    min_chars = opt.min_block_chars
-    min_density = opt.min_text_density
-    max_link = opt.max_link_density
 
     # Invariant relied on by every `if pieces: flush()` guard below:
     # inline_tags is only incremented and anchor_pieces only appended
@@ -148,7 +146,7 @@ def _extract_html_tokens(
         elif tag == "a" and anchor_depth > 0:
             anchor_depth -= 1
 
-    for tok in tokenize(html) if _tokens is None else _tokens:
+    for tok in tokenize(html) if tokens is None else tokens:
         k = tok[0]
         if k == "text":
             if drop_depth == 0:
@@ -223,253 +221,6 @@ def _extract_html_tokens(
                         break
             # else: stray close with no open match → dropped (A16)
         # comments / doctype dropped (A22/A9)
-    while stack:  # A17: EOF recovery
-        close_one(stack.pop())
-    if pieces:
-        flush()
-    return out
-
-
-_EMPTY_ATTRS: dict = {}  # shared read-only attrs for bare tags (never escapes)
-
-
-def extract_html(html: str, options: ExtractOptions = DEFAULT_OPTIONS) -> list:
-    """Extract ordered ``(kind, text, media_ref)`` spans from one HTML doc.
-
-    kind ∈ {"text", "media"}; text spans carry ``media_ref=None``,
-    media spans carry ``text=None``.
-
-    FUSED single pass: the tokenizer scan loop (xkit.tokenizer) and the
-    extraction consumer (:func:`_extract_html_tokens`, the reference
-    implementation of these semantics) are fused so no token tuples or
-    token list are materialized per document — at corpus volume the
-    ~dozens of tuple allocations + appends + re-dispatches per KB were
-    ~10% of extraction wall time. Behavior is pinned equal to the
-    token-driven reference by the goldens and a differential fuzz test.
-    Extra fused-only wins: text inside dropped subtrees skips entity
-    decoding entirely, and markup-free documents skip the scan loop.
-    """
-    opt = options
-    base = opt.base_url
-    fragment = opt.fragment
-    min_chars = opt.min_block_chars
-    min_density = opt.min_text_density
-    max_link = opt.max_link_density
-
-    s = html
-    # no-markup fast path: the whole doc is one text block (density
-    # denominator 1, link ratio 0 — same result the loop would produce)
-    if "<" not in s:
-        text = " ".join((decode_entities(s) if "&" in s else s).split())
-        if text and len(text) >= min_chars and len(text) >= min_density:
-            return [("text", text, None)]
-        return []
-
-    out: list = []
-    pieces: list = []
-    anchor_pieces: list = []
-    pieces_append = pieces.append
-    anchor_append = anchor_pieces.append
-    inline_tags = 0
-    drop_depth = 0
-    anchor_depth = 0
-    drop_tags = _FRAGMENT_DROP_TAGS if fragment else DROP_TAGS
-    stack: list = []
-
-    # Same invariant as the reference: inline_tags only increments and
-    # anchor_pieces only grows while pieces is non-empty. pieces /
-    # anchor_pieces are cleared IN PLACE so the hoisted append bindings
-    # stay valid.
-    def flush() -> None:
-        nonlocal inline_tags
-        text = " ".join("".join(pieces).split())
-        if text and len(text) >= min_chars:
-            chars = len(text)
-            density = chars / (1.0 + inline_tags)
-            link = (
-                len(" ".join("".join(anchor_pieces).split())) / chars
-                if anchor_pieces
-                else 0.0
-            )
-            if density >= min_density and link <= max_link:
-                out.append(("text", text, None))
-        pieces.clear()
-        anchor_pieces.clear()
-        inline_tags = 0
-
-    def close_one(tag: str) -> None:
-        nonlocal drop_depth, anchor_depth
-        if drop_depth > 0:
-            drop_depth -= 1
-            return
-        # BLOCK before MEDIA: closes are overwhelmingly block tags and
-        # the two sets are disjoint, so the reorder is behavior-free
-        if tag in BLOCK_TAGS:
-            if pieces:
-                flush()
-        elif tag in MEDIA_TAGS:
-            return
-        elif tag == "a" and anchor_depth > 0:
-            anchor_depth -= 1
-
-    n = len(s)
-    s_lower = None
-    i = 0
-    find = s.find
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            if drop_depth == 0:
-                t = s[i:]
-                t = decode_entities(t) if "&" in t else t
-                pieces_append(t)
-                if anchor_depth > 0:
-                    anchor_append(t)
-            break
-        if lt > i and drop_depth == 0:
-            t = s[i:lt]
-            t = decode_entities(t) if "&" in t else t
-            pieces_append(t)
-            if anchor_depth > 0:
-                anchor_append(t)
-        i = lt + 1
-        if i >= n:  # trailing lone '<' is literal text
-            if drop_depth == 0:
-                pieces_append("<")
-                if anchor_depth > 0:
-                    anchor_append("<")
-            break
-        c = s[i]
-        if c == "/":
-            m = _TAG_NAME_RE.match(s, i + 1)
-            if m is None:
-                # '</>' / '</ x>' → bogus comment, consumed (A9)
-                gt = find(">", i)
-                if gt < 0:
-                    break
-                i = gt + 1
-                continue
-            tag = m.group(0).lower()
-            gt = find(">", m.end())
-            # close action (A16): </br> and friends dropped; stray
-            # closes with no open match dropped; else pop through.
-            # Balanced fast path first: void tags are never pushed, so
-            # a stack-top match needs no void check or linear scan.
-            if stack and stack[-1] == tag:
-                stack.pop()
-                close_one(tag)
-            elif tag not in VOID_TAGS and tag in stack:
-                while True:
-                    top = stack.pop()
-                    close_one(top)
-                    if top == tag:
-                        break
-            if gt < 0:  # unterminated close tag: consumed to EOF (A17)
-                break
-            i = gt + 1
-        elif c == "!" or c == "?":
-            i, _tok = _read_markup_decl(s, lt)  # comment/doctype dropped
-        elif ("a" <= c <= "z") or ("A" <= c <= "Z"):
-            m = _TAG_NAME_RE.match(s, i)
-            tag = m.group(0).lower()
-            j = m.end()
-            if j < n and s[j] == ">":  # bare tag (majority case)
-                i, attrs, self_closing, terminated = j + 1, _EMPTY_ATTRS, False, True
-            else:
-                i, attrs, self_closing, terminated = _read_attrs(s, j)
-            # A15: implicit sibling closes, repeated on the stack top
-            while stack:
-                top = stack[-1]
-                if top == "head":
-                    if fragment or tag == "head" or tag in _HEAD_ONLY:
-                        break
-                else:
-                    cl = CLOSED_BY.get(top)
-                    if cl is None or tag not in cl:
-                        break
-                close_one(stack.pop())
-            is_unit = tag in VOID_TAGS or self_closing
-            if drop_depth > 0:
-                if not is_unit:
-                    drop_depth += 1
-                    stack.append(tag)
-            elif (
-                tag in drop_tags
-                or "hidden" in attrs
-                or attrs.get("aria-hidden") == "true"
-            ):
-                if pieces:
-                    flush()
-                if not is_unit:
-                    drop_depth = 1
-                    stack.append(tag)
-            elif tag in MEDIA_TAGS:
-                src = attrs.get("src", "")
-                if src:
-                    if pieces:
-                        flush()
-                    out.append(("media", None, urljoin(base, src) if base else src))
-                if not is_unit:
-                    stack.append(tag)
-                    if tag == "iframe":
-                        # iframe children are fallback-only, never rendered
-                        drop_depth = 1
-            elif tag in BLOCK_TAGS:
-                if pieces:
-                    flush()
-                if not is_unit:
-                    stack.append(tag)
-            else:
-                if tag == "a" and not is_unit:  # <a/> opens+closes: net zero
-                    anchor_depth += 1
-                if pieces:
-                    inline_tags += 1
-                if not is_unit:
-                    stack.append(tag)
-            if not terminated:  # EOF inside the tag (A17)
-                break
-            if not self_closing and (tag in RAWTEXT_TAGS or tag in RCDATA_TAGS):
-                # A13: raw scan to the matching '</tag' whose name ENDS
-                # there ('</scriptx>' is still script content)
-                if s_lower is None:
-                    s_lower = s.lower()
-                end = s_lower.find("</" + tag, i)
-                boundary = len(tag) + 2
-                while end >= 0:
-                    nxt = s_lower[end + boundary : end + boundary + 1]
-                    if nxt == "" or nxt in "\t\n\f\r />":
-                        break
-                    end = s_lower.find("</" + tag, end + 1)
-                if end < 0:
-                    raw = s[i:]
-                    if raw and drop_depth == 0:
-                        t = (
-                            raw
-                            if tag in RAWTEXT_TAGS
-                            else (decode_entities(raw) if "&" in raw else raw)
-                        )
-                        pieces_append(t)
-                        if anchor_depth > 0:
-                            anchor_append(t)
-                    break
-                raw = s[i:end]
-                if raw and drop_depth == 0:
-                    t = (
-                        raw
-                        if tag in RAWTEXT_TAGS
-                        else (decode_entities(raw) if "&" in raw else raw)
-                    )
-                    pieces_append(t)
-                    if anchor_depth > 0:
-                        anchor_append(t)
-                i = end  # close tag handled by the normal path next loop
-        else:
-            # A6: '<' followed by non-name char is literal text; the
-            # char after it joins the next text run (i not advanced)
-            if drop_depth == 0:
-                pieces_append("<")
-                if anchor_depth > 0:
-                    anchor_append("<")
     while stack:  # A17: EOF recovery
         close_one(stack.pop())
     if pieces:

@@ -10,11 +10,9 @@ per view; tokenization dominates per-doc cost, so the pipeline pays
 :func:`project_doc` shares one ``tokenize()`` per html span across
 all requested projections:
 
-* extraction spans — the token-driven consumer
-  (:func:`xkit.extract._extract_html_tokens`) fed the shared token
-  list; output is IDENTICAL to :func:`xkit.doc.extract_doc` (their
-  equality is differential-tested on goldens and fuzz, and asserted
-  again by the project tests)
+* extraction spans — :func:`xkit.extract.extract_html` fed the shared
+  token list; output is IDENTICAL to :func:`xkit.doc.extract_doc`
+  (the same extractor, asserted again by the project tests)
 * markdown — ``repair()`` folds the same tokens into the event
   stream once, rendered by :func:`xkit.markdown.to_markdown`;
   identical to ``markdown_stage.markdown_doc``
@@ -31,9 +29,9 @@ xhtmlkit_spark/operators/project_stage.py.
 
 from __future__ import annotations
 
+from xkit.doc import iter_spans
 from xkit.dom import repair, serialize
-from xkit.encoding import decode_html_bytes
-from xkit.extract import _extract_html_tokens
+from xkit.extract import extract_html
 from xkit.markdown import to_markdown
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.pdfmini import extract_pdf_text
@@ -54,10 +52,6 @@ def project_doc(
     xhtml)`` with a single tokenize per html span. ``xhtml`` is None
     unless ``want_xhtml``; markdown/xhtml are None (not "") for docs
     with no html content, matching the single-projection stages."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     ok: list = []
     ot: list = []
     om: list = []
@@ -65,16 +59,12 @@ def project_doc(
     xh_parts: list = []
     fragment = options.fragment
     base = options.base_url
-    for i in order:
-        kind = kinds[i]
+    for i, kind, raw in iter_spans(kinds, texts, offsets):
         if kind == "html":
-            raw = texts[i]
             if raw is None:
                 continue
-            if isinstance(raw, (bytes, bytearray)):
-                raw = decode_html_bytes(bytes(raw))
             toks = tokenize(raw)  # the ONE parse all projections share
-            for k, t, m in _extract_html_tokens(raw, options, _tokens=toks):
+            for k, t, m in extract_html(raw, options, toks):
                 ok.append(k)
                 ot.append(t)
                 om.append(m)
@@ -85,7 +75,6 @@ def project_doc(
             if want_xhtml:
                 xh_parts.append(serialize(events, xml_safe=True))
         elif kind == "pdf":
-            raw = texts[i]
             if raw is None:
                 continue
             for block in extract_pdf_text(raw, options.pdf_password):

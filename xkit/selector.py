@@ -1079,23 +1079,14 @@ def select_doc(
     (pdf/media spans have no DOM — skipped), re-deriving output offsets
     as 0..m-1. Same parallel-list contract, same Arrow-stage plumbing.
     """
-    from xkit.encoding import decode_html_bytes
+    from xkit.doc import iter_spans
 
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     ok: list = []
     ot: list = []
     om: list = []
-    for i in order:
-        if kinds[i] != "html":
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind != "html" or raw is None:
             continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
         for k, t, m in select_html(raw, selector, options, emit):
             ok.append(k)
             ot.append(t)
@@ -1120,22 +1111,13 @@ def select_doc_multi(
     at corpus scale the corpus is scanned and parsed ONCE for every
     query instead of once per query.
     """
-    from xkit.encoding import decode_html_bytes
+    from xkit.doc import iter_spans
 
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     outs = [([], [], []) for _ in parsed_queries]
     base = options.base_url
-    for i in order:
-        if kinds[i] != "html":
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind != "html" or raw is None:
             continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
         events = repair(tokenize(raw), fragment=options.fragment)
         for (groups, emit), (ok, ot, om) in zip(parsed_queries, outs):
             for k, t, m in select_events(events, groups, base, emit):
