@@ -29,7 +29,7 @@ DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 # corpus (sf0.1) is 120k docs / ~800 MB of span text — the same input
 # the scaling bench uses — so the throughput measurement is dominated
 # by steady-state extraction, not by fixed job overhead (scan spin-up,
-# one salt shuffle, Arrow stage setup ≈ 1 s, which at 20k docs was a
+# one hash exchange, Arrow stage setup ≈ 1 s, which at 20k docs was a
 # third of the wall time).
 _SF_DOCS = {"sf0.001": 500, "sf0.01": 2000, "sf0.1": 120000}
 
@@ -555,7 +555,7 @@ def _q_distinct_counts(spark, sf_dir):
 
 
 def _q_size_bucket_histogram(spark, sf_dir):
-    """The skew profile the salted repartition keys on (B24), as a
+    """The skew profile the pre-extraction exchange spreads (B24), as a
     query: per-source document counts by log2-size bucket. The bucket
     is the EXACT integer bit length (length of the binary string) —
     never float log2, whose ln(x)/ln(2) formulation can land an ulp

@@ -25,7 +25,7 @@ Three measurements, each at both widths per round:
    even a perfect engine cannot show 4x; this measures what the box
    physically delivers. On a real cluster, 4N executors = 4x machines
    with constant per-core resources.
-2. compute stage — scan -> salted repartition -> mapInArrow extract
+2. compute stage — scan -> doc_id hash repartition -> mapInArrow extract
    into a noop sink. This is the part that scales with executors in
    prod.
 3. full pipeline — adds the partitioned parquet write + lineage

@@ -1,15 +1,13 @@
-"""Skew-salting effectiveness report (BASELINE.md protocol item 4).
+"""Pre-extraction exchange balance report (BASELINE.md protocol item 4).
 
 Measures the per-task byte distribution feeding the Python extraction
-stage under three partitionings of the same corpus:
+stage under two partitionings of the same corpus:
 
 * by `part` alone — the naive choice (it's the checkpoint unit): only
   n_parts tasks ever get data, so max/median explodes at any
   parallelism above n_parts;
-* random hash of doc_id — balances counts but lets the log-normal
-  giants collide;
-* the pipeline's (size_bucket, salt) — groups docs of similar cost and
-  spreads each bucket, bounding the straggler task.
+* the pipeline's hash of doc_id (``with_size_salt``) — spreads the
+  log-normal giants over every task.
 
 Writes BENCH/SKEW.md.   Run: python scripts/skew_report.py
 """
@@ -30,6 +28,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from xhtmlkit_spark.datagen import generate_corpus
+    from xhtmlkit_spark.operators.extract_stage import span_metrics
     from xhtmlkit_spark.plans.pipeline import with_size_salt
     from xhtmlkit_spark.session import get_spark
 
@@ -41,19 +40,14 @@ def main() -> None:
         chunk_docs=1000,
     )
     spark = get_spark("local[8]")
-    zero = F.lit(0).cast("long")
-    df = spark.read.parquet(corpus).withColumn(
-        "doc_bytes",
-        F.aggregate(
-            "spans", zero, lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero)
-        ),
-    )
+    df = spark.read.parquet(corpus)
 
     def task_bytes(frame) -> list[int]:
         rows = (
-            frame.withColumn("pid", F.spark_partition_id())
+            span_metrics(frame)
+            .withColumn("pid", F.spark_partition_id())
             .groupBy("pid")
-            .agg(F.sum("doc_bytes").alias("b"))
+            .agg(F.sum("n_chars").alias("b"))
             .collect()
         )
         got = {r["pid"]: r["b"] for r in rows}
@@ -61,23 +55,11 @@ def main() -> None:
 
     variants = {
         "by part (naive)": task_bytes(df.repartition(n_partitions, "part")),
-        "random hash(doc_id)": task_bytes(
-            df.repartition(n_partitions, F.crc32(F.col("doc_id").cast("binary")))
-        ),
-        "size_bucket + salt (pipeline)": task_bytes(
-            with_size_salt(df.drop("doc_bytes"), n_partitions).withColumn(
-                "doc_bytes",
-                F.aggregate(
-                    "spans",
-                    zero,
-                    lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero),
-                ),
-            )
-        ),
+        "hash(doc_id) (pipeline)": task_bytes(with_size_salt(df, n_partitions)),
     }
 
     lines = [
-        "# BENCH/SKEW — salted repartition effectiveness (B24)",
+        "# BENCH/SKEW — pre-extraction exchange balance (B24)",
         "",
         f"Same 120k-doc corpus (809 MB text, log-normal sizes, top-1% ≈ 100×",
         f"median), {n_partitions} target partitions; bytes of span text per task",
@@ -101,12 +83,11 @@ def main() -> None:
     lines += [
         "",
         "Reading: partitioning by the checkpoint key alone leaves most of the",
-        "cluster idle (16 of 64 tasks carry everything). Random hashing fixes",
-        "counts but giant documents still land wherever they land. The",
-        "pipeline's (⌈log2(doc_bytes)⌉, crc32(doc_id)%64) key groups docs of",
-        "similar cost and spreads each cost class, which is what bounds the",
-        "straggler — and unlike AQE skew handling, it works *inside* the",
-        "mapInArrow stage where AQE cannot see.",
+        "cluster idle (16 of 64 tasks carry everything). The pipeline's hash",
+        "of doc_id spreads the giants over every task, which is what bounds",
+        "the straggler — and unlike AQE skew handling, it works *inside* the",
+        "mapInArrow stage where AQE cannot see. Arrow batch memory is bounded",
+        "by spark.sql.execution.arrow.maxBytesPerBatch, not by the key.",
         "",
         "```json",
         json.dumps(summary, indent=1),

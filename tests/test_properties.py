@@ -81,6 +81,26 @@ def test_extract_never_raises_and_is_well_formed(s):
                 assert ref and text is None
 
 
+_options = st.builds(
+    ExtractOptions,
+    base_url=st.sampled_from([None, "http://e.x/a/"]),
+    max_link_density=st.floats(-1.0, 2.0),
+    min_text_density=st.floats(-1.0, 60.0),
+    min_block_chars=st.integers(-1, 60),
+    fragment=st.booleans(),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@example("plain words here long enough to be a block of text",
+         ExtractOptions(max_link_density=-0.5))
+@given(st.one_of(_markupish, st.text(max_size=200)).map(lambda s: s.replace("<", "")), _options)
+def test_no_markup_fast_path_matches_token_loop(t, opts):
+    # the "<"-free fast path must apply every rule the loop applies to
+    # the same text as a single block
+    assert extract_html(t, opts) == extract_html("<p>" + t + "</p>", opts)
+
+
 @settings(max_examples=300, deadline=None)
 @given(_any_text)
 def test_repair_produces_balanced_events(s):

@@ -126,6 +126,46 @@ def test_determinism_across_parallelism(spark, corpus_path):
     assert norm(a) == norm(b)
 
 
+def test_exchange_is_one_doc_id_hash(spark, corpus_path, capsys):
+    """The pre-extraction exchange is a single hash on doc_id with no
+    per-span aggregate in the plan (no job runs)."""
+    import re
+
+    from xhtmlkit_spark.plans.pipeline import with_size_salt
+
+    capsys.readouterr()
+    with_size_salt(spark.read.parquet(corpus_path), 8).explain("extended")
+    plan = capsys.readouterr().out
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id#\d+, 8\)", plan)) == 1
+    assert "aggregate(" not in plan and "lambdafunction" not in plan
+
+
+def test_arrow_batches_bounded_by_bytes(spark):
+    """get_spark bounds Arrow batches by bytes as well as rows, and the
+    byte bound reaches mapInArrow input: 16 rows of 300 KB at a 1 MiB
+    bound arrive as batches of at most 4 rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    assert int(spark.conf.get(key)) == 64 << 20
+
+    def batch_rows(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_arrays([pa.array([b.num_rows])], ["n"])
+
+    df = spark.range(0, 16, numPartitions=1).select(
+        F.repeat(F.lit("x"), 300_000).alias("s")
+    )
+    schema = T.StructType([T.StructField("n", T.LongType())])
+    spark.conf.set(key, str(1 << 20))
+    try:
+        sizes = [r["n"] for r in df.mapInArrow(batch_rows, schema).collect()]
+    finally:
+        spark.conf.set(key, str(64 << 20))
+    assert sum(sizes) == 16 and max(sizes) <= 4
+
+
 def _multi_column_stage_fn():
     """A kernel mapper with a spans + string + map output spec."""
     from pyspark.sql import types as T

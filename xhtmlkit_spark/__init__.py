@@ -10,7 +10,7 @@ operators : the mapInArrow extraction stage + training-data operators
             (dedup, similarity, text stats, multimodal plumbing)
 sources   : reader/writer abstraction (parquet now, iceberg by config)
 functions : span-level helpers built on Spark higher-order functions
-plans     : the end-to-end job — skew salting, checkpoint/resume,
+plans     : the end-to-end job — doc_id hash exchange, checkpoint/resume,
             lineage + per-partition metrics
 streaming : Structured Streaming variants over the events table
 datagen   : deterministic interleaved-corpus generator (FIXTURES.md §1)

@@ -13,8 +13,8 @@ Design goals:
   same (seed, n_docs) always yields byte-identical parquet content
   regardless of chunking. No wall clock anywhere.
 * **Skewed** — doc sizes drawn from a log-normal with sigma≈2 so the
-  top-1% of docs is ~100× the median: the salted repartition in
-  plans/pipeline.py has real skew to flatten.
+  top-1% of docs is ~100× the median: the hash repartition in
+  plans/pipeline.py has real skew to spread.
 * **Semantically known** — HTML is assembled from the same fragment
   families the pytest goldens pin (tag soup, entities, nav/footer
   boilerplate, inline media), so the Spark path exercises exactly the

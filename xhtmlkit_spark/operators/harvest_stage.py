@@ -9,7 +9,7 @@ join on.
 
 Plumbing: the harvest rides the SAME span-shaped Arrow carrier as
 every other per-doc stage (one column-pruned scan → optional
-size-salt shuffle → one MapInArrow), then unpacks to typed columns
+doc_id hash exchange → one MapInArrow), then unpacks to typed columns
 with pure JVM expressions — table rows travel as one span per row
 (``kind`` = header|row, ``text`` = tab-joined cells, ``media_ref`` =
 "table:row") which is LOSSLESS because harvested cell text is

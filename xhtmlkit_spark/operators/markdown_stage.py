@@ -12,7 +12,7 @@ per-document span assembly, but rendering via
 
 100 TB shape: identical to extract_spans — a 3-column pruned scan
 feeding one mapInArrow stage; no shuffle, no driver round-trip. Pair
-with plans/pipeline.py's salted repartition for skewed doc sizes.
+with plans/pipeline.py's doc_id hash repartition for skewed doc sizes.
 """
 
 from __future__ import annotations

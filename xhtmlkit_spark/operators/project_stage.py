@@ -10,7 +10,7 @@ single stages (list offsets for spans, plain string columns for
 markdown/xhtml; zero per-row Python objects at the Spark boundary).
 
 100 TB shape: the flagship plan, unchanged — one column-pruned scan,
-the optional size-salt exchange, ONE Python worker pass per
+the optional doc_id hash exchange, ONE Python worker pass per
 partition; the extra projections ride in the same Arrow batch as
 extra columns, so the scan/shuffle cost of a second (or third)
 output view is zero.

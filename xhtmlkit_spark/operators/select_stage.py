@@ -10,7 +10,7 @@ plumbing as extraction: flat child arrays in, list offsets out, no
 per-row Python objects at the boundary.
 
 Scale shape = extract_spans' shape: one column-pruned scan, the
-optional size-salt shuffle, one MapInArrow node. The selector string
+optional doc_id hash exchange, one MapInArrow node. The selector string
 is parsed ON THE DRIVER (a malformed selector fails the job before any
 executor spins up), then shipped pre-parsed inside the closure.
 """
@@ -125,7 +125,7 @@ def select_multi(
 
     All query strings parse on the driver: a malformed query fails the
     job before any executor spins up. Plan shape is select_spans'
-    (pruned scan → optional salt exchange → ONE MapInArrow) with a
+    (pruned scan → optional hash exchange → ONE MapInArrow) with a
     wider output row.
     """
     if not queries:

@@ -1,16 +1,15 @@
 """The end-to-end extraction job (SURVEY.md §3.4, B24/B25/B9/B11).
 
-    scan → resume-filter → skew-salted repartition → mapInArrow extract
+    scan → resume-filter → hash repartition → mapInArrow extract
          → partition-atomic write → lineage manifest append
 
 Scale design (the part the judge grades — SURVEY.md §4.3):
 
 * **Skew**: doc sizes are log-normal (top-1% ≈ 100× median). AQE can
   split skewed *shuffle* partitions but cannot see inside the Python
-  stage, so we repartition on ``(size_bucket, salt)`` before it:
-  size_bucket = ⌈log2(doc_bytes)⌉ groups docs of similar cost, salt
-  spreads each bucket over the cluster. Max-task-bytes / median is
-  reported in the manifest to prove it stayed bounded.
+  stage, so we hash-repartition on ``doc_id`` before it, which spreads
+  the giants over the tasks; the session's Arrow byte bound keeps a
+  batch of giants from exhausting a Python worker.
 * **Resume**: the manifest records finished ``part`` values; a rerun
   anti-joins them away (broadcast — the manifest is tiny relative to
   the corpus) and dynamic partition overwrite guarantees re-writing a
@@ -43,41 +42,16 @@ def derive_part(df: DataFrame, n_parts: int = 16) -> DataFrame:
     )
 
 
-def with_size_salt(
-    df: DataFrame, num_partitions: int, salt_buckets: int = 256
-) -> DataFrame:
-    """Skew-salted repartition before the Python stage (B24).
+def with_size_salt(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Hash-repartition on ``doc_id`` before the Python stage (B24).
 
-    JVM-side only: doc_bytes via a higher-order aggregate over the
-    span array (no explode, no Python), bucket = ⌈log2(bytes)⌉,
-    salt = crc32(doc_id) % salt_buckets.
-
-    Measured tradeoff (BENCH/SKEW.md): plain random hashing balances
-    BYTES slightly better on a log-normal corpus, but the size-bucket
-    key additionally makes each task's documents cost-homogeneous —
-    which is what bounds the Python worker's per-Arrow-batch MEMORY
-    (a batch of `maxRecordsPerBatch` similar-sized docs has predictable
-    bytes; a random mix can stack several giants into one batch).
-    salt_buckets ≥ 4× num_partitions keeps (bucket, salt)-combo
-    collisions from re-introducing imbalance.
+    A plain hash balances task bytes better than a size-bucketed key on
+    a log-normal corpus (max/median 1.29 against 1.5, BENCH/SKEW.md)
+    and costs only the exchange. Arrow batch memory is bounded by
+    ``spark.sql.execution.arrow.maxBytesPerBatch`` (session.py), not by
+    the partitioning key.
     """
-    zero = F.lit(0).cast("long")
-    doc_bytes = F.aggregate(
-        F.col("spans"),
-        zero,
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero),
-    )
-    df = df.withColumn("doc_bytes", doc_bytes)
-    df = df.withColumn(
-        "size_bucket", F.ceil(F.log2(F.col("doc_bytes") + F.lit(2))).cast("int")
-    )
-    df = df.withColumn(
-        "salt",
-        F.pmod(F.crc32(F.col("doc_id").cast("binary")), F.lit(salt_buckets)).cast("int"),
-    )
-    return df.repartition(num_partitions, "size_bucket", "salt").drop(
-        "doc_bytes", "size_bucket", "salt"
-    )
+    return df.repartition(num_partitions, "doc_id")
 
 
 def run_pipeline(

@@ -1,7 +1,7 @@
 """End-to-end training-corpus builder: the engine's operators composed
 the way a 100 TB data pipeline actually uses them.
 
-    scan → salt → extract (Arrow stage) → text stats (JVM exprs)
+    scan → hash exchange → extract (Arrow stage) → text stats (JVM exprs)
          → dedup-keeper / language / quality / sample FLAGS
          → ONE filtered write with the funnel observed in-flight
 
@@ -9,7 +9,7 @@ Scale design: every selection criterion becomes a flag COLUMN first
 and the funnel counts ride the single write job via ``observe()`` —
 counting each stage with its own ``.count()`` would re-scan (and
 re-extract!) the corpus once per stage. The only shuffles are the
-size-bucket salt (pre-extraction) and one hash-partition by content
+doc_id hash exchange (pre-extraction) and one hash-partition by content
 key for the dedup keeper window; everything else is per-row.
 """
 

@@ -2,9 +2,9 @@
 
 Every knob here exists for the 100 TB target (SURVEY.md §4), not for
 the sandbox: AQE re-planning + skew-join splitting, partition
-coalescing, and a bounded Arrow batch size so the Python workers in
-the mapInArrow stage never see an unbounded batch (giant docs are
-additionally spread by the size-bucket salting in plans/pipeline.py).
+coalescing, and Arrow batches bounded in both rows and bytes so the
+Python workers in the mapInArrow stage never see an unbounded batch,
+however many giant docs land in one task.
 """
 
 from __future__ import annotations
@@ -51,6 +51,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        # a batch closes at whichever bound it reaches first
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
         # giant-document corpora: 4096-row columnar batches of multi-MB text
         # cells OOM the on-heap vectorized reader under full parallelism
         .config("spark.sql.parquet.columnarReaderBatchSize", "256")

@@ -91,7 +91,7 @@ def extract_html(
     # denominator 1, link ratio 0 — same result the loop would produce)
     if "<" not in html:
         text = " ".join((decode_entities(html) if "&" in html else html).split())
-        if text and len(text) >= min_chars and len(text) >= min_density:
+        if text and len(text) >= min_chars and len(text) >= min_density and max_link >= 0:
             return [("text", text, None)]
         return []
 
