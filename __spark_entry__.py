@@ -1034,7 +1034,7 @@ def _q_sitemap_urls(spark, sf_dir):
         ),
         F.lit("</sitemapindex>"),
     )
-    # the span carrier's doc_id is string-typed (corpus convention);
+    # the doc stage's doc_id is string-typed (corpus convention);
     # cast through it and back so the oracle's BIGINT doc_id compares
     d = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),

@@ -24,7 +24,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from xkit.doc import extract_doc  # noqa: E402
 from xkit.options import ExtractOptions  # noqa: E402
-from xkit.pdfmini import make_fixture_pdf, make_fixture_pdf_two_fonts  # noqa: E402
+from tests.pdf_fixtures import make_fixture_pdf_two_fonts  # noqa: E402
+from xkit.pdfmini import make_fixture_pdf  # noqa: E402
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "..", "tests", "golden")
 
@@ -97,7 +98,7 @@ PDF_TOUNICODE_CHAINED = make_fixture_pdf(
 # PDF 1.5 layouts: xref STREAM (PNG-Up predictor + flate) with the
 # page tree packed in an ObjStm (type-2 entries); and the bare
 # variants (no container, raw rows)
-from xkit.pdfmini import make_fixture_pdf_15  # noqa: E402
+from tests.pdf_fixtures import make_fixture_pdf_15  # noqa: E402
 
 PDF15_OBJSTM = make_fixture_pdf_15(
     [["XRef stream line one", "and line two"], ["second block"]]
@@ -113,7 +114,7 @@ PDF15_MULTIPAGE = make_fixture_pdf_15(
 # RC4 standard-security encryption (empty user password): /R 2 40-bit
 # and /R 3 128-bit, plus Flate-under-RC4 (decrypt BEFORE inflate) and
 # the locked (/U mismatch) document degrading to no spans
-from xkit.pdfmini import make_fixture_pdf_encrypted  # noqa: E402
+from tests.pdf_fixtures import make_fixture_pdf_encrypted  # noqa: E402
 
 PDF_ENC_R2 = make_fixture_pdf_encrypted(
     [["Forty bit rc4 secret", "second line"]], r=2
@@ -168,7 +169,7 @@ PDF_ENC_AES_LOCKED = make_fixture_pdf_encrypted(
 # must force 2-byte CID codes regardless; literal (…) strings carry
 # the same CID pairs as hex strings; a CID font with NO ToUnicode must
 # degrade to no text (glyph ids, never latin-1 mojibake).
-from xkit.pdfmini import make_fixture_pdf_cid  # noqa: E402
+from tests.pdf_fixtures import make_fixture_pdf_cid  # noqa: E402
 
 PDF_CID_TOUNICODE = make_fixture_pdf_cid(
     "नमस्ते दुनिया", tounicode=True, sloppy_codespace=True

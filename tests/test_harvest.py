@@ -78,7 +78,7 @@ def test_tables_none_without_table():
 
 
 def test_tables_cell_text_has_no_tabs_or_newlines():
-    # the Spark carrier tab-joins cells; A25 collapse guarantees safety
+    # A25 collapse: harvested cell text is one line of single spaces
     got = harvest_tables(_ev("<table><tr><td>a\tb\nc</td></tr></table>"))
     assert got == [(0, 0, False, ["a b c"])]
 

@@ -1,6 +1,12 @@
 """PDF fixture-dialect tests (SURVEY.md A26, FIXTURES.md §6)."""
 import pytest
 
+from tests.pdf_fixtures import (
+    make_fixture_pdf_15,
+    make_fixture_pdf_cid,
+    make_fixture_pdf_encrypted,
+    make_fixture_pdf_two_fonts,
+)
 from xkit.pdfmini import extract_pdf_text, make_fixture_pdf
 
 
@@ -281,8 +287,6 @@ def test_fallback_scan_ignores_cmap_keeps_latin1_hex():
 
 
 def test_xref_stream_objstm_roundtrip():
-    from xkit.pdfmini import make_fixture_pdf_15
-
     p = make_fixture_pdf_15(
         [["XRef stream line one", "and line two"], ["second block"]]
     )
@@ -293,8 +297,6 @@ def test_xref_stream_objstm_roundtrip():
 
 
 def test_xref_stream_variants():
-    from xkit.pdfmini import make_fixture_pdf_15
-
     for use_objstm in (False, True):
         for predictor in (1, 12):
             for compress in (False, True):
@@ -310,8 +312,6 @@ def test_xref_stream_variants():
 
 
 def test_xref_stream_multipage_document_order():
-    from xkit.pdfmini import make_fixture_pdf_15
-
     p = make_fixture_pdf_15(pages=[[["page one txt"]], [["page two txt"]]])
     assert extract_pdf_text(p) == ["page one txt", "page two txt"]
 
@@ -319,7 +319,6 @@ def test_xref_stream_multipage_document_order():
 def test_corrupt_xref_stream_falls_back():
     import re
 
-    from xkit.pdfmini import make_fixture_pdf_15
 
     p = make_fixture_pdf_15([["fallback body text"]], compress=False, predictor=1)
     broken = re.sub(r"/Type /XRef", "/Type /Junk", p)
@@ -387,8 +386,6 @@ class TestEncryption:
         assert _rc4(b"Key", out) == b"Plaintext"  # symmetric
 
     def test_r2_and_r3_roundtrip(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         for r in (2, 3):
             pdf = make_fixture_pdf_encrypted(
                 [["Alpha secret line", "beta line"], ["gamma block"]], r=r
@@ -401,20 +398,14 @@ class TestEncryption:
             assert "Alpha secret" not in pdf
 
     def test_flate_under_rc4(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted([["compressed secret words"]], compress=True)
         assert extract_pdf_text(pdf) == ["compressed secret words"]
 
     def test_user_locked_degrades_empty(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted([["hidden"]], corrupt_u=True, compress=True)
         assert extract_pdf_text(pdf) == []
 
     def test_corrupt_encrypt_dict_never_raises(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted([["x y z words"]], r=3)
         # truncate /O, strip /ID, nonsense /V — each must degrade, not raise
         for mangled in (
@@ -426,8 +417,6 @@ class TestEncryption:
             assert isinstance(extract_pdf_text(mangled), list)
 
     def test_owner_password_variation_changes_o_not_text(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         a = make_fixture_pdf_encrypted([["same text"]], owner_pwd=b"one")
         b = make_fixture_pdf_encrypted([["same text"]], owner_pwd=b"two")
         assert a != b  # /O differs -> file key differs -> ciphertext differs
@@ -445,8 +434,6 @@ class TestEncryption:
         assert decrypt_block(_expand_key(bytes(range(32))), ct256) == pt
 
     def test_aesv2_v4_roundtrip(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted(
             [["Aes one twenty eight", "cbc line"], ["second block"]], r=4
         )
@@ -461,8 +448,6 @@ class TestEncryption:
         assert extract_pdf_text(locked) == []
 
     def test_aes256_r5_r6_roundtrip(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         for r in (5, 6):
             pdf = make_fixture_pdf_encrypted([["Aes two fifty six text"]], r=r)
             assert extract_pdf_text(pdf) == ["Aes two fifty six text"]
@@ -481,8 +466,6 @@ class TestEncryption:
         assert a != _hash_2b(b"pw", bytes(8))  # password-sensitive
 
     def test_encrypt_metadata_false_key_variant(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted(
             [["metadata not encrypted here"]], r=4, encrypt_metadata=False
         )
@@ -513,8 +496,6 @@ class TestEncryption:
         assert _decode_stream(obj) == plain
 
     def test_aes_corrupt_ciphertext_degrades(self):
-        from xkit.pdfmini import extract_pdf_text, make_fixture_pdf_encrypted
-
         pdf = make_fixture_pdf_encrypted([["will be mangled"]], r=4)
         # shrink the stream body by one byte: CBC misalignment must skip
         # the stream (possibly salvaging nothing), never raise
@@ -532,7 +513,6 @@ def test_two_fonts_per_tf_tracking():
     """Per-Tf font tracking (round 4): /F1 and /F2 map the SAME codes
     to different characters — each block decodes through the ACTIVE
     font's map, including a mid-BT switch."""
-    from xkit.pdfmini import make_fixture_pdf_two_fonts
 
     pdf = make_fixture_pdf_two_fonts(f1_text="Alpha", f2_text="Omega")
     assert extract_pdf_text(pdf) == ["Alpha", "Omega", "Alpha Omega"]
@@ -541,7 +521,6 @@ def test_two_fonts_per_tf_tracking():
 def test_two_fonts_pre_tf_uses_union_default():
     """Text shown before any Tf decodes through the page-union default
     (later fonts win conflicting codes — frozen dialect)."""
-    from xkit.pdfmini import make_fixture_pdf_two_fonts
 
     pdf = make_fixture_pdf_two_fonts(f1_text="AB", f2_text="xy",
                                      mixed=False, pre_tf=True)
@@ -551,8 +530,6 @@ def test_two_fonts_pre_tf_uses_union_default():
 
 
 def test_two_fonts_unknown_tf_name_falls_back_to_union():
-    from xkit.pdfmini import make_fixture_pdf_two_fonts
-
     pdf = make_fixture_pdf_two_fonts(f1_text="AB", f2_text="xy", mixed=False)
     patched = pdf.replace("/F1 12 Tf", "/F9 12 Tf")
     # /F9 is not in the font table: its block takes the union default
@@ -562,7 +539,6 @@ def test_two_fonts_unknown_tf_name_falls_back_to_union():
 def test_two_fonts_hex_escaped_name_matches():
     """#xx hex escapes in the Tf operand normalize against the /Font
     dict key (PDF name rule)."""
-    from xkit.pdfmini import make_fixture_pdf_two_fonts
 
     pdf = make_fixture_pdf_two_fonts(f1_text="AB", f2_text="xy", mixed=False)
     # escape the '1' (0x31): /F#31 == /F1. The two edits are
@@ -580,7 +556,6 @@ def test_cid_identity_h_sloppy_codespace_forces_two_bytes():
     """Type0/Identity-H codes are 2-byte CIDs even when the ToUnicode
     codespacerange lies (1-byte <00> <FF> — the real-writer sloppiness);
     the honest codespace must decode identically."""
-    from xkit.pdfmini import make_fixture_pdf_cid
 
     sloppy = make_fixture_pdf_cid("नमस्ते", sloppy_codespace=True)
     honest = make_fixture_pdf_cid("नमस्ते", sloppy_codespace=False)
@@ -592,7 +567,6 @@ def test_cid_literal_and_hex_strings_share_decode():
     """A literal (…) string under an Identity-H font carries the same
     2-byte CID codes as a hex string — including codes whose bytes are
     the string delimiters ( ) \\ (escape round-trip)."""
-    from xkit.pdfmini import make_fixture_pdf_cid
 
     pdf = make_fixture_pdf_cid("mixed forms", literal=True, cid_base=0x0200)
     assert extract_pdf_text(pdf) == ["mixed forms"]
@@ -608,7 +582,6 @@ def test_cid_literal_and_hex_strings_share_decode():
 def test_cid_without_tounicode_degrades_to_no_text():
     """Identity-H with no usable ToUnicode: the codes are glyph ids —
     the page yields NO text (never latin-1 mojibake from CID bytes)."""
-    from xkit.pdfmini import make_fixture_pdf_cid
 
     assert extract_pdf_text(make_fixture_pdf_cid("नमस्ते", tounicode=False)) == []
     # corrupting the ToUnicode stream away degrades the same way
@@ -620,7 +593,6 @@ def test_cid_without_tounicode_degrades_to_no_text():
 def test_cid_descendant_font_has_no_cidtogidmap():
     """The fixture's CIDFontType2 carries no /CIDToGIDMap — extraction
     never needs it (it maps CID→glyph for rendering)."""
-    from xkit.pdfmini import make_fixture_pdf_cid
 
     assert "/CIDToGIDMap" not in make_fixture_pdf_cid("ab")
 
@@ -630,7 +602,6 @@ def test_cid_predefined_cmap_without_tounicode_suppresses():
     ToUnicode must suppress like the Identity case — any composite
     font this reader cannot map yields no text, never mojibake
     (review finding r05)."""
-    from xkit.pdfmini import make_fixture_pdf_cid
 
     pdf = make_fixture_pdf_cid("нет карты", tounicode=False)
     patched = pdf.replace("/Encoding /Identity-H", "/Encoding /UniGB-UCS2-H")
@@ -650,7 +621,6 @@ def test_user_password_matrix(r):
     the user password and the OWNER password both open the document
     (user path: direct key derivation; owner path: algorithm 7 /O
     unwrap for R 2-4, /O + /OE validation for R 5-6)."""
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     pdf = make_fixture_pdf_encrypted(
         [["protected text"]], r=r, user_pwd=b"s3cret", owner_pwd=b"boss"
@@ -668,7 +638,6 @@ def test_empty_user_password_still_opens_with_any_password(r):
     what password the caller supplies (the reader falls through
     user -> owner -> empty, like real viewers), and the owner password
     opens it through the owner path too."""
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     pdf = make_fixture_pdf_encrypted([["open text"]], r=r, owner_pwd=b"boss")
     assert extract_pdf_text(pdf) == ["open text"]
@@ -680,7 +649,6 @@ def test_password_with_flate_and_encrypt_metadata_false():
     """Password-derived keys compose with the other /Encrypt knobs:
     Flate-under-RC4 (decrypt before inflate) and /EncryptMetadata
     false (key derivation step f)."""
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     pdf = make_fixture_pdf_encrypted(
         [["zipped"]], r=3, user_pwd=b"pw", compress=True
@@ -697,7 +665,6 @@ def test_corrupt_u_locked_even_with_owner_password():
     """corrupt_u flips /U AFTER the owner hash was computed over the
     original bytes — R6 owner validation covers /U, so the document is
     unopenable by design (degrades, never raises)."""
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     pdf = make_fixture_pdf_encrypted([["x"]], r=6, corrupt_u=True)
     assert extract_pdf_text(pdf) == []
@@ -710,7 +677,6 @@ def test_pdf_password_threads_through_extract_doc():
     protected documents next to plain HTML rows."""
     from xkit.doc import extract_doc
     from xkit.options import ExtractOptions
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     pdf = make_fixture_pdf_encrypted([["inside pdf"]], r=3, user_pwd=b"kw")
     kinds, texts, media = ["html", "pdf"], ["<p>plain</p>", pdf], [None, None]
@@ -727,7 +693,6 @@ def test_password_length_caps_match_spec():
     passwords sharing their first 32 bytes are equivalent); R6 caps at
     127 bytes (ISO 32000-2) — the extractor and the fixture generator
     truncate identically."""
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     long_pwd = b"A" * 40
     pdf = make_fixture_pdf_encrypted([["padded"]], r=3, user_pwd=long_pwd)
@@ -751,7 +716,6 @@ def test_password_fuzz_random_bytes():
     password-byte edge cases."""
     import random
 
-    from xkit.pdfmini import make_fixture_pdf_encrypted
 
     rnd = random.Random(420)
     for trial in range(12):

@@ -332,15 +332,10 @@ def test_harvest_stages_match_pure_python(spark, corpus_path):
             [s["media_ref"] for s in sp],
             [s["offset"] for s in sp],
         )
-        ok, ot, om, _ = harvest_doc_tables(*args)
-        expect_t = [
-            (int(m.split(":")[0]), int(m.split(":")[1]), k == "header", t.split("\t"))
-            for k, t, m in zip(ok, ot, om)
-        ]
+        expect_t = harvest_doc_tables(*args)
         assert sorted(got_tables.get(rec["doc_id"], [])) == sorted(expect_t)
         n_table_rows += len(expect_t)
-        ok, ot, om, _ = harvest_doc_links(*args)
-        expect_l = [(i, om[i], ot[i]) for i in range(len(ok))]
+        expect_l = harvest_doc_links(*args)
         assert sorted(got_links.get(rec["doc_id"], [])) == sorted(expect_l)
         n_links += len(expect_l)
     # the synthetic corpus genuinely exercises both projections
@@ -364,19 +359,104 @@ def test_media_refs_stage_matches_pure_python(spark, corpus_path):
     n = 0
     for rec in pq.read_table(corpus_path).to_pylist():
         sp = rec["spans"]
-        ok, ot, om, _ = harvest_doc_media(
+        expect = harvest_doc_media(
             [s["kind"] for s in sp],
             [s["text"] for s in sp],
             [s["media_ref"] for s in sp],
             [s["offset"] for s in sp],
         )
-        expect = [
-            (i, om[i], ok[i], ot[i].split("\t")[0], ot[i].split("\t")[1])
-            for i in range(len(ok))
-        ]
         assert sorted(got.get(rec["doc_id"], [])) == sorted(expect)
         n += len(expect)
     assert n > 50  # the corpus genuinely carries media markup
+
+
+def test_sitemap_feed_entries_match_pure_python(spark):
+    """sitemap_entries / feed_entries ≡ harvest_sitemap / harvest_feed
+    over the same text, entry_idx in document order; a NULL text row
+    yields no rows."""
+    from xhtmlkit_spark.operators.harvest_stage import feed_entries, sitemap_entries
+    from xkit.dom import repair
+    from xkit.harvest import harvest_feed, harvest_sitemap
+    from xkit.tokenizer import tokenize
+
+    sitemaps = {
+        "d1": "<urlset><url><loc>http://a.example/p?x=1&amp;y=2</loc>"
+        "<lastmod></lastmod></url><url><loc>http://a.example/q</loc>"
+        "<lastmod>2024-01-02</lastmod></url><url><lastmod>2024</lastmod>"
+        "</url></urlset>",
+        "d2": "<sitemapindex><sitemap><loc>http://a.example/s.xml</loc>"
+        "</sitemap></sitemapindex>",
+        "d_null": None,
+    }
+    feeds = {
+        "d1": "<rss><channel><title>Chan</title><item><title>One &amp; "
+        "two</title><link>http://b.example/1</link><pubDate>Mon, 01 Jan "
+        "2024</pubDate></item><item><title></title><link>http://b.example/2"
+        "</link></item></channel></rss>",
+        "d2": "<feed><entry><title>A</title><link href='http://c.example/"
+        "a?x=1&amp;y=2'/><updated>2024-02-02</updated></entry></feed>",
+        "d_null": None,
+    }
+    df = spark.createDataFrame(
+        [(d, sitemaps[d], feeds[d]) for d in sitemaps],
+        "doc_id string, sitemap_xml string, feed_xml string",
+    )
+
+    def expect(texts, harvest):
+        out = []
+        for did, text in texts.items():
+            if text is not None:
+                events = repair(tokenize(text))
+                out += [(did, i, *e) for i, e in enumerate(harvest(events))]
+        return sorted(out)
+
+    got_s = sorted(tuple(r) for r in sitemap_entries(df).collect())
+    assert got_s == expect(sitemaps, harvest_sitemap)
+    assert ("d1", 0, "http://a.example/p?x=1&y=2", "", False) in got_s
+    assert len(got_s) == 3
+    got_f = sorted(tuple(r) for r in feed_entries(df).collect())
+    assert got_f == expect(feeds, harvest_feed)
+    assert ("d1", 1, "rss", None, "http://b.example/2", None) in got_f
+    assert len(got_f) == 3
+
+
+def test_harvest_row_projection_schemas(spark, corpus_path):
+    """The five row projections keep their column names and types."""
+    from xhtmlkit_spark.operators.harvest_stage import (
+        doc_links,
+        feed_entries,
+        media_refs,
+        sitemap_entries,
+        table_rows,
+    )
+
+    df = spark.read.parquet(corpus_path)
+    text = spark.createDataFrame([], "doc_id string, sitemap_xml string, feed_xml string")
+    pt = [("doc_id", "string"), ("part", "int")]
+    expect = {
+        "table_rows": pt + [("table_idx", "int"), ("row_idx", "int"),
+                            ("is_header", "boolean"), ("cells", "array<string>")],
+        "doc_links": pt + [("link_idx", "int"), ("url", "string"),
+                           ("anchor_text", "string")],
+        "media_refs": pt + [("media_idx", "int"), ("url", "string"),
+                            ("media_kind", "string"), ("tag", "string"),
+                            ("attr", "string")],
+        "sitemap_entries": [("doc_id", "string"), ("entry_idx", "int"),
+                            ("loc", "string"), ("lastmod", "string"),
+                            ("is_index", "boolean")],
+        "feed_entries": [("doc_id", "string"), ("entry_idx", "int"),
+                         ("feed_type", "string"), ("title", "string"),
+                         ("url", "string"), ("published", "string")],
+    }
+    got = {
+        "table_rows": table_rows(df),
+        "doc_links": doc_links(df),
+        "media_refs": media_refs(df),
+        "sitemap_entries": sitemap_entries(text),
+        "feed_entries": feed_entries(text),
+    }
+    for name, out in got.items():
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == expect[name], name
 
 
 def test_project_docs_matches_single_stages(spark, corpus_path):
@@ -488,6 +568,7 @@ def test_new_stages_survive_null_spans_rows(spark):
     from xhtmlkit_spark.operators.harvest_stage import (
         doc_links,
         harvest_all,
+        media_refs,
         page_meta,
         table_rows,
     )
@@ -499,7 +580,7 @@ def test_new_stages_survive_null_spans_rows(spark):
     span = Row("kind", "text", "media_ref", "offset")
     rows = [
         ("ok", [span("html", "<title>T</title><table><tr><td>c</td></tr>"
-                     "</table><a href='u'>l</a>", None, 0)], 0),
+                     "</table><a href='u'>l</a><img src='m.png'>", None, 0)], 0),
         ("null_spans", None, 0),
         ("null_text", [span("html", None, None, 0)], 0),
         ("empty_spans", [], 0),
@@ -520,6 +601,8 @@ def test_new_stages_survive_null_spans_rows(spark):
     assert {r["doc_id"] for r in tr} == {"ok"} and tr[0]["cells"] == ["c"]
     dl = doc_links(df).collect()
     assert {r["doc_id"] for r in dl} == {"ok"} and dl[0]["url"] == "u"
+    mr = [tuple(r) for r in media_refs(df).collect()]
+    assert mr == [("ok", 0, 0, "m.png", "image", "img", "src")]
     pm = {r["doc_id"]: r for r in page_meta(df).collect()}
     assert pm["ok"]["title"] == "T"
     assert pm["null_spans"]["title"] is None and pm["null_spans"]["meta"] is None

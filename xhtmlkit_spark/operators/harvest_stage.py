@@ -5,23 +5,27 @@ per-document semantics and the reference parity note): every
 outermost ``<table>`` lands as typed ``(table_idx, row_idx,
 is_header, cells)`` rows, every ``<a href>`` as ``(link_idx, url,
 anchor_text)`` rows — the two projections crawl/ETL users actually
-join on.
+join on; media references, sitemap and feed entries, and page
+metadata follow the same shape.
 
-Plumbing: the harvest rides the SAME span-shaped Arrow carrier as
-every other per-doc stage (one column-pruned scan → optional
-doc_id hash exchange → one MapInArrow), then unpacks to typed columns
-with pure JVM expressions — table rows travel as one span per row
-(``kind`` = header|row, ``text`` = tab-joined cells, ``media_ref`` =
-"table:row") which is LOSSLESS because harvested cell text is
-whitespace-collapsed (no tabs survive A25), and links travel as one
-span per anchor (``media_ref`` = resolved url). The explode and
-split/cast run inside whole-stage codegen; no extra Python, no
-shuffle beyond the carrier stage's.
+Plumbing: every projection is one doc stage of the shared kernel
+(one column-pruned scan → optional doc_id hash exchange → one
+MapInArrow) whose output spec is the typed result itself. A row
+projection emits one ``array<struct>`` column per document, declared
+once below (``_TABLE_ROW`` … ``_FEED_ROW``) and shared with
+``harvest_all``; ``F.inline`` turns it into rows inside whole-stage
+codegen. Nothing is encoded into span strings, so nothing is decoded
+in the JVM. Each walker's rows go through one per-span accumulator
+(``_add_rows`` indexes them, ``_add_tables`` continues table_idx,
+``_add_meta`` merges first-wins) that the single projections,
+``harvest_all`` and the pure-Python twins all call; a document's html
+spans are walked one at a time in offset order, so only one span's
+events are alive at once.
 
-100 TB shape: identical to extract_spans — the explode fans out
-rows but stays pipelined in the same stage as the scan of the
-carrier's output; downstream groupBys (e.g. per-host link counts)
-shuffle typed longs/strings, never documents.
+100 TB shape: identical to extract_spans — the inline fans out rows
+but stays pipelined in the same stage as the Python stage's output;
+downstream groupBys (e.g. per-host link counts) shuffle typed
+longs/strings, never documents.
 """
 
 from __future__ import annotations
@@ -61,6 +65,26 @@ __all__ = [
 ]
 
 
+def _row(*fields) -> T.StructType:
+    return T.StructType([T.StructField(n, dt) for n, dt in fields])
+
+
+_S = T.StringType()
+_I = T.IntegerType()
+_B = T.BooleanType()
+_TABLE_ROW = _row(
+    ("table_idx", _I), ("row_idx", _I), ("is_header", _B), ("cells", T.ArrayType(_S))
+)
+_LINK_ROW = _row(("link_idx", _I), ("url", _S), ("anchor_text", _S))
+_MEDIA_ROW = _row(
+    ("media_idx", _I), ("url", _S), ("media_kind", _S), ("tag", _S), ("attr", _S)
+)
+_SITEMAP_ROW = _row(("entry_idx", _I), ("loc", _S), ("lastmod", _S), ("is_index", _B))
+_FEED_ROW = _row(
+    ("entry_idx", _I), ("feed_type", _S), ("title", _S), ("url", _S), ("published", _S)
+)
+
+
 def _doc_events(kinds, texts, offsets, fragment):
     """Per-span repaired event streams of one document, offset order."""
     for _, kind, raw in iter_spans(kinds, texts, offsets):
@@ -68,27 +92,89 @@ def _doc_events(kinds, texts, offsets, fragment):
             yield repair(tokenize(raw), fragment=fragment)
 
 
+# per-span accumulators: append one html span's rows to the document's
+# ``rows``. Indices run across the doc's spans in offset order (a doc is
+# one page split into spans, not many pages), so each continues from
+# the rows already accumulated.
+
+
+def _add_rows(rows: list, events, walk, *args) -> None:
+    """Append ``walk(events, *args)``'s rows, each prefixed with its
+    running index in the document."""
+    n = len(rows)
+    rows += [(n + i, *e) for i, e in enumerate(walk(events, *args))]
+
+
+def _add_tables(rows: list, events) -> None:
+    t_base = rows[-1][0] + 1 if rows else 0
+    rows += [(t_base + t, r, h, c) for t, r, h, c in harvest_tables(events)]
+
+
+def _media(events, base) -> list:
+    """harvest_media's rows in media_refs' column order."""
+    media = harvest_media(events, base)
+    return [(url, kind, tag, attr) for url, tag, kind, attr in media]
+
+
+def _add_meta(acc: list, events, base) -> None:
+    """First-wins merge of one html span's harvest_meta into ``acc`` =
+    ``[title, lang, canonical, meta_dict]`` (mirroring the in-page
+    first-wins rule)."""
+    t, lg, cn, m = harvest_meta(events, base=base)
+    for j, v in enumerate((t, lg, cn)):
+        if acc[j] is None:
+            acc[j] = v
+    for k, v in m.items():
+        acc[3].setdefault(k, v)
+
+
+def _harvest_doc(kinds, texts, offsets, fragment, add, *args) -> list:
+    """One document's typed rows: ``add(rows, events, *args)`` per html
+    span, offset order."""
+    rows: list = []
+    for events in _doc_events(kinds, texts, offsets, fragment):
+        add(rows, events, *args)
+    return rows
+
+
+def _row_stage(df: DataFrame, passthrough: tuple, row_type, doc_fn) -> DataFrame:
+    """Run ``doc_fn`` (one document → list of row tuples) as a doc
+    stage with one ``array<row_type>`` column, inlined to
+    ``(doc_id, *passthrough, <row_type fields>)`` rows. A NULL spans
+    row yields no rows."""
+    out = (("_rows", T.ArrayType(row_type)),)
+    pt = [c for c in passthrough if c in df.columns]
+    staged = run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt, out), passthrough, out
+    )
+    return staged.select("doc_id", *pt, F.inline("_rows"))
+
+
+def _text_spans(df: DataFrame, text_col: str, passthrough: tuple) -> DataFrame:
+    """Wrap a raw text column as a one-html-span corpus — the doc
+    stage's input shape — so text-column parsers run the same plan."""
+    pt = [c for c in passthrough if c in df.columns]
+    return df.select(
+        "doc_id",
+        *pt,
+        F.array(
+            F.struct(
+                F.lit("html").alias("kind"),
+                F.col(text_col).alias("text"),
+                F.lit(None).cast("string").alias("media_ref"),
+                F.lit(0).cast("int").alias("offset"),
+            )
+        ).alias("spans"),
+    )
+
+
 def harvest_doc_tables(
     kinds: list, texts: list, refs: list, offsets: list, fragment: bool = False
-) -> tuple[list, list, list, list]:
-    """Doc-level table harvest in the span carrier: one span per table
-    row — kind header|row, text = tab-joined cells, media_ref =
-    "table_idx:row_idx". table_idx runs across the doc's html spans in
-    offset order (a doc is one page split into spans, not many pages).
-    """
-    ok: list = []
-    ot: list = []
-    om: list = []
-    t_base = 0
-    for events in _doc_events(kinds, texts, offsets, fragment):
-        rows = harvest_tables(events)
-        for t_idx, r_idx, is_header, cells in rows:
-            ok.append("header" if is_header else "row")
-            ot.append("\t".join(cells))
-            om.append("%d:%d" % (t_base + t_idx, r_idx))
-        if rows:
-            t_base += rows[-1][0] + 1
-    return ok, ot, om, list(range(len(ok)))
+) -> list:
+    """Doc-level table harvest: ``[(table_idx, row_idx, is_header,
+    cells), ...]``. table_idx runs across the doc's html spans in
+    offset order."""
+    return _harvest_doc(kinds, texts, offsets, fragment, _add_tables)
 
 
 def harvest_doc_links(
@@ -98,18 +184,9 @@ def harvest_doc_links(
     offsets: list,
     base: str | None = None,
     fragment: bool = False,
-) -> tuple[list, list, list, list]:
-    """Doc-level link harvest in the span carrier: one span per anchor
-    — kind link, text = anchor text, media_ref = resolved url."""
-    ok: list = []
-    ot: list = []
-    om: list = []
-    for events in _doc_events(kinds, texts, offsets, fragment):
-        for url, text in harvest_links(events, base=base):
-            ok.append("link")
-            ot.append(text)
-            om.append(url)
-    return ok, ot, om, list(range(len(ok)))
+) -> list:
+    """Doc-level link harvest: ``[(link_idx, url, anchor_text), ...]``."""
+    return _harvest_doc(kinds, texts, offsets, fragment, _add_rows, harvest_links, base)
 
 
 def harvest_doc_media(
@@ -119,20 +196,10 @@ def harvest_doc_media(
     offsets: list,
     base: str | None = None,
     fragment: bool = False,
-) -> tuple[list, list, list, list]:
-    """Doc-level media harvest in the span carrier: one span per media
-    reference — kind = image|video|audio, text = "tag\\tattr",
-    media_ref = resolved url (tag/attr names contain no tabs, so the
-    join is lossless)."""
-    ok: list = []
-    ot: list = []
-    om: list = []
-    for events in _doc_events(kinds, texts, offsets, fragment):
-        for url, tag, mkind, attr in harvest_media(events, base=base):
-            ok.append(mkind)
-            ot.append("%s\t%s" % (tag, attr))
-            om.append(url)
-    return ok, ot, om, list(range(len(ok)))
+) -> list:
+    """Doc-level media harvest: ``[(media_idx, url, media_kind, tag,
+    attr), ...]``."""
+    return _harvest_doc(kinds, texts, offsets, fragment, _add_rows, _media, base)
 
 
 def media_refs(
@@ -146,30 +213,13 @@ def media_refs(
     order, urls resolved vs options.base_url (A21). Feed the url
     column into urls.py normalize/blocklist/cap for a media-aware
     crawl frontier."""
-    pt = [c for c in passthrough if c in df.columns]
     base = options.base_url
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_media(kinds, texts, refs, offsets, base, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return harvest_doc_media(kinds, texts, refs, offsets, base, fragment)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
-    s = out.select(
-        "doc_id", *pt, F.posexplode("spans").alias("media_idx", "s")
-    )
-    ta = F.split(F.col("s.text"), "\t")
-    return s.select(
-        "doc_id",
-        *pt,
-        F.col("media_idx").cast("int").alias("media_idx"),
-        F.col("s.media_ref").alias("url"),
-        F.col("s.kind").alias("media_kind"),
-        ta.getItem(0).alias("tag"),
-        ta.getItem(1).alias("attr"),
-    )
+    return _row_stage(df, passthrough, _MEDIA_ROW, doc_fn)
 
 
 def sitemap_entries(
@@ -180,47 +230,13 @@ def sitemap_entries(
     (xkit.harvest.harvest_sitemap — entity decode and tag-soup
     degradation for free): ``<urlset>/<url>`` entries and
     ``<sitemapindex>/<sitemap>`` entries (``is_index``), each with its
-    required ``<loc>`` and optional ``<lastmod>``. The raw text is
-    wrapped into the standard span carrier so the plan is the same
-    one-exchange/one-MapInArrow shape as every parser stage."""
-    pt = [c for c in passthrough if c in df.columns]
-    carrier = df.select(
-        "doc_id",
-        *pt,
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.col(text_col).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    required ``<loc>`` and optional ``<lastmod>``."""
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            ok: list = []
-            ot: list = []
-            om: list = []
-            for events in _doc_events(kinds, texts, offsets, False):
-                for loc, lastmod, is_index in harvest_sitemap(events):
-                    ok.append("sitemapindex" if is_index else "url")
-                    ot.append(lastmod)
-                    om.append(loc)
-            return ok, ot, om, list(range(len(ok)))
+    def doc_fn(kinds, texts, refs, offsets):
+        return _harvest_doc(kinds, texts, offsets, False, _add_rows, harvest_sitemap)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(carrier, batch_fn, passthrough)
-    s = out.select("doc_id", *pt, F.posexplode("spans").alias("entry_idx", "s"))
-    return s.select(
-        "doc_id",
-        *pt,
-        F.col("entry_idx").cast("int").alias("entry_idx"),
-        F.col("s.media_ref").alias("loc"),
-        F.col("s.text").alias("lastmod"),
-        (F.col("s.kind") == F.lit("sitemapindex")).alias("is_index"),
-    )
+    corpus = _text_spans(df, text_col, passthrough)
+    return _row_stage(corpus, passthrough, _SITEMAP_ROW, doc_fn)
 
 
 def feed_entries(
@@ -229,49 +245,13 @@ def feed_entries(
     """(doc_id, *passthrough, entry_idx, feed_type, title, url,
     published) rows parsed from a raw RSS/Atom text column with the
     real tokenizer (xkit.harvest.harvest_feed — the syndication twin
-    of sitemap_entries). Carrier encoding: kind = rss|atom, text =
-    "title\\tpublished" (titles are A25-collapsed so the tab is safe;
-    empty means absent), media_ref = url."""
-    pt = [c for c in passthrough if c in df.columns]
-    carrier = df.select(
-        "doc_id",
-        *pt,
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.col(text_col).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    of sitemap_entries); absent titles and dates are NULL."""
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            ok: list = []
-            ot: list = []
-            om: list = []
-            for events in _doc_events(kinds, texts, offsets, False):
-                for ftype, title, url, published in harvest_feed(events):
-                    ok.append(ftype)
-                    ot.append("%s\t%s" % (title or "", published or ""))
-                    om.append(url)
-            return ok, ot, om, list(range(len(ok)))
+    def doc_fn(kinds, texts, refs, offsets):
+        return _harvest_doc(kinds, texts, offsets, False, _add_rows, harvest_feed)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(carrier, batch_fn, passthrough)
-    s = out.select("doc_id", *pt, F.posexplode("spans").alias("entry_idx", "s"))
-    tp = F.split(F.col("s.text"), "\t")
-    return s.select(
-        "doc_id",
-        *pt,
-        F.col("entry_idx").cast("int").alias("entry_idx"),
-        F.col("s.kind").alias("feed_type"),
-        F.nullif(tp.getItem(0), F.lit("")).alias("title"),
-        F.col("s.media_ref").alias("url"),
-        F.nullif(tp.getItem(1), F.lit("")).alias("published"),
-    )
+    corpus = _text_spans(df, text_col, passthrough)
+    return _row_stage(corpus, passthrough, _FEED_ROW, doc_fn)
 
 
 def table_rows(
@@ -281,26 +261,12 @@ def table_rows(
 ) -> DataFrame:
     """(doc_id, *passthrough, table_idx, row_idx, is_header, cells) —
     one row per harvested table row, cells an array<string>."""
-    pt = [c for c in passthrough if c in df.columns]
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_tables(kinds, texts, refs, offsets, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return harvest_doc_tables(kinds, texts, refs, offsets, fragment)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
-    s = out.select("doc_id", *pt, F.explode("spans").alias("s"))
-    loc = F.split(F.col("s.media_ref"), ":")
-    return s.select(
-        "doc_id",
-        *pt,
-        loc.getItem(0).cast("int").alias("table_idx"),
-        loc.getItem(1).cast("int").alias("row_idx"),
-        (F.col("s.kind") == F.lit("header")).alias("is_header"),
-        F.split(F.col("s.text"), "\t").alias("cells"),
-    )
+    return _row_stage(df, passthrough, _TABLE_ROW, doc_fn)
 
 
 def doc_links(
@@ -313,47 +279,21 @@ def doc_links(
     Feed the url column straight into operators/urls.py
     (canonical_host / blocklist / per-host caps) for the crawl-frontier
     hygiene tier."""
-    pt = [c for c in passthrough if c in df.columns]
     base = options.base_url
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_links(kinds, texts, refs, offsets, base, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return harvest_doc_links(kinds, texts, refs, offsets, base, fragment)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
-    s = out.select(
-        "doc_id", *pt, F.posexplode("spans").alias("link_idx", "s")
-    )
-    return s.select(
-        "doc_id",
-        *pt,
-        F.col("link_idx").cast("int").alias("link_idx"),
-        F.col("s.media_ref").alias("url"),
-        F.col("s.text").alias("anchor_text"),
-    )
+    return _row_stage(df, passthrough, _LINK_ROW, doc_fn)
 
 
 _META_OUT = (
-    ("title", T.StringType()),
-    ("lang", T.StringType()),
-    ("canonical", T.StringType()),
-    ("meta", T.MapType(T.StringType(), T.StringType())),
+    ("title", _S),
+    ("lang", _S),
+    ("canonical", _S),
+    ("meta", T.MapType(_S, _S)),
 )
-
-
-def _merge_meta(acc: list, events, base) -> None:
-    """First-wins merge of one html span's harvest_meta into ``acc`` =
-    ``[title, lang, canonical, meta_dict]`` (a doc's spans in offset
-    order, mirroring the in-page first-wins rule)."""
-    t, lg, cn, m = harvest_meta(events, base=base)
-    for j, v in enumerate((t, lg, cn)):
-        if acc[j] is None:
-            acc[j] = v
-    for k, v in m.items():
-        acc[3].setdefault(k, v)
 
 
 def page_meta(
@@ -375,7 +315,7 @@ def page_meta(
     def doc_fn(kinds, texts, refs, offsets):
         acc = [None, None, None, {}]
         for events in _doc_events(kinds, texts, offsets, fragment):
-            _merge_meta(acc, events, base)
+            _add_meta(acc, events, base)
         return acc[0], acc[1], acc[2], list(acc[3].items())
 
     return run_doc_stage(
@@ -387,31 +327,8 @@ def page_meta(
 
 
 _ALL_OUT = (
-    (
-        "tables",
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("table_idx", T.IntegerType()),
-                    T.StructField("row_idx", T.IntegerType()),
-                    T.StructField("is_header", T.BooleanType()),
-                    T.StructField("cells", T.ArrayType(T.StringType())),
-                ]
-            )
-        ),
-    ),
-    (
-        "links",
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("link_idx", T.IntegerType()),
-                    T.StructField("url", T.StringType()),
-                    T.StructField("anchor_text", T.StringType()),
-                ]
-            )
-        ),
-    ),
+    ("tables", T.ArrayType(_TABLE_ROW)),
+    ("links", T.ArrayType(_LINK_ROW)),
 ) + _META_OUT
 
 
@@ -436,25 +353,10 @@ def harvest_all(
         tables: list = []
         links: list = []
         acc = [None, None, None, {}]
-        t_base = 0
         for events in _doc_events(kinds, texts, offsets, fragment):
-            rows = harvest_tables(events)
-            for t_idx, r_idx, is_header, cells in rows:
-                tables.append(
-                    {
-                        "table_idx": t_base + t_idx,
-                        "row_idx": r_idx,
-                        "is_header": is_header,
-                        "cells": cells,
-                    }
-                )
-            if rows:
-                t_base += rows[-1][0] + 1
-            for url, text in harvest_links(events, base=base):
-                links.append(
-                    {"link_idx": len(links), "url": url, "anchor_text": text}
-                )
-            _merge_meta(acc, events, base)
+            _add_tables(tables, events)
+            _add_rows(links, events, harvest_links, base)
+            _add_meta(acc, events, base)
         return tables, links, acc[0], acc[1], acc[2], list(acc[3].items())
 
     return run_doc_stage(

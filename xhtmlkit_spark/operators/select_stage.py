@@ -55,29 +55,23 @@ def select_spans(
     can feed straight back into extract_spans/select_spans as a
     subtree corpus (e.g. harvest every <table> as training markup).
     """
-    if (selector is None) == (xpath is None):
-        raise ValueError("pass exactly one of selector= or xpath=")
-    if xpath is not None:
-        from xkit.xpath import xpath_to_selector
+    # driver-side translation and validation (a malformed query fails
+    # the job before any executor spins up)
+    parsed, emit = _parse_query_spec(
+        "select_spans", {"selector": selector, "xpath": xpath, "emit": emit}
+    )
 
-        selector = xpath_to_selector(xpath)  # driver-side translation
-    parsed = parse_selector(selector)  # driver-side validation
-    if emit not in ("text", "html", "inner_html"):  # fail on the driver
-        raise ValueError(
-            f"emit must be 'text', 'html' or 'inner_html', got {emit!r}"
-        )
+    def doc_fn(kinds, texts, refs, offsets):
+        return select_doc(kinds, texts, refs, offsets, parsed, options, emit)
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return select_doc(kinds, texts, refs, offsets, parsed, options, emit)
-
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    return run_doc_stage(df, batch_fn, passthrough)
+    return run_doc_stage(
+        df, lambda n_pt: make_doc_stage_fn(doc_fn, n_pt), passthrough
+    )
 
 
 def _parse_query_spec(name: str, spec) -> tuple:
-    """Driver-side parse of one select_multi query spec → (groups, emit).
+    """Driver-side parse of one query spec → (groups, emit): a
+    select_multi query, or select_spans' own arguments.
 
     ``spec`` is a CSS selector string, or a dict with exactly one of
     ``selector``/``xpath`` plus optional ``emit``."""

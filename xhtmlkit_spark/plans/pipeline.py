@@ -82,13 +82,18 @@ def run_pipeline(
         n_parts,
     )
 
-    skipped_parts = 0
-    if resume and manifest_path:
+    # finished parts, read once: the resume filter and the manifest
+    # append below both use them
+    done: set = set()
+    if manifest_path:
         manifest = xio.read_manifest(spark, manifest_path)
         if manifest is not None:
-            done = manifest.select("part").distinct()
-            skipped_parts = done.count()
-            df = df.join(F.broadcast(done), "part", "left_anti")  # B9 resume
+            done = {r["part"] for r in manifest.select("part").distinct().collect()}
+    skipped_parts = 0
+    if resume and done:
+        skipped_parts = len(done)
+        done_df = spark.createDataFrame([(p,) for p in done], "part int")
+        df = df.join(F.broadcast(done_df), "part", "left_anti")  # B9 resume
 
     import time as _time
 
@@ -155,12 +160,6 @@ def run_pipeline(
         # to observe — totals are zero for a run that processed zero docs
         stats_rows = []
     if manifest_path:
-        manifest = xio.read_manifest(spark, manifest_path)
-        done = (
-            {r["part"] for r in manifest.select("part").distinct().collect()}
-            if manifest is not None
-            else set()
-        )
         new_rows = [
             (r["part"], r["n_docs"], r["n_spans"], r["n_chars"], run_id)
             for r in stats_rows

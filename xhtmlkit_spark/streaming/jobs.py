@@ -367,6 +367,37 @@ def user_value_stats_stream(
     )
 
 
+def _corpus_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """A corpus directory as a parquet file stream with the checkpoint
+    ``part`` column — the source of every streaming doc job."""
+    from xhtmlkit_spark.plans.pipeline import derive_part
+
+    schema = spark.read.parquet(input_dir).schema
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return derive_part(reader.load(input_dir))
+
+
+def _land(out: DataFrame, output_dir: str, checkpoint_dir: str) -> None:
+    """Drain ``out`` into the native parquet file sink, partitioned by
+    ``part``. The sink's per-batch commit log (``_spark_metadata``)
+    keeps the landing exactly-once even when a replayed micro-batch
+    rewrites files. availableNow drains and stops; on a cluster, drop
+    the trigger and it runs as data lands."""
+    q = (
+        out.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .partitionBy("part")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def streaming_extract(
     spark: SparkSession,
     input_dir: str,
@@ -380,32 +411,15 @@ def streaming_extract(
     XHtmlKit.Network/HttpClientExtensions.cs GetTextReaderAsync]); the
     Spark-native analogue is a file-stream over the landing zone with
     the same mapInArrow stage applied to the stream, draining into
-    Spark's native file sink — whose per-batch commit log
-    (``_spark_metadata``) makes the output EXACTLY-once even when a
-    replayed micro-batch rewrites files (a foreachBatch append sink
-    would duplicate replayed batches: foreachBatch is at-least-once).
-    Drains with availableNow (sandbox); on a cluster, drop the trigger
-    and it runs forever as data lands.
+    Spark's native file sink (exactly-once, see :func:`_land`; a
+    foreachBatch append sink would duplicate replayed batches:
+    foreachBatch is at-least-once).
     """
     from xhtmlkit_spark.operators.extract_stage import extract_spans
-    from xhtmlkit_spark.plans.pipeline import derive_part
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
-
-    out = extract_spans(derive_part(stream)).select("doc_id", "spans", "part")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _corpus_stream(spark, input_dir, max_files_per_trigger)
+    out = extract_spans(stream).select("doc_id", "spans", "part")
+    _land(out, output_dir, checkpoint_dir)
 
 
 def streaming_warc_extract(
@@ -454,15 +468,7 @@ def streaming_warc_extract(
     out = extract_spans(
         derive_part(corpus), passthrough=("part", "url", "fetched_at")
     ).select("doc_id", "url", "fetched_at", "spans", "part")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _land(out, output_dir, checkpoint_dir)
 
 
 def streaming_select(
@@ -485,26 +491,12 @@ def streaming_select(
     string is parsed on the driver BEFORE the stream starts — a
     malformed query fails the job, never a micro-batch."""
     from xhtmlkit_spark.operators.select_stage import select_spans
-    from xhtmlkit_spark.plans.pipeline import derive_part
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
-
-    out = select_spans(
-        derive_part(stream), selector, xpath=xpath, emit=emit
-    ).select("doc_id", "spans", "part")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part")
-        .trigger(availableNow=True)
-        .start()
+    stream = _corpus_stream(spark, input_dir, max_files_per_trigger)
+    out = select_spans(stream, selector, xpath=xpath, emit=emit).select(
+        "doc_id", "spans", "part"
     )
-    q.awaitTermination()
+    _land(out, output_dir, checkpoint_dir)
 
 
 def streaming_project(
@@ -523,27 +515,11 @@ def streaming_project(
     Stateless, so micro-batch output ≡ the batch stage on the same
     files (pinned by test_streaming_project_matches_batch)."""
     from xhtmlkit_spark.operators.project_stage import project_docs
-    from xhtmlkit_spark.plans.pipeline import derive_part
-
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
 
     cols = ["doc_id", "spans", "markdown"] + (["xhtml"] if want_xhtml else [])
-    out = project_docs(derive_part(stream), want_xhtml=want_xhtml).select(
-        *cols, "part"
-    )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _corpus_stream(spark, input_dir, max_files_per_trigger)
+    out = project_docs(stream, want_xhtml=want_xhtml).select(*cols, "part")
+    _land(out, output_dir, checkpoint_dir)
 
 
 def streaming_clean_extract(
@@ -575,15 +551,9 @@ def streaming_clean_extract(
     from xhtmlkit_spark.operators.extract_stage import extract_spans
     from xhtmlkit_spark.operators.lines import c4_line_filter, split_text_lines
     from xhtmlkit_spark.operators.pii import with_pii_redaction
-    from xhtmlkit_spark.plans.pipeline import derive_part
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
-
-    docs = extract_spans(derive_part(stream)).select(
+    stream = _corpus_stream(spark, input_dir, max_files_per_trigger)
+    docs = extract_spans(stream).select(
         "doc_id", "part", span_text_concat(F.col("spans"), "\n").alias("text")
     )
     cleaned = c4_line_filter(
@@ -601,15 +571,7 @@ def streaming_clean_extract(
         "n_kept",
         (F.col("n_emails") + F.col("n_phones") + F.col("n_ips")).alias("n_pii"),
     )
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _land(out, output_dir, checkpoint_dir)
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,10 +28,6 @@ idiom is how its users pull tables and link lists out of pages —
 Both walk the same well-nested ``repair(tokenize(html))`` event
 stream as every other projection, so all tag-soup recovery rules
 (A14–A17) apply before harvesting. Pure Python, stdlib only.
-
-Post-collapse cell/anchor text contains no tabs or newlines — the
-Spark stage (operators/harvest_stage.py) relies on this to carry
-rows losslessly through the span-shaped Arrow boundary.
 """
 
 from __future__ import annotations
@@ -342,9 +338,10 @@ def harvest_feed(events: list) -> list:
     is captured as the text immediately following the link tag (the
     stray ``</link>`` drops in repair); Atom's ``<link href=…/>``
     comes from the attribute, first link wins. Entries without a link
-    drop. CDATA-wrapped titles land empty (CDATA is a bogus comment
-    in the HTML dialect) — documented subset. Channel/feed-level
-    title/link elements OUTSIDE any entry are ignored.
+    drop. A CDATA-wrapped title keeps its ``<![CDATA[…]]>`` markers
+    with entities decoded (``<title>`` is RCDATA in the HTML dialect)
+    — a known wrong answer. Channel/feed-level title/link elements
+    OUTSIDE any entry are ignored.
     """
     out: list = []
     cur: dict | None = None

@@ -1075,23 +1075,16 @@ def select_doc(
     emit: str = "text",
 ) -> tuple[list, list, list, list]:
     """Doc-level twin of :func:`xkit.doc.extract_doc` for selection:
-    runs the selector over every ``html`` input span in offset order
-    (pdf/media spans have no DOM — skipped), re-deriving output offsets
-    as 0..m-1. Same parallel-list contract, same Arrow-stage plumbing.
+    runs the selector (a string or a :func:`parse_selector` result)
+    over every ``html`` input span in offset order (pdf/media spans
+    have no DOM — skipped), re-deriving output offsets as 0..m-1. Same
+    parallel-list contract, same Arrow-stage plumbing; the one-query
+    case of :func:`select_doc_multi`.
     """
-    from xkit.doc import iter_spans
-
-    ok: list = []
-    ot: list = []
-    om: list = []
-    for _, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind != "html" or raw is None:
-            continue
-        for k, t, m in select_html(raw, selector, options, emit):
-            ok.append(k)
-            ot.append(t)
-            om.append(m)
-    return ok, ot, om, list(range(len(ok)))
+    groups = parse_selector(selector) if isinstance(selector, str) else selector
+    return select_doc_multi(
+        kinds, texts, media_refs, offsets, [(groups, emit)], options
+    )[0]
 
 
 def select_doc_multi(
