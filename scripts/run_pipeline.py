@@ -87,24 +87,18 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from xhtmlkit_spark.plans.pipeline import run_pipeline
+    from xhtmlkit_spark.operators.extract_stage import extract_spans, span_metrics
+    from xhtmlkit_spark.operators.harvest_stage import harvest_all
+    from xhtmlkit_spark.operators.project_stage import project_docs
+    from xhtmlkit_spark.operators.select_stage import select_spans
+    from xhtmlkit_spark.plans.pipeline import derive_part, run_pipeline, with_size_salt
+    from xhtmlkit_spark.session import SQL_CONF
+    from xhtmlkit_spark.sources.io import read_corpus
 
     spark = SparkSession.builder.getOrCreate()  # master comes from spark-submit
     spark.sparkContext.setLogLevel("WARN")
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
-        # giant-doc rows: keep columnar read batches small or the
-        # vectorized reader OOMs at high task concurrency
-        "spark.sql.parquet.columnarReaderBatchSize": "256",
-        # avoid the sort-based dynamic-partition writer (full extra sort)
-        "spark.sql.maxConcurrentOutputFileWriters": "40",
-    }.items():
+    for k, v in SQL_CONF.items():
         spark.conf.set(k, v)
-
-    from xhtmlkit_spark.sources.io import read_corpus
 
     corpus_df = read_corpus(spark, args.input, args.input_format)
     if args.input_format in ("warc", "html"):
@@ -114,63 +108,37 @@ def main() -> None:
         # the cheap columnar re-scan instead of caching
         corpus_df = corpus_df.persist()
 
-    zero = F.lit(0).cast("long")
     row = (
-        corpus_df
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(
-                F.aggregate(
-                    "spans",
-                    zero,
-                    lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero),
-                )
-            ).alias("chars"),
-        )
+        span_metrics(corpus_df)
+        .agg(F.count("*").alias("docs"), F.sum("n_chars").alias("chars"))
         .collect()[0]
     )
 
+    # the noop-sunk single-stage modes: (chosen, mode, stage)
+    noop_stages = [
+        (
+            args.select is not None or args.xpath is not None,
+            "select_only",
+            lambda df: select_spans(df, args.select, xpath=args.xpath, emit=args.emit),
+        ),
+        (args.harvest, "harvest_all", harvest_all),
+        (
+            args.project is not None,
+            f"project:{args.project}",
+            lambda df: project_docs(df, want_xhtml=(args.project == "markdown+xhtml")),
+        ),
+        (args.stage_only, "stage_only", extract_spans),
+    ]
+    noop = next(((mode, stage) for on, mode, stage in noop_stages if on), None)
+
     t0 = time.monotonic()
-    if args.select is not None or args.xpath is not None:
-        from xhtmlkit_spark.operators.select_stage import select_spans
-        from xhtmlkit_spark.plans.pipeline import derive_part, with_size_salt
-
-        df = derive_part(corpus_df)
+    if noop is not None:
+        mode, stage = noop
         n = args.num_partitions or spark.sparkContext.defaultParallelism * 2
-        select_spans(
-            with_size_salt(df, n), args.select, xpath=args.xpath, emit=args.emit
-        ).write.mode("overwrite").format("noop").save()
-        res = {"mode": "select_only"}
-    elif args.harvest:
-        from xhtmlkit_spark.operators.harvest_stage import harvest_all
-        from xhtmlkit_spark.plans.pipeline import derive_part, with_size_salt
-
-        df = derive_part(corpus_df)
-        n = args.num_partitions or spark.sparkContext.defaultParallelism * 2
-        harvest_all(with_size_salt(df, n)).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        res = {"mode": "harvest_all"}
-    elif args.project is not None:
-        from xhtmlkit_spark.operators.project_stage import project_docs
-        from xhtmlkit_spark.plans.pipeline import derive_part, with_size_salt
-
-        df = derive_part(corpus_df)
-        n = args.num_partitions or spark.sparkContext.defaultParallelism * 2
-        project_docs(
-            with_size_salt(df, n), want_xhtml=(args.project == "markdown+xhtml")
-        ).write.mode("overwrite").format("noop").save()
-        res = {"mode": f"project:{args.project}"}
-    elif args.stage_only:
-        from xhtmlkit_spark.operators.extract_stage import extract_spans
-        from xhtmlkit_spark.plans.pipeline import derive_part, with_size_salt
-
-        df = derive_part(corpus_df)
-        n = args.num_partitions or spark.sparkContext.defaultParallelism * 2
-        extract_spans(with_size_salt(df, n)).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        res = {"mode": "stage_only"}
+        stage(with_size_salt(derive_part(corpus_df), n)).write.mode(
+            "overwrite"
+        ).format("noop").save()
+        res = {"mode": mode}
     else:
         res = run_pipeline(
             spark,

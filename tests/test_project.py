@@ -1,4 +1,4 @@
-"""Fused multi-projection (xkit/project.py): one tokenize, N views —
+"""Fused multi-projection (xkit.doc.project_doc): one tokenize, N views —
 each view must be IDENTICAL to its single-projection twin."""
 
 from __future__ import annotations
@@ -9,9 +9,8 @@ import json
 import os
 import random
 
-from xkit.doc import extract_doc
+from xkit.doc import extract_doc, project_doc
 from xkit.options import ExtractOptions
-from xkit.project import project_doc
 
 from xhtmlkit_spark.operators.markdown_stage import markdown_doc
 from xhtmlkit_spark.operators.normalize_stage import normalize_doc

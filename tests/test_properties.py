@@ -317,13 +317,46 @@ def test_iter_warc_never_raises_never_hangs(data):
         http_payload(rec)  # must also never raise
 
 
+def _archive(blocks: list, noise: bytes, cut: int) -> bytes:
+    from xkit.warc import build_record
+
+    data = b"".join(build_record("response", b) for b in blocks) + noise
+    return data[: max(0, len(data) - cut)]
+
+
+# plain (non-gzip) WARC bytes: real records, then soup and a cut
+_plain_warc = st.one_of(
+    _warc_ish,
+    st.builds(
+        _archive,
+        st.lists(st.binary(max_size=40), max_size=4),
+        st.binary(max_size=30),
+        st.integers(0, 60),
+    ),
+).filter(lambda d: d[:2] != b"\x1f\x8b")
+
+
+@settings(max_examples=200, deadline=None)
+@given(_plain_warc)
+@example(b"WARC/1.0\r\nContent-Length: -5\r\n\r\nWARC/1.0\r\n")
+def test_iter_warc_and_offsets_agree_on_plain_bytes(data):
+    """On plain WARC bytes the two readers share one framing loop:
+    iter_warc_offsets yields iter_warc's (headers, block) sequence."""
+    from xkit.warc import iter_warc, iter_warc_offsets
+
+    plain = [(r.headers, r.block) for r in iter_warc(data)]
+    ranged = [(r.headers, r.block) for r, _, _ in iter_warc_offsets(data)]
+    assert ranged == plain
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.binary(max_size=60), st.integers(0, 3))
 def test_iter_warc_mutated_real_archive(noise, cut):
     """A REAL archive with random bytes spliced in (and optionally
     truncated) parses some prefix and stops — never raises, never
     yields structurally impossible records."""
-    from xkit.warc import build_record, build_warc, iter_warc
+    from tests.warc_fixtures import build_warc
+    from xkit.warc import build_record, iter_warc
 
     recs = [build_record("response", b"block %d" % i) for i in range(4)]
     data = build_warc(recs, compress=False)

@@ -1,9 +1,18 @@
-"""Structural guards over the Spark layer's source (AST only, no Spark).
+"""Structural guards over the shipped source (AST only, no Spark).
 
 * Every per-document stage runs through the one Arrow batch kernel,
   ``make_doc_stage_fn``: ``unpack_spans`` is called only inside
   ``operators/extract_stage.py``, so a stage cannot grow its own
   unpack / NULL-row / output-assembly loop again.
+* A document's spans are walked only in ``xkit/doc.py``: ``iter_spans``
+  is called nowhere else, and ``tokenize`` only there and in the three
+  single-html entry points (``extract_html``, ``select_html``,
+  ``html_to_markdown``). A stage reads html through
+  ``xkit.doc.html_events`` instead of repeating the walk.
+* Session SQL settings live in one place: no ``"spark.sql.*"`` conf
+  literal in ``scripts/`` or ``xhtmlkit_spark/`` outside ``session.py``
+  (``streaming/jobs.py``'s ``_drain_conf`` pins shuffle partitions
+  around a drain and is the one exception).
 * No row-wise Python UDF anywhere in ``xhtmlkit_spark/``: Python runs
   only inside mapInArrow/mapInPandas (the CLAUDE.md invariant).
 """
@@ -11,11 +20,23 @@
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
-_PKG = Path(__file__).resolve().parent.parent / "xhtmlkit_spark"
+_ROOT = Path(__file__).resolve().parent.parent
+_PKG = _ROOT / "xhtmlkit_spark"
 _KERNEL = _PKG / "operators" / "extract_stage.py"
 _SOURCES = sorted(_PKG.rglob("*.py"))
+_SHIPPED = sorted((_ROOT / "xkit").rglob("*.py")) + _SOURCES
+_DOC = _ROOT / "xkit" / "doc.py"
+
+
+def _parse(path: Path) -> ast.AST:
+    return ast.parse(path.read_text(), str(path))
+
+
+def _rel(path: Path) -> str:
+    return str(path.relative_to(_ROOT))
 
 
 def _names(tree: ast.AST):
@@ -43,11 +64,20 @@ def _calls(tree: ast.AST, name: str):
                 yield node.lineno
 
 
+def _top_level_owner(tree: ast.Module, lineno: int) -> str | None:
+    """Name of the module-level def/class whose body holds ``lineno``."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if node.lineno <= lineno <= node.end_lineno:
+                return node.name
+    return None
+
+
 def test_unpack_spans_called_only_by_the_kernel():
     assert _KERNEL in _SOURCES
     offenders = {}
     for path in _SOURCES:
-        tree = ast.parse(path.read_text(), str(path))
+        tree = _parse(path)
         if path == _KERNEL:
             assert len(list(_calls(tree, "unpack_spans"))) == 1
             continue
@@ -57,10 +87,67 @@ def test_unpack_spans_called_only_by_the_kernel():
     assert not offenders, f"unpack_spans outside the kernel: {offenders}"
 
 
+def test_iter_spans_called_only_in_xkit_doc():
+    assert _DOC in _SHIPPED
+    offenders = {}
+    for path in _SHIPPED:
+        lines = sorted(_calls(_parse(path), "iter_spans"))
+        if path == _DOC:
+            assert lines
+        elif lines:
+            offenders[_rel(path)] = lines
+    assert not offenders, f"span walks outside xkit/doc.py: {offenders}"
+
+
+# file → the module-level functions allowed to call tokenize (None: any)
+_TOKENIZE_CALLERS = {
+    "xkit/doc.py": None,
+    "xkit/extract.py": {"extract_html"},
+    "xkit/selector.py": {"select_html"},
+    "xkit/markdown.py": {"html_to_markdown"},
+}
+
+
+def test_tokenize_called_only_at_the_parse_entry_points():
+    offenders = {}
+    for path in _SHIPPED:
+        tree = _parse(path)
+        allowed = _TOKENIZE_CALLERS.get(_rel(path), set())
+        for line in _calls(tree, "tokenize"):
+            owner = _top_level_owner(tree, line)
+            if allowed is not None and owner not in allowed:
+                offenders.setdefault(_rel(path), []).append((owner, line))
+    assert not offenders, f"tokenize outside the parse entry points: {offenders}"
+
+
+_SQL_CONF_KEY = re.compile(r"spark\.sql\.[A-Za-z0-9_.]+")
+
+
+def test_sql_conf_literals_only_in_session():
+    sources = _SOURCES + sorted((_ROOT / "scripts").glob("*.py"))
+    offenders = {}
+    for path in sources:
+        rel = _rel(path)
+        if rel == "xhtmlkit_spark/session.py":
+            continue
+        tree = _parse(path)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and _SQL_CONF_KEY.fullmatch(node.value)
+            ):
+                continue
+            owner = _top_level_owner(tree, node.lineno)
+            if (rel, owner) != ("xhtmlkit_spark/streaming/jobs.py", "_drain_conf"):
+                offenders.setdefault(rel, []).append((node.value, node.lineno))
+    assert not offenders, f"spark.sql conf literals outside session.py: {offenders}"
+
+
 def test_no_row_wise_udf():
     offenders = {}
     for path in _SOURCES:
-        tree = ast.parse(path.read_text(), str(path))
+        tree = _parse(path)
         lines = [n for name, n in _names(tree) if name in ("udf", "pandas_udf")]
         if lines:
             offenders[str(path.relative_to(_PKG))] = sorted(set(lines))

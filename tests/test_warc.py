@@ -6,13 +6,8 @@ import gzip
 
 import pytest
 
-from xkit.warc import (
-    build_record,
-    build_warc,
-    http_payload,
-    http_response_block,
-    iter_warc,
-)
+from tests.warc_fixtures import build_warc, http_response_block
+from xkit.warc import build_record, http_payload, iter_warc
 
 
 @pytest.fixture(scope="session")

@@ -38,8 +38,7 @@ from xhtmlkit_spark.operators.extract_stage import (
     make_doc_stage_fn,
     run_doc_stage,
 )
-from xkit.doc import iter_spans
-from xkit.dom import repair
+from xkit.doc import html_events
 from xkit.harvest import (
     harvest_links,
     harvest_media,
@@ -49,7 +48,6 @@ from xkit.harvest import (
     harvest_tables,
 )
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
-from xkit.tokenizer import tokenize
 
 __all__ = [
     "harvest_doc_tables",
@@ -83,13 +81,6 @@ _SITEMAP_ROW = _row(("entry_idx", _I), ("loc", _S), ("lastmod", _S), ("is_index"
 _FEED_ROW = _row(
     ("entry_idx", _I), ("feed_type", _S), ("title", _S), ("url", _S), ("published", _S)
 )
-
-
-def _doc_events(kinds, texts, offsets, fragment):
-    """Per-span repaired event streams of one document, offset order."""
-    for _, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind == "html" and raw is not None:
-            yield repair(tokenize(raw), fragment=fragment)
 
 
 # per-span accumulators: append one html span's rows to the document's
@@ -132,7 +123,7 @@ def _harvest_doc(kinds, texts, offsets, fragment, add, *args) -> list:
     """One document's typed rows: ``add(rows, events, *args)`` per html
     span, offset order."""
     rows: list = []
-    for events in _doc_events(kinds, texts, offsets, fragment):
+    for events in html_events(kinds, texts, offsets, fragment):
         add(rows, events, *args)
     return rows
 
@@ -314,7 +305,7 @@ def page_meta(
 
     def doc_fn(kinds, texts, refs, offsets):
         acc = [None, None, None, {}]
-        for events in _doc_events(kinds, texts, offsets, fragment):
+        for events in html_events(kinds, texts, offsets, fragment):
             _add_meta(acc, events, base)
         return acc[0], acc[1], acc[2], list(acc[3].items())
 
@@ -353,7 +344,7 @@ def harvest_all(
         tables: list = []
         links: list = []
         acc = [None, None, None, {}]
-        for events in _doc_events(kinds, texts, offsets, fragment):
+        for events in html_events(kinds, texts, offsets, fragment):
             _add_tables(tables, events)
             _add_rows(links, events, harvest_links, base)
             _add_meta(acc, events, base)

@@ -21,10 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn, run_doc_stage
-from xkit.doc import iter_spans
-from xkit.dom import repair
+from xkit.doc import html_events
 from xkit.markdown import to_markdown
-from xkit.tokenizer import tokenize
 
 __all__ = ["markdown_doc", "markdown_docs"]
 
@@ -45,12 +43,8 @@ def markdown_doc(
     join with a blank line (block separation), mirroring
     normalize_doc's per-span concatenation."""
     parts: list = []
-    for _, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind != "html" or raw is None:
-            continue
-        md = to_markdown(
-            repair(tokenize(raw), fragment=fragment), base=base, fragment=fragment
-        )
+    for events in html_events(kinds, texts, offsets, fragment):
+        md = to_markdown(events, base=base, fragment=fragment)
         if md:
             parts.append(md)
     return "\n\n".join(parts) if parts else None

@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn, run_doc_stage
-from xkit.doc import iter_spans
-from xkit.dom import repair, serialize
-from xkit.tokenizer import tokenize
+from xkit.doc import html_events
+from xkit.dom import serialize
 
 __all__ = ["normalize_doc", "normalize_xhtml"]
 
@@ -42,13 +41,11 @@ def normalize_doc(
     full-page head auto-close rule for snippet corpora (A18/§3.3),
     mirroring ExtractOptions.fragment."""
     parts: list = []
-    for _, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind != "html" or raw is None:
-            continue
+    for events in html_events(kinds, texts, offsets, fragment):
         # xml_safe: this is the XML-emitting path, so A19 name
         # sanitization and comment legality apply (the goldens pin the
         # default serialize() form separately)
-        parts.append(serialize(repair(tokenize(raw), fragment=fragment), xml_safe=True))
+        parts.append(serialize(events, xml_safe=True))
     return "".join(parts) if parts else None
 
 

@@ -1,5 +1,5 @@
 """Fused multi-projection stage: spans + markdown (+ xhtml) in ONE
-distributed parse (xkit/project.py has the per-document semantics).
+distributed parse (xkit.doc.project_doc has the per-document semantics).
 
 Running extract_spans then markdown_docs scans the corpus twice and
 tokenizes every document twice; tokenization dominates per-doc cost,
@@ -26,8 +26,8 @@ from xhtmlkit_spark.operators.extract_stage import (
     make_doc_stage_fn,
     run_doc_stage,
 )
+from xkit.doc import project_doc
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
-from xkit.project import project_doc
 
 __all__ = ["project_docs"]
 

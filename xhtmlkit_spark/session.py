@@ -13,15 +13,39 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["SQL_CONF", "get_spark"]
+
+# Runtime SQL settings every session of the engine runs with: get_spark
+# sets them at build time, and scripts/run_pipeline.py sets them on the
+# session spark-submit gives it.
+SQL_CONF = {
+    # deterministic across deploy environments: the events table is
+    # TIMESTAMP_NTZ cast to ltz for watermarks, and epoch-aligned
+    # windows shift by the session offset on non-whole-hour zones
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+    # a batch closes at whichever bound it reaches first
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 << 20),
+    # giant-document corpora: 4096-row columnar batches of multi-MB text
+    # cells OOM the on-heap vectorized reader under full parallelism
+    "spark.sql.parquet.columnarReaderBatchSize": "256",
+    # avoid the sort-based dynamic-partition writer (a full extra
+    # sort of the output) when tasks write several `part` values
+    "spark.sql.maxConcurrentOutputFileWriters": "40",
+    # partitioned sinks overwrite only the partitions they touch
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    "spark.sql.files.maxPartitionBytes": "128m",
+}
 
 
 def get_spark(
     master: str | None = None,
     app_name: str = "xhtmlkit-spark",
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 1024,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
@@ -38,33 +62,13 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # deterministic across deploy environments: the events table is
-        # TIMESTAMP_NTZ cast to ltz for watermarks, and epoch-aligned
-        # windows shift by the session offset on non-whole-hour zones;
-        # the JVM zone must be pinned too — collect() converts
-        # timestamps through the JVM default, not the session setting
-        .config("spark.sql.session.timeZone", "UTC")
+        # the JVM zone is pinned too: collect() converts timestamps
+        # through the JVM default, not the session setting
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        # a batch closes at whichever bound it reaches first
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
-        # giant-document corpora: 4096-row columnar batches of multi-MB text
-        # cells OOM the on-heap vectorized reader under full parallelism
-        .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-        # avoid the sort-based dynamic-partition writer (a full extra
-        # sort of the output) when tasks write several `part` values
-        .config("spark.sql.maxConcurrentOutputFileWriters", "40")
-        # partitioned sinks overwrite only the partitions they touch
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in SQL_CONF.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

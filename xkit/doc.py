@@ -7,21 +7,27 @@ Output: ordered spans with kind ∈ {text, media}; offset re-derived as
 span-sequence equality on (kind, text, media_ref, order)
 (BASELINE.json north_rule).
 
-This module is pure Python (stdlib only); xkit.spark's mapInArrow
-stage calls :func:`extract_doc` per document inside an Arrow batch,
-and the pytest goldens call it directly — the two paths share one
-implementation, which is what makes the Spark-vs-pure-Python equality
-test (SURVEY.md §5.2.3) meaningful.
+This is the only module that walks a document's spans
+(tests/test_structure.py): every per-document stage reads them through
+:func:`extract_doc`, :func:`project_doc` (extraction + markdown +
+xhtml from one tokenize per html span) or :func:`html_events` (each
+html span's repaired events). It is pure Python (stdlib only); the
+Spark stages and the pytest goldens call the same functions, which is
+what makes the Spark-vs-pure-Python equality test (SURVEY.md §5.2.3)
+meaningful.
 """
 
 from __future__ import annotations
 
+from xkit.dom import repair, serialize
 from xkit.encoding import decode_html_bytes
 from xkit.extract import extract_html
+from xkit.markdown import to_markdown
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.pdfmini import extract_pdf_text
+from xkit.tokenizer import tokenize
 
-__all__ = ["extract_doc", "iter_spans"]
+__all__ = ["extract_doc", "html_events", "iter_spans", "project_doc"]
 
 
 def iter_spans(kinds: list, texts: list, offsets: list):
@@ -42,6 +48,48 @@ def iter_spans(kinds: list, texts: list, offsets: list):
         yield i, kind, text
 
 
+def html_events(kinds: list, texts: list, offsets: list, fragment: bool = False):
+    """Yield each html span's ``repair(tokenize(text))`` event list in
+    offset order; pdf, media, unknown-kind and NULL-text spans carry no
+    markup and yield nothing. One span's events are alive at a time."""
+    for _, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind == "html" and raw is not None:
+            yield repair(tokenize(raw), fragment=fragment)
+
+
+def _output_spans(kinds, texts, media_refs, offsets, options, on_tokens=None):
+    """The output-span walk of :func:`extract_doc`; ``on_tokens``, when
+    given, also receives each html span's token list (which the
+    extractor then reuses instead of tokenizing again)."""
+    ok: list = []
+    ot: list = []
+    om: list = []
+    for i, kind, raw in iter_spans(kinds, texts, offsets):
+        if kind == "html":
+            if raw is None:
+                continue
+            toks = None if on_tokens is None else tokenize(raw)
+            for k, t, m in extract_html(raw, options, toks):
+                ok.append(k)
+                ot.append(t)
+                om.append(m)
+            if toks is not None:
+                on_tokens(toks)
+        elif kind == "pdf":
+            if raw is None:
+                continue
+            for block in extract_pdf_text(raw, options.pdf_password):
+                ok.append("text")
+                ot.append(block)
+                om.append(None)
+        elif kind == "media":
+            ok.append("media")
+            ot.append(None)
+            om.append(media_refs[i])
+        # unknown kinds contribute nothing (never-fail discipline, A17)
+    return ok, ot, om, list(range(len(ok)))
+
+
 def extract_doc(
     kinds: list,
     texts: list,
@@ -59,27 +107,37 @@ def extract_doc(
     Returns ``(kinds, texts, media_refs, offsets)`` of the output
     spans, offsets = 0..m-1.
     """
-    ok: list = []
-    ot: list = []
-    om: list = []
-    for i, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind == "html":
-            if raw is None:
-                continue
-            for k, t, m in extract_html(raw, options):
-                ok.append(k)
-                ot.append(t)
-                om.append(m)
-        elif kind == "pdf":
-            if raw is None:
-                continue
-            for block in extract_pdf_text(raw, options.pdf_password):
-                ok.append("text")
-                ot.append(block)
-                om.append(None)
-        elif kind == "media":
-            ok.append("media")
-            ot.append(None)
-            om.append(media_refs[i])
-        # unknown kinds contribute nothing (never-fail discipline, A17)
-    return ok, ot, om, list(range(len(ok)))
+    return _output_spans(kinds, texts, media_refs, offsets, options)
+
+
+def project_doc(
+    kinds: list,
+    texts: list,
+    media_refs: list,
+    offsets: list,
+    options: ExtractOptions = DEFAULT_OPTIONS,
+    want_xhtml: bool = False,
+) -> tuple:
+    """One document → ``((kinds, texts, media_refs, offsets), markdown,
+    xhtml)`` with a single tokenize per html span, each view equal to
+    its single-stage twin (extract_doc, markdown_doc, normalize_doc).
+    ``xhtml`` is None unless ``want_xhtml``; markdown/xhtml are None
+    (not "") for docs with no html content."""
+    md_parts: list = []
+    xh_parts: list = []
+    fragment = options.fragment
+
+    def on_tokens(toks):
+        events = repair(toks, fragment=fragment)
+        md = to_markdown(events, base=options.base_url, fragment=fragment)
+        if md:
+            md_parts.append(md)
+        if want_xhtml:
+            xh_parts.append(serialize(events, xml_safe=True))
+
+    spans = _output_spans(kinds, texts, media_refs, offsets, options, on_tokens)
+    return (
+        spans,
+        "\n\n".join(md_parts) if md_parts else None,
+        "".join(xh_parts) if xh_parts else None,
+    )

@@ -8,7 +8,7 @@ the Spark-side hot path runs it per document inside an Arrow batch.
 ``xkit.dom.repair`` remains the reference implementation of the
 repair rules (used by the serialization goldens), which pin this
 consumer's behaviour. Callers that already tokenized a document
-(xkit.project) pass their token list in.
+(xkit.doc.project_doc) pass their token list in.
 
 Pipeline-spec heuristics (authoritative: BASELINE.json north_star
 "boilerplate-strip heuristics (script/style/comment removal,
@@ -78,8 +78,9 @@ def extract_html(
 
     kind ∈ {"text", "media"}; text spans carry ``media_ref=None``,
     media spans carry ``text=None``. ``tokens`` is ``tokenize(html)``
-    when the caller already has it (xkit.project shares one token list
-    across projections); otherwise the document is tokenized here.
+    when the caller already has it (xkit.doc.project_doc shares one
+    token list across projections); otherwise the document is
+    tokenized here.
     """
     opt = options
     # per-flush option lookups hoisted (67k flushes per MB-scale batch)

@@ -116,6 +116,7 @@ from __future__ import annotations
 
 from urllib.parse import urljoin
 
+from xkit.doc import html_events
 from xkit.dom import repair, serialize
 from xkit.extract import MEDIA_TAGS, _collapse
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
@@ -1104,14 +1105,9 @@ def select_doc_multi(
     at corpus scale the corpus is scanned and parsed ONCE for every
     query instead of once per query.
     """
-    from xkit.doc import iter_spans
-
     outs = [([], [], []) for _ in parsed_queries]
     base = options.base_url
-    for _, kind, raw in iter_spans(kinds, texts, offsets):
-        if kind != "html" or raw is None:
-            continue
-        events = repair(tokenize(raw), fragment=options.fragment)
+    for events in html_events(kinds, texts, offsets, options.fragment):
         for (groups, emit), (ok, ot, om) in zip(parsed_queries, outs):
             for k, t, m in select_events(events, groups, base, emit):
                 ok.append(k)

@@ -20,15 +20,12 @@ which may be Transfer-Encoding: chunked and/or Content-Encoding:
 gzip/deflate, so :func:`http_payload` undoes both before handing the
 body to charset sniffing.
 
-Writer (:func:`build_record`, :func:`build_warc`) exists for
-deterministic fixtures: gzip members are written with ``mtime=0`` so
-the same records always produce byte-identical archives.
+Writer: :func:`build_record` serializes one record deterministically
+(the WET writer in xhtmlkit_spark.sources.io uses it).
 """
 
 from __future__ import annotations
 
-import gzip
-import io
 import zlib
 from collections.abc import Iterator
 
@@ -39,8 +36,6 @@ __all__ = [
     "surt",
     "http_payload",
     "build_record",
-    "build_warc",
-    "http_response_block",
 ]
 
 _CRLF = b"\r\n"
@@ -146,25 +141,19 @@ def _parse_headers(raw: bytes) -> dict[str, str]:
     return headers
 
 
-def iter_warc(data: bytes) -> Iterator[WarcRecord]:
-    """Yield records from WARC bytes (plain or gzip-member-compressed).
-
-    Defensive: a malformed record terminates iteration rather than
-    raising — crawl archives get truncated, and at 100 TB one bad file
-    must not kill the stage.
-    """
-    if data[:2] == _GZIP_MAGIC:
-        data = _gunzip_members(data)
+def _iter_records(data: bytes) -> Iterator[tuple[WarcRecord, int, int]]:
+    """The framing loop over plain WARC bytes: ``(record, offset,
+    length)`` with offset/length the record's own byte span, trailing
+    CRLFCRLF included. A malformed record ends the iteration."""
     pos = 0
     n = len(data)
     while pos < n:
         # skip inter-record CRLFs
         while data[pos : pos + 2] == _CRLF:
             pos += 2
-        if pos >= n:
-            return
-        if not data.startswith(b"WARC/", pos):
-            return  # lost sync: stop
+        start = pos
+        if pos >= n or not data.startswith(b"WARC/", pos):
+            return  # end of data, or lost sync: stop
         hdr_end = data.find(_CRLF + _CRLF, pos)
         if hdr_end < 0:
             return
@@ -179,8 +168,22 @@ def iter_warc(data: bytes) -> Iterator[WarcRecord]:
         block_start = hdr_end + 4
         if block_start + length > n:
             length = n - block_start  # truncated final record
-        yield WarcRecord(headers, data[block_start : block_start + length])
+        end = min(block_start + length + 4, n)  # trailing CRLFCRLF
+        yield WarcRecord(headers, data[block_start : block_start + length]), start, end - start
         pos = block_start + length
+
+
+def iter_warc(data: bytes) -> Iterator[WarcRecord]:
+    """Yield records from WARC bytes (plain or gzip-member-compressed).
+
+    Defensive: a malformed record terminates iteration rather than
+    raising — crawl archives get truncated, and at 100 TB one bad file
+    must not kill the stage.
+    """
+    if data[:2] == _GZIP_MAGIC:
+        data = _gunzip_members(data)
+    for rec, _, _ in _iter_records(data):
+        yield rec
 
 
 def iter_warc_offsets(data: bytes) -> Iterator[tuple[WarcRecord, int, int]]:
@@ -192,39 +195,14 @@ def iter_warc_offsets(data: bytes) -> Iterator[tuple[WarcRecord, int, int]]:
     CDX index needs; :func:`iter_warc` is the cheaper call when
     offsets don't matter.
 
-    Gzip assumption: ONE record per member — the Common Crawl layout,
-    and what :func:`build_warc` writes. A spec-legal archive that packs
-    several records into one member still yields every record, but each
-    carries the WHOLE member's (offset, length): a ranged read of that
-    span returns the sibling records too (over-addressed, never
-    truncated).
+    Gzip assumption: ONE record per member — the Common Crawl layout.
+    A spec-legal archive that packs several records into one member
+    still yields every record, but each carries the WHOLE member's
+    (offset, length): a ranged read of that span returns the sibling
+    records too (over-addressed, never truncated).
     """
     if data[:2] != _GZIP_MAGIC:
-        pos = 0
-        n = len(data)
-        while pos < n:
-            while data[pos : pos + 2] == _CRLF:
-                pos += 2
-            start = pos
-            if pos >= n or not data.startswith(b"WARC/", pos):
-                return
-            hdr_end = data.find(_CRLF + _CRLF, pos)
-            if hdr_end < 0:
-                return
-            line_end = data.find(_CRLF, pos)
-            headers = _parse_headers(data[line_end + 2 : hdr_end])
-            try:
-                length = int(headers.get("content-length", ""))
-            except ValueError:
-                return
-            if length < 0:
-                return  # same backwards-pos guard as iter_warc
-            block_start = hdr_end + 4
-            if block_start + length > n:
-                length = n - block_start
-            end = min(block_start + length + 4, n)  # trailing CRLFCRLF
-            yield WarcRecord(headers, data[block_start : block_start + length]), start, end - start
-            pos = block_start + length
+        yield from _iter_records(data)
         return
     # gzip: one member per record; member length = consumed input
     # (bounded-chunk streaming — see _iter_gzip_members for why)
@@ -343,7 +321,7 @@ def build_record(
     record_id: str = "<urn:uuid:00000000-0000-0000-0000-000000000000>",
     content_type: str | None = None,
 ) -> bytes:
-    """Serialize one record (fixture writer; deterministic field order)."""
+    """Serialize one record (deterministic field order)."""
     fields = [("WARC-Type", warc_type), ("WARC-Record-ID", record_id), ("WARC-Date", date)]
     if target_uri is not None:
         fields.append(("WARC-Target-URI", target_uri))
@@ -353,30 +331,3 @@ def build_record(
     head = b"WARC/1.0" + _CRLF
     head += b"".join(f"{k}: {v}".encode("latin-1") + _CRLF for k, v in fields)
     return head + _CRLF + block + _CRLF + _CRLF
-
-
-def build_warc(records: list[bytes], compress: bool = False) -> bytes:
-    """Concatenate serialized records; ``compress=True`` gzips each as
-    its own member (mtime=0: byte-deterministic), the .warc.gz layout."""
-    if not compress:
-        return b"".join(records)
-    out = io.BytesIO()
-    for rec in records:
-        out.write(gzip.compress(rec, mtime=0))
-    return out.getvalue()
-
-
-def http_response_block(
-    body: bytes,
-    status: int = 200,
-    content_type: str = "text/html",
-    extra_headers: list[tuple[str, str]] | None = None,
-) -> bytes:
-    """Build the block of a response record: a captured HTTP message."""
-    reason = {200: "OK", 301: "Moved Permanently", 404: "Not Found"}.get(status, "OK")
-    head = f"HTTP/1.1 {status} {reason}".encode("latin-1") + _CRLF
-    head += f"Content-Type: {content_type}".encode("latin-1") + _CRLF
-    for k, v in extra_headers or []:
-        head += f"{k}: {v}".encode("latin-1") + _CRLF
-    head += f"Content-Length: {len(body)}".encode("latin-1") + _CRLF
-    return head + _CRLF + body
