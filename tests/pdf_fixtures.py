@@ -1,10 +1,11 @@
-"""PDF fixture builders for the tests and the golden generator.
+"""PDF fixture builders for the tests.
 
 The PDF 1.5 (cross-reference stream / object stream), two-font,
 composite-font and encrypted layouts exercise corners of
 :mod:`xkit.pdfmini`'s dialect. They are test inputs only, so they live
 here rather than in the shipped module; :func:`xkit.pdfmini.make_fixture_pdf`
-stays shipped because corpus generation uses it.
+stays shipped because corpus generation uses it. The ``note`` of each
+``pdf_dialect`` golden case names the builder call that made its PDF.
 """
 
 from __future__ import annotations

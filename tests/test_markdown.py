@@ -1,38 +1,25 @@
 """HTML → Markdown projection (xkit/markdown.py + the Spark stage).
 
-The dialect is frozen by tests/golden/markdown/markdown.json
-(authored via scripts/gen_goldens.py like every other golden set);
-the Spark column stage must agree with the pure-Python path
-byte-for-byte on the shared synthetic corpus.
+The dialect is frozen by the markdown golden set (run through
+tests/goldens.py like every other golden set); the Spark column stage
+must agree with the pure-Python path byte-for-byte on the shared
+synthetic corpus.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
 
+from tests import goldens
 from xkit.markdown import html_to_markdown, to_markdown
 from xkit.options import ExtractOptions
 
-GOLDEN = os.path.join(
-    os.path.dirname(__file__), "golden", "markdown", "markdown.json"
-)
-with open(GOLDEN) as f:
-    _CASES = [
-        pytest.param(c, id=c["name"]) for c in json.load(f)["cases"]
-    ]
+_CASES = [pytest.param(c, id=c["name"]) for _, c in goldens.cases("markdown")]
 
 
 @pytest.mark.parametrize("case", _CASES)
 def test_markdown_golden(case):
-    opts = (
-        ExtractOptions(base_url=case["base_url"])
-        if case.get("base_url")
-        else ExtractOptions()
-    )
-    assert html_to_markdown(case["html"], opts) == case["expected_markdown"]
+    assert goldens.actual("markdown", case) == case["expected_markdown"]
 
 
 def test_markdown_golden_corpus_is_nontrivial():

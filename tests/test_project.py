@@ -3,55 +3,14 @@ each view must be IDENTICAL to its single-projection twin."""
 
 from __future__ import annotations
 
-import base64
-import glob
-import json
-import os
 import random
 
+from tests import goldens
 from xkit.doc import extract_doc, project_doc
 from xkit.options import ExtractOptions
 
 from xhtmlkit_spark.operators.markdown_stage import markdown_doc
 from xhtmlkit_spark.operators.normalize_stage import normalize_doc
-
-GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
-
-
-def _golden_inputs():
-    """Every span-shaped golden case as extract_doc parallel lists."""
-    for path in sorted(glob.glob(os.path.join(GOLDEN_DIR, "*.json"))):
-        with open(path) as f:
-            data = json.load(f)
-        for case in data["cases"]:
-            kwargs = dict(case.get("options") or {})
-            if case.get("base_url"):
-                kwargs["base_url"] = case["base_url"]
-            if "spans" in case:
-                sp = case["spans"]
-                yield (
-                    [s["kind"] for s in sp],
-                    [s["text"] for s in sp],
-                    [s["media_ref"] for s in sp],
-                    [s["offset"] for s in sp],
-                    ExtractOptions(**kwargs),
-                )
-            elif "raw_b64" in case:
-                yield (
-                    ["html"],
-                    [base64.b64decode(case["raw_b64"])],
-                    [None],
-                    [0],
-                    ExtractOptions(**kwargs),
-                )
-            else:
-                yield (
-                    ["html"],
-                    [case["html"]],
-                    [None],
-                    [0],
-                    ExtractOptions(**kwargs),
-                )
 
 
 def _assert_consistent(k, t, m, o, opts):
@@ -62,11 +21,10 @@ def _assert_consistent(k, t, m, o, opts):
 
 
 def test_project_matches_single_stages_on_all_goldens():
-    n = 0
-    for k, t, m, o, opts in _golden_inputs():
-        _assert_consistent(k, t, m, o, opts)
-        n += 1
-    assert n >= 100  # the whole span-golden corpus ran
+    cases = goldens.cases("extract")
+    for _, case in cases:
+        _assert_consistent(*goldens.span_inputs(case), goldens.options(case))
+    assert len(cases) >= 100  # the whole span-golden corpus ran
 
 
 def test_project_matches_single_stages_on_fuzz():

@@ -1,42 +1,21 @@
-"""Selector-lite gate: frozen goldens (authored-as-spec, like the 89
-extraction cases), parse-error behavior, never-raise fuzz, and
-Spark-stage ≡ pure-Python equality for select_spans."""
+"""Selector-lite gate: frozen goldens (authored-as-spec, like the 125
+extraction cases; tests/goldens.py runs them), parse-error behavior,
+never-raise fuzz, and Spark-stage ≡ pure-Python equality for
+select_spans."""
 
 from __future__ import annotations
 
-import json
-import os
-
 import pytest
 
-from xkit.options import ExtractOptions
+from tests import goldens
 from xkit.selector import parse_selector, select_doc, select_html
 
-GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "selector", "selectors.json")
-
-with open(GOLDEN) as f:
-    _CASES = [
-        pytest.param(c, id=c["name"]) for c in json.load(f)["cases"]
-    ]
+_CASES = [pytest.param(c, id=c["name"]) for _, c in goldens.cases("selector")]
 
 
 @pytest.mark.parametrize("case", _CASES)
 def test_selector_golden(case):
-    opts = (
-        ExtractOptions(base_url=case["base_url"])
-        if case.get("base_url")
-        else ExtractOptions()
-    )
-    got = [
-        {"kind": k, "text": t, "media_ref": m, "offset": i}
-        for i, (k, t, m) in enumerate(
-            select_html(
-                case["html"], case["selector"], opts,
-                emit=case.get("emit", "text"),
-            )
-        )
-    ]
-    assert got == case["expected_spans"]
+    assert goldens.actual("selector", case) == case["expected_spans"]
 
 
 @pytest.mark.parametrize(

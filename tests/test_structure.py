@@ -15,6 +15,9 @@
   around a drain and is the one exception).
 * No row-wise Python UDF anywhere in ``xhtmlkit_spark/``: Python runs
   only inside mapInArrow/mapInPandas (the CLAUDE.md invariant).
+* ``tests/goldens.py`` is the only module under ``tests/`` or
+  ``scripts/`` that builds a path into ``tests/golden/``, so the golden
+  tests and ``scripts/gen_goldens.py`` share one case-to-output rule.
 """
 
 from __future__ import annotations
@@ -152,3 +155,31 @@ def test_no_row_wise_udf():
         if lines:
             offenders[str(path.relative_to(_PKG))] = sorted(set(lines))
     assert not offenders, f"udf/pandas_udf used in: {offenders}"
+
+
+_GOLDEN_PATH = re.compile(r"(^|[/\\])golden([/\\]|$)")
+
+
+def test_golden_dir_read_only_by_goldens_module():
+    owner = _ROOT / "tests" / "goldens.py"
+    sources = sorted((_ROOT / "tests").rglob("*.py"))
+    sources += sorted((_ROOT / "scripts").glob("*.py"))
+    assert owner in sources
+    offenders = {}
+    for path in sources:
+        tree = _parse(path)
+        # docstrings and other bare string statements only describe
+        prose = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+        lines = [
+            n.lineno
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in prose
+            and _GOLDEN_PATH.search(n.value)
+        ]
+        if path == owner:
+            assert lines
+        elif lines:
+            offenders[_rel(path)] = lines
+    assert not offenders, f"paths into tests/golden outside tests/goldens.py: {offenders}"
