@@ -1,4 +1,6 @@
 """PDF fixture-dialect tests (SURVEY.md A26, FIXTURES.md §6)."""
+import re
+
 import pytest
 
 from tests.pdf_fixtures import (
@@ -732,3 +734,124 @@ def test_password_fuzz_random_bytes():
         if bytes(flip) not in (upw, opw):
             assert extract_pdf_text(pdf, bytes(flip)) == [], (r, upw, flip)
         assert extract_pdf_text(pdf) == []
+
+
+def _rebuild(pdf: str, objs: dict) -> str:
+    """``pdf`` (a classic-xref fixture) with the objects in ``objs``
+    (objnum → full ``N 0 obj … endobj`` text) replaced or added, and a
+    fresh xref table; the trailer keeps its entries with a new /Size."""
+    xref = pdf.rindex("\nxref\n")
+    table = re.findall(r"(\d{10}) \d{5} n", pdf[xref:])
+    starts = sorted((int(off), n + 1) for n, off in enumerate(table))
+    ends = [s for s, _ in starts[1:]] + [xref + 1]
+    body = {n: pdf[s : e - 1] for (s, n), e in zip(starts, ends)}
+    body.update(objs)
+    out, offsets = "%PDF-1.4\n", {}
+    for n in sorted(body):
+        offsets[n] = len(out)
+        out += body[n] + "\n"
+    size = max(body) + 1
+    rows = ["%010d 00000 n " % offsets[n] if n in offsets else "0000000000 65535 f "
+            for n in range(size)]
+    trailer = pdf[pdf.index("trailer", xref) : pdf.index("startxref", xref)]
+    trailer = re.sub(r"/Size \d+", "/Size %d" % size, trailer)
+    return out + "xref\n0 %d\n%s\n%sstartxref\n%d\n%%%%EOF" % (
+        size, "\n".join(rows), trailer, len(out)
+    )
+
+
+@pytest.mark.parametrize("r", [2, 3, 4, 5, 6])
+def test_encrypted_stream_with_indirect_length(r):
+    """``/Length K 0 R`` on an encrypted content stream: the length is
+    read through the reference, so exactly the declared bytes are
+    decrypted — a 2-digit K once read as the integer 1, and a 1-digit
+    K fell back to the whole capture (trailing EOL included), which
+    breaks AES block alignment."""
+    for compress in (False, True):
+        pdf = make_fixture_pdf_encrypted(
+            [["Hello world", "second line"]], r=r, compress=compress
+        )
+        obj4 = re.search(r"4 0 obj\n<< /Length (\d+)(.*?)endobj", pdf, re.DOTALL)
+        for k in (7, 12):
+            edited = _rebuild(
+                pdf,
+                {
+                    4: obj4.group(0).replace(
+                        "/Length %s" % obj4.group(1), "/Length %d 0 R" % k, 1
+                    ),
+                    k: "%d 0 obj %s endobj" % (k, obj4.group(1)),
+                },
+            )
+            assert "/Length %d 0 R" % k in edited
+            got = extract_pdf_text(edited)
+            assert got == ["Hello world second line"], (compress, k, got)
+
+
+def _pdf_literal(raw: bytes) -> str:
+    """``raw`` as a PDF literal string: ``\\ ( )``, CR and LF escaped,
+    every other byte verbatim (latin-1)."""
+    esc = {0x5C: "\\\\", 0x28: "\\(", 0x29: "\\)", 0x0D: "\\r", 0x0A: "\\n"}
+    return "(%s)" % "".join(esc.get(b, chr(b)) for b in raw)
+
+
+@pytest.mark.parametrize("owner", [b"owner1065", b"owner1186", b"owner1293"])
+def test_encrypt_literal_o_and_u_entries(owner):
+    """/O and /U written as escaped literal strings decode through the
+    same escape decoder as show text. These owner passwords give /O or
+    /U bytes whose escapes the old sequential .replace() decoder
+    mis-read (an escaped backslash before ``n``/``r``/a digit)."""
+    pdf = make_fixture_pdf_encrypted([["Hello world"]], r=3, owner_pwd=owner)
+    enc = re.search(r"5 0 obj\n.*?endobj", pdf, re.DOTALL).group(0)
+    for key in ("O", "U"):
+        hx = re.search(r"/%s <([0-9A-F]+)>" % key, enc)
+        lit = _pdf_literal(bytes.fromhex(hx.group(1)))
+        enc = enc.replace(hx.group(0), "/%s %s" % (key, lit), 1)
+    edited = _rebuild(pdf, {5: enc})
+    assert "/O <" not in edited and "/U <" not in edited
+    assert extract_pdf_text(edited) == ["Hello world"]
+
+
+# (literal string body, decoded bytes) — ISO 32000-1 §7.3.4.2
+_ESCAPE_TABLE = [
+    (rb"\\101", b"\\101"),  # escaped backslash, then plain digits
+    (rb"\1", b"\x01"),  # 1-digit octal
+    (rb"a\bc", b"a\x08c"),
+    (rb"\f", b"\x0c"),
+    (rb"\\n", b"\\n"),  # escaped backslash, then a plain n
+    (rb"\q", b"q"),  # unknown escape: the backslash is dropped
+    (rb"\(", b"("),
+    (b"a\\\nb", b"ab"),  # backslash + EOL: line continuation
+]
+
+
+def test_literal_string_escape_table():
+    from xkit.pdfmini import _pdf_string_bytes, _unescape_pdf_bytes
+
+    for body, want in _ESCAPE_TABLE:
+        assert _unescape_pdf_bytes(body) == want, body
+        assert _pdf_string_bytes(body, None) == want, body
+        pdf = b"%PDF-1.4\nstream\nBT (<" + body + b">) Tj ET\nendstream"
+        got = extract_pdf_text(pdf)
+        assert got == ["<%s>" % want.decode("latin-1")], (body, got)
+
+
+def test_fallback_applies_decode_parms_predictor():
+    """The byte-order fallback (no xref) decodes a stream exactly like
+    the page walk: /Filter chain, then the /DecodeParms PNG predictor."""
+    import zlib
+
+    columns = 8
+    content = b"BT /F1 12 Tf 0 700 Td (predicted text) Tj ET"
+    content += b" " * (-len(content) % columns)  # whole rows
+    rows, prev = [], bytes(columns)
+    for i in range(0, len(content), columns):
+        row = content[i : i + columns]
+        rows.append(b"\x02" + bytes((a - b) & 0xFF for a, b in zip(row, prev)))  # Up
+        prev = row
+    comp = zlib.compress(b"".join(rows))
+    pdf = (
+        b"%%PDF-1.4\n1 0 obj\n<< /Length %d /Filter /FlateDecode "
+        b"/DecodeParms << /Predictor 12 /Columns %d >> >>\nstream\n%s\n"
+        b"endstream\nendobj\n%%%%EOF" % (len(comp), columns, comp)
+    )
+    assert extract_pdf_text(pdf) == ["predicted text"]

@@ -710,6 +710,33 @@ def test_pipeline_resume_skips_done_parts(spark, corpus_path, tmp_path):
     assert spark.read.parquet(out).count() == r1["docs_total"]
 
 
+def test_fully_resumed_pipeline_launches_no_extract_or_write_job(
+    spark, corpus_path, tmp_path
+):
+    """A rerun with every part in the manifest stops after the
+    resume-filtered ``part`` scan: the manifest read and that scan are
+    its only jobs — no extract, write or observe job for zero docs."""
+    import uuid
+
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    out = str(tmp_path / "out")
+    man = str(tmp_path / "manifest")
+    run_pipeline(spark, corpus_path, out, man, num_partitions=4)
+    sc = spark.sparkContext
+    group = f"resumed-rerun-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fully resumed rerun")
+    try:
+        r = run_pipeline(spark, corpus_path, out, man, num_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (r["skipped_parts"], r["docs_total"]) == (16, 0)
+    # manifest read + resume anti-join + part scan; 9 jobs when the
+    # rerun still went on to extract and write an empty output
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+
+
 def test_pipeline_observed_metrics_match_landed_output(spark, corpus_path, tmp_path):
     """The in-flight observe() metrics must equal what a readback scan
     of the landed output would compute (the previous source of truth)."""

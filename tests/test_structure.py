@@ -18,6 +18,10 @@
 * ``tests/goldens.py`` is the only module under ``tests/`` or
   ``scripts/`` that builds a path into ``tests/golden/``, so the golden
   tests and ``scripts/gen_goldens.py`` share one case-to-output rule.
+* ``xkit/pdfmini.py`` reads each PDF primitive one way: ``bytes.fromhex``
+  is called only in the hex reader ``_hex_bytes``, and no module-level
+  regex spells one ``/Key`` followed by an integer or an ``N G R``
+  reference — dict entries go through ``_int_entry`` / ``_ref_entry``.
 """
 
 from __future__ import annotations
@@ -183,3 +187,25 @@ def test_golden_dir_read_only_by_goldens_module():
         elif lines:
             offenders[_rel(path)] = lines
     assert not offenders, f"paths into tests/golden outside tests/goldens.py: {offenders}"
+
+
+_PDFMINI = _ROOT / "xkit" / "pdfmini.py"
+# one literal /Key (or the %s per-key template), then an integer capture:
+# rb"/Root\s+(\d+)\s+\d+\s+R", rb"/%s\s+(-?\d+)"
+_KEY_INT_PATTERN = re.compile(rb"^/(?:\w+|%s)\\s[*+]\(?(?:-\?)?\\d\+")
+
+
+def test_pdfmini_reads_hex_and_entries_through_shared_readers():
+    tree = _parse(_PDFMINI)
+    owners = [_top_level_owner(tree, n) for n in _calls(tree, "fromhex")]
+    assert owners == ["_hex_bytes"], f"bytes.fromhex outside the hex reader: {owners}"
+    offenders = [
+        (node.lineno, sub.value)
+        for node in tree.body
+        if not isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        for sub in ast.walk(node)
+        if isinstance(sub, ast.Constant)
+        and isinstance(sub.value, bytes)
+        and _KEY_INT_PATTERN.match(sub.value)
+    ]
+    assert not offenders, f"per-key integer/reference regexes: {offenders}"

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from xhtmlkit_spark.functions.binding import bind
+from xhtmlkit_spark.operators.text_stats import tokens_col
 
 __all__ = [
     "normalized_text",
@@ -52,7 +53,7 @@ def normalized_text(text: Column | str = "text") -> Column:
     # concat_ws would hash NULL text to md5(''), grouping null docs as
     # exact duplicates of genuinely-empty docs and diverging from the
     # oracle (DuckDB's list_aggregate over NULL is NULL)
-    return F.when(c.isNotNull(), F.lower(F.concat_ws(" ", F.split(F.trim(c), "\\s+"))))
+    return F.when(c.isNotNull(), F.lower(F.concat_ws(" ", tokens_col(c))))
 
 
 def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
@@ -95,7 +96,7 @@ def _positional_shingles(c: Column, k: int) -> Column:
     # greatest(NULL-k,1)=1 and the null-skipping concat_ws would give
     # every null doc the identical single empty shingle, making all of
     # them MinHash-collide into one quadratic LSH bucket
-    return F.when(c.isNotNull(), bind(F.split(F.trim(c), "\\s+"), body))
+    return F.when(c.isNotNull(), bind(tokens_col(c), body))
 
 
 _MINHASH_SENTINEL = "\uffff"  # sorts above any md5 hex digit
@@ -198,7 +199,7 @@ def simhash_col(text: Column | str = "text", bits: int = 60) -> Column:
     60 bits (15 hex) keeps the value comfortably inside BIGINT in both
     engines (no unsigned/overflow edge cases).
     """
-    toks = F.split(F.trim(F.col(text) if isinstance(text, str) else text), "\\s+")
+    toks = tokens_col(text)
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
     )

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from xhtmlkit_spark.functions.binding import bind
 from xhtmlkit_spark.functions.exactmath import ratio_u
+from xhtmlkit_spark.operators.text_stats import tokens_col
 
 __all__ = [
     "split_text_lines",
@@ -70,7 +71,7 @@ def word_chunk_lines(text: Column | str = "text", k: int = 8) -> Column:
     dropped. The token array is let-bound (`bind`) — a captured outer
     column inside a higher-order-function lambda is otherwise
     re-evaluated per chunk."""
-    toks = F.split(F.trim(_col(text)), "\\s+")
+    toks = tokens_col(text)
 
     def chunks(t: Column) -> Column:
         n_chunks = F.ceil(F.size(t) / F.lit(float(k))).cast("int")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xhtmlkit_spark.operators.text_stats import tokens_col
+
 __all__ = [
     "hash_fraction",
     "hash_sample",
@@ -157,7 +159,7 @@ def dsir_weights(
     """
     from xhtmlkit_spark.functions.binding import bind
 
-    toks = F.split(F.trim(F.lower(F.col(text))), "\\s+")
+    toks = tokens_col(F.lower(F.col(text)))
 
     # let-bind the split: inside bind, ``t`` is a lambda VARIABLE, so
     # the size()/slice() multi-refs (and the per-bigram transform) see

@@ -105,6 +105,19 @@ def run_pipeline(
     # resumed run never touches output it didn't write (a column-pruned
     # scan of the int part column here is ~free next to the span data)
     run_parts = [r["part"] for r in df.select("part").distinct().collect()]
+    summary = {
+        "run_id": run_id,
+        "docs_total": 0,
+        "spans_total": 0,
+        "skipped_parts": skipped_parts,
+        "output_path": output_path,
+        "t_extract_write": 0.0,
+        "t_metrics": 0.0,
+    }
+    if not run_parts:
+        # fully-resumed rerun (or empty input): nothing to extract,
+        # write or observe — zero totals, and no further job
+        return summary
     df = with_size_salt(df, num_partitions)
     out = extract_spans(df, options, passthrough=("part",))
     # column order for the partitioned sink: data cols first, part last
@@ -120,45 +133,37 @@ def run_pipeline(
     # row (no CSE across sibling aggregates), then they are projected
     # away before the sink.
     obs = Observation(f"xk_metrics_{run_id}")
-    if run_parts:
-        zero = F.lit(0).cast("long")
-        n_chars = F.aggregate(
-            F.col("spans"),
-            zero,
-            lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero),
-        )
-        out = out.withColumns(
-            {"_n_spans": F.size("spans").cast("long"), "_n_chars": n_chars}
-        )
-        exprs = []
-        for p in run_parts:
-            cond = F.col("part") == F.lit(p)
-            exprs += [
-                F.sum(F.when(cond, F.lit(1).cast("long"))).alias(f"d_{p}"),
-                F.sum(F.when(cond, F.col("_n_spans"))).alias(f"s_{p}"),
-                F.sum(F.when(cond, F.col("_n_chars"))).alias(f"c_{p}"),
-            ]
-        out = out.observe(obs, *exprs).drop("_n_spans", "_n_chars")
+    zero = F.lit(0).cast("long")
+    n_chars = F.aggregate(
+        F.col("spans"),
+        zero,
+        lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero),
+    )
+    out = out.withColumns({"_n_spans": F.size("spans").cast("long"), "_n_chars": n_chars})
+    exprs = []
+    for p in run_parts:
+        cond = F.col("part") == F.lit(p)
+        exprs += [
+            F.sum(F.when(cond, F.lit(1).cast("long"))).alias(f"d_{p}"),
+            F.sum(F.when(cond, F.col("_n_spans"))).alias(f"s_{p}"),
+            F.sum(F.when(cond, F.col("_n_chars"))).alias(f"c_{p}"),
+        ]
+    out = out.observe(obs, *exprs).drop("_n_spans", "_n_chars")
     xio.write_spans(out, output_path, fmt)
     t_extract_write = _time.monotonic() - t0
     t0 = _time.monotonic()
 
-    if run_parts:
-        m = obs.get
-        stats_rows = [
-            {
-                "part": p,
-                "n_docs": m[f"d_{p}"] or 0,
-                "n_spans": m[f"s_{p}"] or 0,
-                "n_chars": m[f"c_{p}"] or 0,
-            }
-            for p in run_parts
-            if m[f"d_{p}"]  # parts that produced no rows stay unfinished
-        ]
-    else:
-        # fully-resumed rerun (or empty input): nothing written, nothing
-        # to observe — totals are zero for a run that processed zero docs
-        stats_rows = []
+    m = obs.get
+    stats_rows = [
+        {
+            "part": p,
+            "n_docs": m[f"d_{p}"] or 0,
+            "n_spans": m[f"s_{p}"] or 0,
+            "n_chars": m[f"c_{p}"] or 0,
+        }
+        for p in run_parts
+        if m[f"d_{p}"]  # parts that produced no rows stay unfinished
+    ]
     if manifest_path:
         new_rows = [
             (r["part"], r["n_docs"], r["n_spans"], r["n_chars"], run_id)
@@ -173,12 +178,10 @@ def run_pipeline(
                 manifest_path,
             )
 
-    return {
-        "run_id": run_id,
-        "docs_total": sum(r["n_docs"] for r in stats_rows),
-        "spans_total": sum(r["n_spans"] for r in stats_rows),
-        "skipped_parts": skipped_parts,
-        "output_path": output_path,
-        "t_extract_write": round(t_extract_write, 2),
-        "t_metrics": round(_time.monotonic() - t0, 2),
-    }
+    summary.update(
+        docs_total=sum(r["n_docs"] for r in stats_rows),
+        spans_total=sum(r["n_spans"] for r in stats_rows),
+        t_extract_write=round(t_extract_write, 2),
+        t_metrics=round(_time.monotonic() - t0, 2),
+    )
+    return summary

@@ -32,6 +32,7 @@ from xhtmlkit_spark.operators.lines import line_dedup, split_text_lines
 from xhtmlkit_spark.operators.pii import with_pii_redaction
 from xhtmlkit_spark.operators.sampling import hash_fraction
 from xhtmlkit_spark.operators.text_stats import (
+    tokens_col,
     with_lang_guess,
     with_quality,
     with_token_counts,
@@ -81,7 +82,7 @@ def _excise_token_spans(docs, spans_df, tmp_col, n_spans_col, n_tokens_col):
         F.count(F.lit(1)).alias(n_spans_col),
         F.sum("tok_len").alias(n_tokens_col),
     )
-    toks = F.split(F.trim(F.col("text")), "\\s+")  # = the span tokenization
+    toks = tokens_col("text")  # = the span tokenization
     sp = F.col(tmp_col)
     kept = F.filter(
         F.transform(  # 2-param lambda = (element, index), 0-based

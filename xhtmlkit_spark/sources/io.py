@@ -28,6 +28,18 @@ __all__ = [
 ]
 
 
+def _binary_files(
+    spark: SparkSession, location: str, glob: str, recursive: bool, *cols: str
+) -> DataFrame:
+    """``binaryFile`` scan of the files under ``location`` matching
+    ``glob`` (subdirectories too when ``recursive``), projected to
+    ``cols`` — the one raw-file reader behind every file ingest."""
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    return reader.load(location).select(*cols)
+
+
 def ingest_html_files(
     spark: SparkSession, location: str, glob: str = "*.html", recursive: bool = False
 ) -> DataFrame:
@@ -60,10 +72,7 @@ def ingest_html_files(
     from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE
     from xkit.encoding import decode_html_bytes
 
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    raw = reader.load(location).select("path", "content")
+    raw = _binary_files(spark, location, glob, recursive, "path", "content")
 
     # resolved on the driver, closure-captured: binaryFile paths come
     # back as file: URIs over absolute paths
@@ -152,10 +161,7 @@ def ingest_warc(
     .warc.gz segments, thousands per crawl — natural parallelism);
     a re-partition after ingest rebalances giant-archive skew.
     """
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    raw = reader.load(location).select("content")
+    raw = _binary_files(spark, location, glob, recursive, "content")
     return raw.mapInPandas(_parse_warc_batches, _warc_corpus_schema())
 
 
@@ -259,10 +265,7 @@ def warc_cdx(
     import pandas as pd
     from pyspark.sql import types as T
 
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    raw = reader.load(location).select("path", "content")
+    raw = _binary_files(spark, location, glob, recursive, "path", "content")
 
     def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import base64

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from urllib.parse import urljoin
 
+from xkit.extract import _collapse
+
 __all__ = ["harvest_tables", "harvest_links", "harvest_media", "harvest_meta", "harvest_sitemap", "harvest_feed"]
 
 # content that never reaches harvested text (head-section tags can't
@@ -41,8 +43,10 @@ __all__ = ["harvest_tables", "harvest_links", "harvest_media", "harvest_meta", "
 _DROP = frozenset("script style noscript template".split())
 
 
-def _collapse(s: str) -> str:
-    return " ".join(s.split())
+def _effective_base(base: str | None, base_href: str | None) -> str | None:
+    """The document's first ``<base href>`` resolved against the caller's
+    ``base`` (how a browser composes them), else whichever is set."""
+    return urljoin(base, base_href) if (base and base_href) else (base_href or base)
 
 
 def harvest_tables(events: list) -> list:
@@ -166,7 +170,7 @@ def harvest_links(events: list, base: str | None = None) -> list:
                 if href:
                     done.append((order, href, _collapse("".join(buf))))
     done.sort()
-    eff = urljoin(base, base_href) if (base and base_href) else (base_href or base)
+    eff = _effective_base(base, base_href)
     return [(urljoin(eff, h) if eff else h, t) for _, h, t in done]
 
 
@@ -277,7 +281,7 @@ def harvest_media(events: list, base: str | None = None) -> list:
                 continue
             if ev[1] in _MEDIA_KIND and ctx:
                 ctx.pop()
-    eff = urljoin(base, base_href) if (base and base_href) else (base_href or base)
+    eff = _effective_base(base, base_href)
     return [
         ((urljoin(eff, u) if eff else u), t, k, a) for u, t, k, a in found
     ]
@@ -482,9 +486,7 @@ def harvest_meta(events: list, base: str | None = None) -> tuple:
                     if t and title is None:
                         title = t
     if canonical is not None:
-        eff = (
-            urljoin(base, base_href) if (base and base_href) else (base_href or base)
-        )
+        eff = _effective_base(base, base_href)
         if eff:
             canonical = urljoin(eff, canonical)
     return title, lang, canonical, meta

@@ -24,9 +24,14 @@ generator (:func:`make_fixture_pdf`, FIXTURES.md §6):
 * content streams using ``BT``/``ET`` text objects with ``Tf``, ``Td``
   and the ``Tj`` / ``TJ`` (array form) / ``'`` / ``"``
   (move-and-show) show-text operators,
-* strings in parenthesis form with ``\\(`` ``\\)`` ``\\\\``, named and
-  octal escapes, plus ``<hex>`` string form (whitespace-tolerant, odd
-  digit padded), WinAnsi/latin-1 bytes.
+* strings in parenthesis form, decoded in one left-to-right pass per
+  ISO 32000-1 §7.3.4.2: ``\\n \\r \\t \\b \\f \\( \\) \\\\``, 1–3
+  digit octal, backslash + EOL (LF, CR or CRLF) as a dropped line
+  continuation, and any other ``\\x`` read as ``x``; plus ``<hex>``
+  string form (whitespace-tolerant, odd digit padded), WinAnsi/latin-1
+  bytes. Every literal string — show text and the /Encrypt ``/O``
+  ``/U`` entries alike — goes through the same decoder, and every hex
+  string through the same hex reader.
 
 * **minimal /ToUnicode CMaps** for hex-string text: each page's
   ``/Resources /Font`` entries are followed to their ``/ToUnicode``
@@ -111,6 +116,7 @@ documented here and in FIXTURES.md.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 import zlib
@@ -141,22 +147,37 @@ _CONTENT_RE = re.compile(
     """,
     re.VERBOSE | re.DOTALL,
 )
-# single left-to-right pass: octal, named escapes, escaped delimiters,
-# and unknown \x (backslash dropped per the PDF rule) — sequential
-# .replace() passes corrupted strings like (\\101), resolving the
-# octal against an already-escaped backslash
-_ESC_RE = re.compile(rb"\\([0-7]{1,3}|.)", re.DOTALL)
-_NAMED_ESC = {b"n": b"\n", b"r": b"\r", b"t": b"\t"}
+# single left-to-right pass (ISO 32000-1 §7.3.4.2): octal, named
+# escapes, backslash + EOL as a dropped line continuation, and unknown
+# \x read as x — sequential .replace() passes corrupted strings like
+# (\\101), resolving the octal against an already-escaped backslash
+_ESC_RE = re.compile(rb"\\(\r\n|[0-7]{1,3}|.)", re.DOTALL)
+_NAMED_ESC = {
+    b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+    b"\r\n": b"", b"\r": b"", b"\n": b"",
+}
 
 
 def _unescape_pdf_bytes(body: bytes) -> bytes:
     def sub(m: re.Match) -> bytes:
         g = m.group(1)
-        if len(g) > 1 or g in b"01234567":
+        if b"0" <= g[:1] <= b"7":
             return bytes([int(g, 8) & 0xFF])
         return _NAMED_ESC.get(g, g)
 
     return _ESC_RE.sub(sub, body)
+
+
+def _hex_bytes(h: bytes) -> bytes | None:
+    """The bytes a PDF hex string spells: whitespace ignored, an odd
+    final digit padded with 0; None when it is not hex."""
+    h = b"".join(h.split())
+    if len(h) % 2:
+        h += b"0"
+    try:
+        return bytes.fromhex(h.decode("ascii"))
+    except ValueError:
+        return None
 
 
 def _string_text(raw: bytes, cmap: dict | None, width: int) -> str:
@@ -181,15 +202,6 @@ def _string_text(raw: bytes, cmap: dict | None, width: int) -> str:
             mapped = chr(code) if code < 256 else "�"
         out.append(mapped)
     return "".join(out)
-
-
-def _hex_string_text(hexbody: bytes, cmap: dict | None, width: int) -> str:
-    """Decode one <hex> string (whitespace allowed, odd digit pads 0)."""
-    h = re.sub(rb"\s+", b"", hexbody)
-    if len(h) % 2:
-        h += b"0"
-    # h is pure hex by the regex class — fromhex cannot fail
-    return _string_text(bytes.fromhex(h.decode("ascii")), cmap, width)
 
 
 def _scan_content(
@@ -219,11 +231,9 @@ def _scan_content(
                     )
                 )
         elif m.group("hex") is not None:
-            # <48656C6C6F> hex string form; whitespace allowed inside,
-            # odd trailing digit pads with 0 (PDF spec rule)
             if in_bt:
                 pending.append(
-                    _hex_string_text(m.group("hexbody"), cur_cmap, cur_width)
+                    _string_text(_hex_bytes(m.group("hexbody")), cur_cmap, cur_width)
                 )
         elif m.group("tf"):
             # font switch applies inside AND outside BT (text state
@@ -260,17 +270,20 @@ def _scan_content(
 
 _FILTER_RE = re.compile(rb"/Filter\s*(?:\[(?P<arr>[^\]]*)\]|/(?P<one>\w+))")
 _FILTER_NAME_RE = re.compile(rb"/(\w+)")
+_DECODEPARMS_RE = re.compile(rb"/(?:DecodeParms|DP)\s*<<([^>]*)>>")
 
 
 def _apply_filters(head: bytes, body: bytes) -> bytes | None:
     """Run the object dict's /Filter chain (array order) over a stream
-    body. Supported: FlateDecode, ASCIIHexDecode, ASCII85Decode. Any
-    unknown filter (or corrupt data) → None: the stream is skipped,
-    never mis-decoded."""
+    body, then its ``/DecodeParms`` predictor. Supported filters:
+    FlateDecode, ASCIIHexDecode, ASCII85Decode; predictors: PNG
+    (10-15) and byte-aligned TIFF 2. Any unknown filter or predictor
+    (or corrupt data) → None: the stream is skipped, never
+    mis-decoded."""
     m = _FILTER_RE.search(head)
     if m is None:
-        return body
-    if m.group("arr") is not None:
+        names = []
+    elif m.group("arr") is not None:
         names = [f.group(1) for f in _FILTER_NAME_RE.finditer(m.group("arr"))]
     else:
         names = [m.group("one")]
@@ -283,12 +296,8 @@ def _apply_filters(head: bytes, body: bytes) -> bytes | None:
             except zlib.error:
                 return None
         elif name == b"ASCIIHexDecode":
-            h = re.sub(rb"\s+", b"", body.split(b">", 1)[0])
-            if len(h) % 2:
-                h += b"0"
-            try:
-                body = bytes.fromhex(h.decode("ascii"))
-            except (ValueError, UnicodeDecodeError):
+            body = _hex_bytes(body.split(b">", 1)[0])
+            if body is None:
                 return None
         elif name == b"ASCII85Decode":
             import base64
@@ -302,14 +311,57 @@ def _apply_filters(head: bytes, body: bytes) -> bytes | None:
                 return None
         else:
             return None
-    return body
+    dp = _DECODEPARMS_RE.search(head)
+    if dp is None:
+        return body
+    parms = dp.group(1)
+    pred = _int_entry(parms, b"Predictor") or 1
+    if pred == 1:
+        return body
+    if pred != 2 and pred < 10:
+        return None  # unknown predictor: skip, not corrupt
+    undo = _tiff_predictor_undo if pred == 2 else _png_predictor_undo
+    return undo(
+        body,
+        _int_entry(parms, b"Columns") or 1,
+        _int_entry(parms, b"Colors") or 1,
+        _int_entry(parms, b"BitsPerComponent") or 8,
+    )
 
 
-_DECODEPARMS_RE = re.compile(rb"/(?:DecodeParms|DP)\s*<<([^>]*)>>")
-_PARM_INT_RE = {
-    k: re.compile(rb"/%s\s+(\d+)" % k)
-    for k in (b"Predictor", b"Columns", b"Colors", b"BitsPerComponent")
-}
+@functools.cache
+def _entry_re(key: bytes) -> re.Pattern:
+    """``/key`` followed by an integer, with the ``G R`` tail that makes
+    it an indirect reference when present — compiled once per key. The
+    optional tail never backtracks into the number: ``/Length 12 0 R``
+    is the reference 12, never the integer 1."""
+    return re.compile(rb"/%s\s+(-?\d+)(?:\s+\d+\s+(R))?" % key)
+
+
+def _int_entry(
+    d: bytes, key: bytes, data: bytes = b"", offsets: dict | None = None, depth: int = 0
+) -> int | None:
+    """The integer value of dict entry ``/key`` (first occurrence in
+    ``d``). An indirect ``N G R`` value resolves through
+    :func:`_object_at` when ``offsets`` is given, else reads None."""
+    m = _entry_re(key).search(d)
+    if m is None:
+        return None
+    if m.group(2) is None:
+        return int(m.group(1))
+    obj = _object_at(data, int(m.group(1)), offsets, depth + 1) if offsets else None
+    v = re.match(rb"\s*(-?\d+)", obj or b"")
+    return int(v.group(1)) if v else None
+
+
+def _ref_entry(d: bytes, key: bytes) -> int | None:
+    """Object number of the LAST ``/key N G R`` in ``d`` — scanned over
+    a whole file, the last trailer wins."""
+    n = None
+    for num, r in _entry_re(key).findall(d):
+        if r:
+            n = num
+    return None if n is None else int(n)
 
 
 def _png_predictor_undo(body: bytes, columns: int, colors: int, bits: int) -> bytes:
@@ -360,34 +412,7 @@ def _decode_stream(obj: bytes) -> bytes | None:
     m = _STREAM_RE.search(obj)
     if m is None:
         return None
-    head = obj[: m.start()]
-    body = _apply_filters(head, m.group(1))
-    if body is None:
-        return None
-    dp = _DECODEPARMS_RE.search(head)
-    if dp is not None:
-        parms = {
-            k.decode(): int(r.group(1)) if (r := rx.search(dp.group(1))) else None
-            for k, rx in _PARM_INT_RE.items()
-        }
-        pred = parms["Predictor"] or 1
-        if pred >= 10:
-            body = _png_predictor_undo(
-                body,
-                parms["Columns"] or 1,
-                parms["Colors"] or 1,
-                parms["BitsPerComponent"] or 8,
-            )
-        elif pred == 2:
-            body = _tiff_predictor_undo(
-                body,
-                parms["Columns"] or 1,
-                parms["Colors"] or 1,
-                parms["BitsPerComponent"] or 8,
-            )
-        elif pred != 1:
-            return None  # unknown predictor: skip, not corrupt
-    return body
+    return _apply_filters(obj[: m.start()], m.group(1))
 
 
 def _tiff_predictor_undo(body: bytes, columns: int, colors: int, bits: int) -> bytes:
@@ -405,19 +430,9 @@ def _tiff_predictor_undo(body: bytes, columns: int, colors: int, bits: int) -> b
     return bytes(out)
 
 
-# Standard-security-handler decryption (encrypted PDFs).
-# Scope: /Filter /Standard, EMPTY user password — the overwhelmingly
-# common "owner-locked but world-readable" case — across all four
-# generations: /V 1|2 + /R 2|3 (40/128-bit RC4), /V 4 + /R 4 (crypt
-# filters: /CFM /AESV2 = AES-128-CBC per-object keys, /CFM /V2 = RC4,
-# /CFM /Identity = pass-through), and /V 5 + /R 5|6 (AES-256 with the
-# file key recovered from /UE; R6 uses the hardened 2.B hash, which
-# runs AES-128-CBC inside its loop — xkit/aes.py, FIPS-197-verified).
-# A failed /U check (real user password) or an unknown scheme degrades
-# to skipped streams, never garbage. Per spec the xref stream and the
-# /Encrypt dict itself are NOT encrypted; ObjStm members inherit their
-# container's decryption.
-
+# Standard-security-handler decryption (scope and algorithms: module
+# doc). Per spec the xref stream and the /Encrypt dict itself are NOT
+# encrypted; ObjStm members inherit their container's decryption.
 _PDF_PAD = bytes(
     (
         0x28, 0xBF, 0x4E, 0x5E, 0x4E, 0x75, 0x8A, 0x41,
@@ -426,11 +441,7 @@ _PDF_PAD = bytes(
         0x2F, 0x0C, 0xA9, 0xFE, 0x64, 0x53, 0x69, 0x7A,
     )
 )
-_ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R")
 _ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>")
-_ENC_INT_RE = {
-    k: re.compile(rb"/%s\s+(-?\d+)" % k) for k in (b"V", b"R", b"P", b"Length")
-}
 _ENC_STR_RE = {
     k: re.compile(
         rb"/%s\s*(?:\(((?:\\.|[^\\()])*)\)|<([0-9A-Fa-f\s]*)>)" % k, re.DOTALL
@@ -438,8 +449,6 @@ _ENC_STR_RE = {
     for k in (b"O", b"U", b"UE", b"OE")
 }
 _CFM_RE = re.compile(rb"/CFM\s*/(\w+)")
-_OCT_ESC_RE = re.compile(rb"\\([0-7]{1,3})")
-_LENGTH_DIRECT_RE = re.compile(rb"/Length\s+(\d+)(?!\s+\d+\s+R)")
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
@@ -461,25 +470,11 @@ def _rc4(key: bytes, data: bytes) -> bytes:
 
 
 def _pdf_string_bytes(lit: bytes | None, hx: bytes | None) -> bytes | None:
-    """Raw bytes of a PDF string: literal form with \\-escapes (named,
-    octal, escaped delimiters) or hex form."""
+    """Raw bytes of a PDF string: literal form (the one escape decoder)
+    or hex form (the one hex reader)."""
     if hx is not None:
-        h = re.sub(rb"\s+", b"", hx)
-        if len(h) % 2:
-            h += b"0"
-        try:
-            return bytes.fromhex(h.decode("ascii"))
-        except (ValueError, UnicodeDecodeError):
-            return None
-    if lit is None:
-        return None
-    lit = _OCT_ESC_RE.sub(lambda m: bytes([int(m.group(1), 8) & 0xFF]), lit)
-    for esc, raw in (
-        (rb"\n", b"\n"), (rb"\r", b"\r"), (rb"\t", b"\t"), (rb"\b", b"\b"),
-        (rb"\f", b"\f"), (rb"\(", b"("), (rb"\)", b")"), (rb"\\", b"\\"),
-    ):
-        lit = lit.replace(esc, raw)
-    return lit
+        return _hex_bytes(hx)
+    return None if lit is None else _unescape_pdf_bytes(lit)
 
 
 def _std_file_key(
@@ -585,19 +580,13 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
     /O + /OE, R 5–6), and finally the empty user password — the order
     real readers use, so a document with an empty user password still
     opens when the caller supplies an unrelated password."""
-    ref = None
-    for m in _ENCRYPT_REF_RE.finditer(data):  # last trailer wins
-        ref = m
+    ref = _ref_entry(data, b"Encrypt")  # last trailer wins
     if ref is None:
         return None
-    enc = _object_at(data, int(ref.group(1)), offsets)  # never encrypted itself
+    enc = _object_at(data, ref, offsets)  # never encrypted itself
     if enc is None or re.search(rb"/Filter\s*/Standard\b", enc) is None:
         return None
-    ints = {
-        k.decode(): int(r.group(1)) if (r := rx.search(enc)) else None
-        for k, rx in _ENC_INT_RE.items()
-    }
-    v, r, p = ints["V"], ints["R"], ints["P"]
+    v, r, p = (_int_entry(enc, k, data, offsets) for k in (b"V", b"R", b"P"))
 
     def enc_str(name: bytes) -> bytes | None:
         m = _ENC_STR_RE[name].search(enc)
@@ -652,12 +641,10 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
     o = enc_str(b"O")
     if o is None or len(o) < 32:
         return None
-    id_m = None
-    for m in _ID_RE.finditer(data):
-        id_m = m
-    id0 = _pdf_string_bytes(None, id_m.group(1)) if id_m else b""
+    ids = _ID_RE.findall(data)  # last trailer wins
+    id0 = _hex_bytes(ids[-1]) if ids else b""  # pure hex: never None
     em = re.search(rb"/EncryptMetadata\s+false", enc) is None
-    length = ints["Length"] or (128 if v == 4 else 40)
+    length = _int_entry(enc, b"Length", data, offsets) or (128 if v == 4 else 40)
 
     candidates = list(dict.fromkeys((password, b"")))
     if password:
@@ -679,10 +666,10 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
 
     for pwd in candidates:
         key = _std_file_key(
-            o, p, id0 or b"", r, length, user_pwd=pwd, encrypt_metadata=em
+            o, p, id0, r, length, user_pwd=pwd, encrypt_metadata=em
         )
         if u is not None:
-            expect = _std_user_check(key, id0 or b"", r)
+            expect = _std_user_check(key, id0, r)
             if u[: len(expect)] != expect:
                 continue  # this candidate fails /U validation
         return _StdDecryptor(key, mode)
@@ -692,12 +679,10 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
 # classic xref-table machinery
 _XREF_SUB_RE = re.compile(rb"[ \t\r\n]*(\d+)[ \t]+(\d+)[ \t]*[\r\n]+")
 _XREF_ENT_RE = re.compile(rb"(\d{10})\s(\d{5})\s([nf])")
-_ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 _KIDS_RE = re.compile(rb"/Kids\s*\[((?:[^\[\]])*)\]")
-_CONTENTS_ONE_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
 _CONTENTS_ARR_RE = re.compile(rb"/Contents\s*\[((?:[^\[\]])*)\]")
-_PAGES_REF_RE = re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
+_OBJ_AT_RE = re.compile(rb"\s*(\d+)\s+(\d+)\s+obj\b")
 
 
 def _parse_xref_tables(data: bytes) -> dict:
@@ -734,7 +719,7 @@ def _object_at(
     """Resolve one object: int entries are byte offsets (classic xref /
     xref-stream type 1), tuple entries are ("container", idx) locations
     inside a /Type /ObjStm (xref-stream type 2). With ``dec`` set, the
-    object's stream body is RC4-decrypted in place (before any /Filter
+    object's stream body is decrypted in place (before any /Filter
     decode) using its (objnum, gen) key."""
     loc = offsets.get(objnum)
     if loc is None:
@@ -745,8 +730,8 @@ def _object_at(
         return _objstm_object(data, loc[0], loc[1], offsets, _depth + 1, dec)
     if loc >= len(data):
         return None
-    m = re.compile(rb"\s*%d\s+(\d+)\s+obj\b" % objnum).match(data, loc)
-    if m is None:
+    m = _OBJ_AT_RE.match(data, loc)
+    if m is None or int(m.group(1)) != objnum:
         return None
     end = data.find(b"endobj", m.end())
     # an object whose STREAM contains the bytes "endobj" would truncate
@@ -758,18 +743,14 @@ def _object_at(
         if sm is not None:
             body = sm.group(1)
             # _STREAM_RE's capture keeps the EOL that separates the body
-            # from `endstream`; RC4 is positional, so decrypt only the
-            # declared /Length bytes and leave the framing bytes alone
-            lm = _LENGTH_DIRECT_RE.search(obj[: sm.start()])
-            n = int(lm.group(1)) if lm else len(body)
-            n = min(n, len(body))
-            plain = dec.decrypt(objnum, int(m.group(1)), body[:n]) + body[n:]
+            # from `endstream`; RC4 is positional and AES needs whole
+            # blocks, so decrypt only the declared /Length bytes (direct
+            # or an indirect N G R) and leave the framing bytes alone
+            n = _int_entry(obj[: sm.start()], b"Length", data, offsets, _depth)
+            n = len(body) if n is None or n < 0 else min(n, len(body))
+            plain = dec.decrypt(objnum, int(m.group(2)), body[:n]) + body[n:]
             obj = obj[: sm.start(1)] + plain + obj[sm.end(1) :]
     return obj
-
-
-_OBJSTM_N_RE = re.compile(rb"/N\s+(\d+)")
-_OBJSTM_FIRST_RE = re.compile(rb"/First\s+(\d+)")
 
 
 def _objstm_object(
@@ -781,14 +762,11 @@ def _objstm_object(
     obj = _object_at(data, container, offsets, depth, dec)
     if obj is None:
         return None
-    n_m = _OBJSTM_N_RE.search(obj)
-    f_m = _OBJSTM_FIRST_RE.search(obj)
-    if n_m is None or f_m is None:
-        return None
-    body = _decode_stream(obj)
+    n = _int_entry(obj, b"N", data, offsets, depth)
+    first = _int_entry(obj, b"First", data, offsets, depth)
+    body = _decode_stream(obj) if n is not None and first is not None else None
     if body is None:
         return None
-    n, first = int(n_m.group(1)), int(f_m.group(1))
     header = body[:first].split()
     if idx < 0 or idx >= n or 2 * idx + 1 >= len(header):
         return None
@@ -803,7 +781,6 @@ def _objstm_object(
 _OBJ_HEADER_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
 _W_RE = re.compile(rb"/W\s*\[\s*(\d+)\s+(\d+)\s+(\d+)\s*\]")
 _INDEX_RE = re.compile(rb"/Index\s*\[((?:\s*\d+)+)\s*\]")
-_SIZE_RE = re.compile(rb"/Size\s+(\d+)")
 
 
 def _balanced_dict(data: bytes, i: int) -> bytes | None:
@@ -842,7 +819,7 @@ def _parse_xref_streams(data: bytes) -> dict:
         if d is None or b"/XRef" not in d:
             continue
         w = _W_RE.search(d)
-        size = _SIZE_RE.search(d)
+        size = _int_entry(d, b"Size")
         if w is None or size is None:
             continue
         w1, w2, w3 = (int(w.group(k)) for k in (1, 2, 3))
@@ -854,7 +831,7 @@ def _parse_xref_streams(data: bytes) -> dict:
             nums = [int(x) for x in idx_m.group(1).split()]
             sections = list(zip(nums[0::2], nums[1::2]))
         else:
-            sections = [(0, int(size.group(1)))]
+            sections = [(0, size)]
         obj_end = data.find(b"endobj", i)
         body = _decode_stream(data[i : obj_end if obj_end >= 0 else len(data)])
         if body is None:
@@ -880,10 +857,8 @@ def _parse_xref_streams(data: bytes) -> dict:
     return locs
 
 
-_TOUNICODE_RE = re.compile(rb"/ToUnicode\s+(\d+)\s+\d+\s+R")
 _TYPE0_RE = re.compile(rb"/Subtype\s*/Type0\b")
 _FONTDICT_RE = re.compile(rb"/Font\s*<<(.*?)>>", re.DOTALL)
-_RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
 _HEXVAL_RE = re.compile(rb"<([0-9A-Fa-f]+)>")
 _BFTOK_RE = re.compile(rb"<([0-9A-Fa-f]+)>|(\[)|(\])")
 _BFCHAR_SEC_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.DOTALL)
@@ -899,10 +874,10 @@ def _parse_tounicode(body: bytes) -> tuple[dict, int]:
     width = max(1, len(m.group(1)) // 2) if m else 2
 
     def _dst_text(dst_hex: bytes) -> str | None:
-        h = dst_hex if len(dst_hex) % 4 == 0 else b"00" + dst_hex
-        try:
-            return bytes.fromhex(h.decode("ascii")).decode("utf-16-be")
-        except (ValueError, UnicodeDecodeError):
+        raw = _hex_bytes(dst_hex)  # pure hex by the token regex
+        try:  # a 1-byte destination is the UTF-16 unit 00xx
+            return (b"\0" * (len(raw) % 2) + raw).decode("utf-16-be")
+        except UnicodeDecodeError:
             return None
 
     for sec in _BFCHAR_SEC_RE.finditer(body):
@@ -978,9 +953,9 @@ def _page_fonts(
     from the table. Pages without any ToUnicode get ``({}, (None, 2))``
     and keep the latin-1 hex rule."""
     scopes = [node]
-    res_ref = _RESOURCES_REF_RE.search(node)
+    res_ref = _ref_entry(node, b"Resources")
     if res_ref is not None:
-        res = _object_at(data, int(res_ref.group(1)), offsets, dec=dec)
+        res = _object_at(data, res_ref, offsets, dec=dec)
         if res is not None:
             scopes.append(res)
     fonts: dict = {}
@@ -1002,10 +977,10 @@ def _page_fonts(
             # CIDToGIDMap never matters for text extraction (it maps
             # CID→glyph for RENDERING; ToUnicode maps code→text).
             is_type0 = _TYPE0_RE.search(font) is not None
-            tu = _TOUNICODE_RE.search(font)
+            tu = _ref_entry(font, b"ToUnicode")
             body = None
             if tu is not None:
-                tu_obj = _object_at(data, int(tu.group(1)), offsets, dec=dec)
+                tu_obj = _object_at(data, tu, offsets, dec=dec)
                 if tu_obj is not None:
                     body = _decode_stream(tu_obj)
             m = {}
@@ -1041,15 +1016,13 @@ def _page_content_objs(data: bytes, offsets: dict, dec=None) -> list | None:
     ``(content_obj_nums, page_node_bytes)`` per page (document order) —
     the node feeds :func:`_page_cmap` — or None when the walk cannot
     complete (→ caller falls back)."""
-    root = None
-    for m in _ROOT_RE.finditer(data):  # last trailer wins
-        root = int(m.group(1))
+    root = _ref_entry(data, b"Root")  # last trailer wins
     if root is None:
         return None
     catalog = _object_at(data, root, offsets, dec=dec)
     if catalog is None:
         return None
-    pages_ref = _PAGES_REF_RE.search(catalog)
+    pages_ref = _ref_entry(catalog, b"Pages")
     if pages_ref is None:
         return None
     pages: list = []
@@ -1073,11 +1046,11 @@ def _page_content_objs(data: bytes, offsets: dict, dec=None) -> list | None:
                 ([int(r.group(1)) for r in _REF_RE.finditer(arr.group(1))], node)
             )
             return
-        one = _CONTENTS_ONE_RE.search(node)
+        one = _ref_entry(node, b"Contents")
         if one is not None:
-            pages.append(([int(one.group(1))], node))
+            pages.append(([one], node))
 
-    walk(int(pages_ref.group(1)), 0)
+    walk(pages_ref, 0)
     return pages if pages else None
 
 
