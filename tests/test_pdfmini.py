@@ -855,3 +855,121 @@ def test_fallback_applies_decode_parms_predictor():
         b"endstream\nendobj\n%%%%EOF" % (len(comp), columns, comp)
     )
     assert extract_pdf_text(pdf) == ["predicted text"]
+
+
+def _aes_encrypt_stream(dec, num: int, plain: bytes) -> bytes:
+    """The inverse of ``dec.decrypt(num, 0, ·)`` for the AES modes
+    (aesv2: per-object MD5 key with the sAlT suffix; aesv3: the file
+    key itself), with a zero IV."""
+    import hashlib
+
+    from xkit.aes import aes_cbc_encrypt
+
+    key = dec._key
+    if dec._mode == "aesv2":
+        salt = num.to_bytes(3, "little") + bytes(2) + b"sAlT"
+        key = hashlib.md5(key + salt).digest()[:16]
+    pad = 16 - len(plain) % 16
+    return bytes(16) + aes_cbc_encrypt(key, bytes(16), plain + bytes([pad]) * pad)
+
+
+@pytest.mark.parametrize("r", [4, 5])  # R6 decrypts streams like R5
+def test_encrypted_stream_with_length_in_object_stream(r):
+    """``/Length 12 0 R`` whose object 12 lives in an encrypted ObjStm
+    (a type-2 xref-stream entry): the container is decrypted before
+    its members are read, so the length resolves and exactly the
+    declared AES bytes are decrypted."""
+    from xkit.pdfmini import _find_encryption, _parse_xref_tables
+
+    for compress in (False, True):
+        pdf = make_fixture_pdf_encrypted([["Hello world"]], r=r, compress=compress)
+        raw = pdf.encode("latin-1")
+        dec = _find_encryption(raw, _parse_xref_tables(raw))
+        assert dec is not None and dec._mode in ("aesv2", "aesv3")
+        obj4 = re.search(r"4 0 obj\n<< /Length (\d+)(.*?)endobj", pdf, re.DOTALL)
+        header = b"12 0\n"
+        stm = _aes_encrypt_stream(dec, 20, header + obj4.group(1).encode())
+        container = (
+            "20 0 obj\n<< /Type /ObjStm /N 1 /First %d /Length %d >>\n"
+            "stream\n%s\nendstream\nendobj"
+            % (len(header), len(stm), stm.decode("latin-1"))
+        )
+        row = bytes([2]) + (20).to_bytes(2, "big") + bytes([0])  # 12 → (20, 0)
+        xref_stm = (
+            "21 0 obj\n<< /Type /XRef /Size 22 /W [1 2 1] /Index [12 1] "
+            "/Length 4 >>\nstream\n%s\nendstream\nendobj" % row.decode("latin-1")
+        )
+        edited = _rebuild(
+            pdf,
+            {
+                4: obj4.group(0).replace(
+                    "/Length %s" % obj4.group(1), "/Length 12 0 R", 1
+                ),
+                20: container,
+                21: xref_stm,
+            },
+        )
+        assert "12 0 obj" not in edited
+        got = extract_pdf_text(edited)
+        assert got == ["Hello world"], (compress, got)
+
+
+@pytest.mark.parametrize(
+    "key,value",
+    [
+        ("Columns", -1),
+        ("Colors", -1),
+        ("BitsPerComponent", -1),
+        ("Columns", 10**6),  # one row wider than the whole body
+    ],
+)
+def test_corrupt_predictor_parms_skip_the_stream(key, value):
+    """A negative /DecodeParms count, or a row wider than the body, is
+    corrupt: the stream is skipped, never raised on — on a content
+    stream (no text) and on an xref stream (the byte-order fallback
+    still finds the text)."""
+    import zlib
+
+    parms = {"Predictor": 12, "Columns": 4}
+    parms[key] = value
+    dp = "/DecodeParms << %s >>" % " ".join("/%s %d" % kv for kv in parms.items())
+    comp = zlib.compress(b"BT (Hello world) Tj ET").decode("latin-1")
+    pdf = make_fixture_pdf([["unused"]])
+
+    def with_content(dp: str) -> str:
+        return _rebuild(
+            pdf,
+            {
+                4: "4 0 obj\n<< /Length %d /Filter /FlateDecode %s >>\n"
+                "stream\n%s\nendstream\nendobj" % (len(comp), dp, comp)
+            },
+        )
+
+    assert extract_pdf_text(with_content("")) == ["Hello world"]  # control
+    assert extract_pdf_text(with_content(dp)) == []
+
+    pdf15 = make_fixture_pdf_15([["Hello world"]], use_objstm=False)
+    assert pdf15.count("/DecodeParms << /Predictor 12 /Columns 4 >>") == 1
+    bad_xref = pdf15.replace("/DecodeParms << /Predictor 12 /Columns 4 >>", dp)
+    assert extract_pdf_text(bad_xref) == ["Hello world"]
+
+
+def test_one_object_reference_reads_its_first_entry():
+    """Inside one object the first ``/Contents N G R`` is the page's
+    own: an inline annotation's later ``/Contents`` reference does not
+    replace it (the last-match rule is for whole-file trailer keys)."""
+    pdf = make_fixture_pdf([["Hello world"]])
+    page = re.search(r"3 0 obj\n.*?endobj", pdf, re.DOTALL).group(0)
+    annot = page.replace(
+        "/Contents 4 0 R", "/Contents 4 0 R /Annots [<< /Subtype /Text /Contents 9 0 R >>]"
+    )
+    note = "BT (annotation) Tj ET"
+    edited = _rebuild(
+        pdf,
+        {
+            3: annot,
+            9: "9 0 obj\n<< /Length %d >>\nstream\n%s\nendstream\nendobj" % (len(note), note),
+        },
+    )
+    assert "/Contents 9 0 R" in edited
+    assert extract_pdf_text(edited) == ["Hello world"]

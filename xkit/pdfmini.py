@@ -29,9 +29,9 @@ generator (:func:`make_fixture_pdf`, FIXTURES.md §6):
   digit octal, backslash + EOL (LF, CR or CRLF) as a dropped line
   continuation, and any other ``\\x`` read as ``x``; plus ``<hex>``
   string form (whitespace-tolerant, odd digit padded), WinAnsi/latin-1
-  bytes. Every literal string — show text and the /Encrypt ``/O``
-  ``/U`` entries alike — goes through the same decoder, and every hex
-  string through the same hex reader.
+  bytes. Every string — show text and the /Encrypt ``/O`` ``/U``
+  entries alike — is matched by the same lexer, a literal one decoded
+  by the same decoder and a hex one by the same hex reader.
 
 * **minimal /ToUnicode CMaps** for hex-string text: each page's
   ``/Resources /Font`` entries are followed to their ``/ToUnicode``
@@ -60,7 +60,8 @@ generator (:func:`make_fixture_pdf`, FIXTURES.md §6):
 * **xref STREAMS and object STREAMS** (PDF 1.5+): every object whose
   dict says ``/Type /XRef`` is decoded (its /Filter chain, then the
   ``/DecodeParms`` PNG predictor — None/Sub/Up/Average/Paeth — when
-  present), its ``/W``-field binary entries parsed per ``/Index``
+  present; a negative count or a row wider than the stream skips
+  it), its ``/W``-field binary entries parsed per ``/Index``
   sections; type-1 entries are byte offsets, type-2 entries locate
   objects inside ``/Type /ObjStm`` containers (header of ``/N``
   "objnum offset" pairs after ``/First``). Classic tables and xref
@@ -91,6 +92,10 @@ generator (:func:`make_fixture_pdf`, FIXTURES.md §6):
     (SHA-256/384/512 over AES-128-CBC rounds), /R 5 the deprecated
     plain SHA-256. Password validation against ``/U[:32]`` happens
     before any stream is touched.
+
+  Each encrypted stream decrypts exactly its declared ``/Length``
+  bytes, a direct integer or an indirect ``N G R`` (also one stored in
+  an encrypted ObjStm), never the EOL before ``endstream``.
 
   The AES core is xkit/aes.py — pure-Python FIPS-197 (T-table form),
   verified against the appendix C vectors. Failing every password
@@ -130,13 +135,16 @@ __all__ = ["extract_pdf_text", "make_fixture_pdf"]
 # inflate (~1/128 of FlateDecode streams, silently). Trailing EOL is
 # stripped per-filter below instead.
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
+# The one PDF string lexer: a literal ``(body)`` or a hex ``<hexbody>``
+# string. Content streams and dict string entries both match through it.
+_STRING_TOKEN = rb"\((?P<body>(?:\\.|[^\\()])*)\)|<(?P<hexbody>[0-9A-Fa-f\s]*)>"
 # One combined token scan per content stream: strings are matched FIRST
 # so an operator-looking substring INSIDE a string ('GET' contains
 # 'ET') can never terminate a text object — the old split-on-BT..ET
 # approach silently lost such blocks.
 _CONTENT_RE = re.compile(
-    rb"""(?P<str>\((?P<body>(?:\\.|[^\\()])*)\))
-      | (?P<hex><(?P<hexbody>[0-9A-Fa-f\s]*)>)
+    _STRING_TOKEN
+    + rb"""
       | \b(?P<bt>BT)\b
       | \b(?P<et>ET)\b
       | \b(?P<tj>Tj)\b
@@ -223,18 +231,11 @@ def _scan_content(
     pending: list[str] = []  # strings seen since the last show op
     cur_cmap, cur_width = cmap, code_width
     for m in _CONTENT_RE.finditer(body):
-        if m.group("str") is not None:
+        lit, hx = m.group("body", "hexbody")
+        if lit is not None or hx is not None:
             if in_bt:
-                pending.append(
-                    _string_text(
-                        _unescape_pdf_bytes(m.group("body")), cur_cmap, cur_width
-                    )
-                )
-        elif m.group("hex") is not None:
-            if in_bt:
-                pending.append(
-                    _string_text(_hex_bytes(m.group("hexbody")), cur_cmap, cur_width)
-                )
+                raw = _pdf_string_bytes(lit, hx)
+                pending.append(_string_text(raw, cur_cmap, cur_width))
         elif m.group("tf"):
             # font switch applies inside AND outside BT (text state
             # persists across text objects)
@@ -320,13 +321,16 @@ def _apply_filters(head: bytes, body: bytes) -> bytes | None:
         return body
     if pred != 2 and pred < 10:
         return None  # unknown predictor: skip, not corrupt
-    undo = _tiff_predictor_undo if pred == 2 else _png_predictor_undo
-    return undo(
-        body,
-        _int_entry(parms, b"Columns") or 1,
-        _int_entry(parms, b"Colors") or 1,
-        _int_entry(parms, b"BitsPerComponent") or 8,
+    cols, colors, bits = (
+        _int_entry(parms, k) or default
+        for k, default in ((b"Columns", 1), (b"Colors", 1), (b"BitsPerComponent", 8))
     )
+    # a negative count, or one row wider than the whole body, is
+    # corrupt: skip the stream rather than size a row buffer from it
+    if min(cols, colors, bits) < 1 or cols * colors * bits > 8 * len(body):
+        return None
+    undo = _tiff_predictor_undo if pred == 2 else _png_predictor_undo
+    return undo(body, cols, colors, bits)
 
 
 @functools.cache
@@ -339,29 +343,42 @@ def _entry_re(key: bytes) -> re.Pattern:
 
 
 def _int_entry(
-    d: bytes, key: bytes, data: bytes = b"", offsets: dict | None = None, depth: int = 0
+    d: bytes, key: bytes, data=b"", offsets: dict | None = None, depth=0, dec=None
 ) -> int | None:
     """The integer value of dict entry ``/key`` (first occurrence in
     ``d``). An indirect ``N G R`` value resolves through
-    :func:`_object_at` when ``offsets`` is given, else reads None."""
+    :func:`_object_at` (decrypting an ObjStm container with ``dec``)
+    when ``offsets`` is given, else reads None."""
     m = _entry_re(key).search(d)
     if m is None:
         return None
     if m.group(2) is None:
         return int(m.group(1))
-    obj = _object_at(data, int(m.group(1)), offsets, depth + 1) if offsets else None
+    n = int(m.group(1))
+    obj = _object_at(data, n, offsets, depth + 1, dec) if offsets else None
     v = re.match(rb"\s*(-?\d+)", obj or b"")
     return int(v.group(1)) if v else None
 
 
-def _ref_entry(d: bytes, key: bytes) -> int | None:
-    """Object number of the LAST ``/key N G R`` in ``d`` — scanned over
-    a whole file, the last trailer wins."""
-    n = None
-    for num, r in _entry_re(key).findall(d):
-        if r:
-            n = num
-    return None if n is None else int(n)
+def _ref_entry(d: bytes, key: bytes, last: bool = False) -> int | None:
+    """Object number of the first ``/key N G R`` in ``d`` (one object's
+    own entry), or with ``last`` of the last one: scanned over a whole
+    file, the last trailer wins."""
+    refs = [num for num, r in _entry_re(key).findall(d) if r]
+    return int(refs[-1 if last else 0]) if refs else None
+
+
+@functools.cache
+def _str_entry_re(key: bytes) -> re.Pattern:
+    """``/key`` followed by a string (the one lexer), compiled once per key."""
+    return re.compile(rb"/%s\s*(?:%s)" % (key, _STRING_TOKEN), re.DOTALL)
+
+
+def _str_entry(d: bytes, key: bytes) -> bytes | None:
+    """Raw bytes of dict entry ``/key``'s string value (first occurrence
+    in ``d``), or None when absent."""
+    m = _str_entry_re(key).search(d)
+    return _pdf_string_bytes(*m.group("body", "hexbody")) if m else None
 
 
 def _png_predictor_undo(body: bytes, columns: int, colors: int, bits: int) -> bytes:
@@ -442,12 +459,6 @@ _PDF_PAD = bytes(
     )
 )
 _ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>")
-_ENC_STR_RE = {
-    k: re.compile(
-        rb"/%s\s*(?:\(((?:\\.|[^\\()])*)\)|<([0-9A-Fa-f\s]*)>)" % k, re.DOTALL
-    )
-    for k in (b"O", b"U", b"UE", b"OE")
-}
 _CFM_RE = re.compile(rb"/CFM\s*/(\w+)")
 
 
@@ -580,25 +591,20 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
     /O + /OE, R 5–6), and finally the empty user password — the order
     real readers use, so a document with an empty user password still
     opens when the caller supplies an unrelated password."""
-    ref = _ref_entry(data, b"Encrypt")  # last trailer wins
+    ref = _ref_entry(data, b"Encrypt", last=True)
     if ref is None:
         return None
     enc = _object_at(data, ref, offsets)  # never encrypted itself
     if enc is None or re.search(rb"/Filter\s*/Standard\b", enc) is None:
         return None
     v, r, p = (_int_entry(enc, k, data, offsets) for k in (b"V", b"R", b"P"))
-
-    def enc_str(name: bytes) -> bytes | None:
-        m = _ENC_STR_RE[name].search(enc)
-        return _pdf_string_bytes(m.group(1), m.group(2)) if m else None
-
-    u = enc_str(b"U")
+    u = _str_entry(enc, b"U")
 
     if v == 5 and r in (5, 6):
         # AES-256: recover the file key from /UE (user path) or /OE
         # (owner path) per algorithm 2.A; R5 is the deprecated
         # plain-SHA-256 variant, R6 the hardened 2.B hash
-        ue = enc_str(b"UE")
+        ue = _str_entry(enc, b"UE")
         if u is None or len(u) < 48 or ue is None or len(ue) < 32:
             return None
         vsalt, ksalt = u[32:40], u[40:48]
@@ -615,7 +621,7 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
                 return _StdDecryptor(key, "aesv3")
         if password:
             # owner attempt: the owner hash covers the 48 /U bytes
-            o5, oe = enc_str(b"O"), enc_str(b"OE")
+            o5, oe = _str_entry(enc, b"O"), _str_entry(enc, b"OE")
             if o5 is not None and len(o5) >= 48 and oe is not None and len(oe) >= 32:
                 ovsalt, oksalt = o5[32:40], o5[40:48]
                 if h5(password, ovsalt, u[:48]) == o5[:32]:
@@ -638,7 +644,7 @@ def _find_encryption(data: bytes, offsets: dict, password: bytes = b""):
             return None  # pass-through: document effectively unencrypted
         elif name != b"V2":
             return None  # unknown method — skip streams, never garbage
-    o = enc_str(b"O")
+    o = _str_entry(enc, b"O")
     if o is None or len(o) < 32:
         return None
     ids = _ID_RE.findall(data)  # last trailer wins
@@ -722,11 +728,9 @@ def _object_at(
     object's stream body is decrypted in place (before any /Filter
     decode) using its (objnum, gen) key."""
     loc = offsets.get(objnum)
-    if loc is None:
+    if loc is None or _depth > 4:  # corrupt self-referential chains
         return None
     if isinstance(loc, tuple):
-        if _depth > 4:  # corrupt self-referential containers
-            return None
         return _objstm_object(data, loc[0], loc[1], offsets, _depth + 1, dec)
     if loc >= len(data):
         return None
@@ -746,7 +750,7 @@ def _object_at(
             # from `endstream`; RC4 is positional and AES needs whole
             # blocks, so decrypt only the declared /Length bytes (direct
             # or an indirect N G R) and leave the framing bytes alone
-            n = _int_entry(obj[: sm.start()], b"Length", data, offsets, _depth)
+            n = _int_entry(obj[: sm.start()], b"Length", data, offsets, _depth, dec)
             n = len(body) if n is None or n < 0 else min(n, len(body))
             plain = dec.decrypt(objnum, int(m.group(2)), body[:n]) + body[n:]
             obj = obj[: sm.start(1)] + plain + obj[sm.end(1) :]
@@ -762,8 +766,8 @@ def _objstm_object(
     obj = _object_at(data, container, offsets, depth, dec)
     if obj is None:
         return None
-    n = _int_entry(obj, b"N", data, offsets, depth)
-    first = _int_entry(obj, b"First", data, offsets, depth)
+    n = _int_entry(obj, b"N", data, offsets, depth, dec)
+    first = _int_entry(obj, b"First", data, offsets, depth, dec)
     body = _decode_stream(obj) if n is not None and first is not None else None
     if body is None:
         return None
@@ -1016,7 +1020,7 @@ def _page_content_objs(data: bytes, offsets: dict, dec=None) -> list | None:
     ``(content_obj_nums, page_node_bytes)`` per page (document order) —
     the node feeds :func:`_page_cmap` — or None when the walk cannot
     complete (→ caller falls back)."""
-    root = _ref_entry(data, b"Root")  # last trailer wins
+    root = _ref_entry(data, b"Root", last=True)
     if root is None:
         return None
     catalog = _object_at(data, root, offsets, dec=dec)
