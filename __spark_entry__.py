@@ -1540,7 +1540,7 @@ def _q_media_features(spark, sf_dir):
 
 
 def _q_media_frames(spark, sf_dir):
-    """Video frame sampling (mapInPandas 1→N fan-out). Payloads are
+    """Video frame sampling (a 1→N fan-out row stage). Payloads are
     Python-generated fakes (no codec libs — decode_media seam), so no
     SQL twin exists → rows-only; determinism + fan-out shape are pinned
     by tests/test_operators.py."""

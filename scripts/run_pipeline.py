@@ -29,7 +29,7 @@ def main() -> None:
         help="corpus source: landed parquet/Iceberg table, raw Common "
         "Crawl .warc(.gz) archives, or a directory tree of .html/.pdf "
         "files (the two raw formats parse through xkit in the same "
-        "mapInPandas ingest the batch sources use)",
+        "row-kernel ingest the batch sources use)",
     )
     ap.add_argument("--output", required=True)
     ap.add_argument("--manifest", default=None)

@@ -821,6 +821,10 @@ _ESCAPE_TABLE = [
     (rb"\q", b"q"),  # unknown escape: the backslash is dropped
     (rb"\(", b"("),
     (b"a\\\nb", b"ab"),  # backslash + EOL: line continuation
+    (b"a\r\nb", b"a\nb"),  # unescaped EOL (CRLF, CR or LF): one LF
+    (b"a\rb", b"a\nb"),
+    (b"a\nb", b"a\nb"),
+    (b"a\r\rb", b"a\n\nb"),
 ]
 
 
@@ -833,6 +837,19 @@ def test_literal_string_escape_table():
         pdf = b"%PDF-1.4\nstream\nBT (<" + body + b">) Tj ET\nendstream"
         got = extract_pdf_text(pdf)
         assert got == ["<%s>" % want.decode("latin-1")], (body, got)
+
+
+def test_literal_string_nests_balanced_parentheses():
+    """Balanced unescaped parentheses belong to a literal string (ISO
+    32000-1 §7.3.4.2), in show text and in dict string entries alike;
+    an escaped one does not count towards the balance."""
+    from xkit.pdfmini import _str_entry
+
+    pdf = b"%PDF-1.4\nstream\nBT (a(b)c) Tj ET\nendstream"
+    assert extract_pdf_text(pdf) == ["a(b)c"]
+    pdf = b"%PDF-1.4\nstream\nBT (x(y\\)(z))w) Tj ET\nendstream"
+    assert extract_pdf_text(pdf) == ["x(y)(z))w"]
+    assert _str_entry(b"<< /T (a(b(c))d) /U (e) >>", b"T") == b"a(b(c))d"
 
 
 def test_fallback_applies_decode_parms_predictor():

@@ -252,6 +252,52 @@ def test_null_spans_row():
     assert kept["first_kind"] == "html" and kept["meta"] == [("n", "1")]
 
 
+def test_run_row_stage_fan_out_nulls_and_binary(spark):
+    """The row kernel: 0, 1 and N output rows per input row, a NULL
+    input value, binary in and out, and a spans column built from a
+    ``(k, t, m, o)`` tuple (None → a NULL list); a batch in which no row
+    yields anything is an empty batch of the output schema."""
+    from pyspark.sql import types as T
+
+    from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE, run_row_stage
+
+    out = (
+        ("key", T.StringType()),
+        ("i", T.IntegerType()),
+        ("blob", T.BinaryType()),
+        ("spans", SPANS_TYPE),
+    )
+
+    def rows(key, n, blob):
+        if n is None:
+            return [(key, None, blob, None)]
+        return [(key, i, blob[i:], (["text"], [key], [None], [i])) for i in range(n)]
+
+    df = spark.createDataFrame(
+        [("zero", 0, b"ab", "x"), ("one", 1, b"\x00\xff", "x"),
+         ("three", 3, b"xyz", "x"), ("null", None, None, "x")],
+        "key string, n int, blob binary, unused string",
+    ).coalesce(1)
+    res = run_row_stage(df, ["key", "n", "blob"], rows, out)
+    assert [(f.name, f.dataType) for f in res.schema] == list(out)
+    got = sorted(
+        (r["key"], r["i"], r["blob"], r["spans"] and [tuple(s) for s in r["spans"]])
+        for r in res.collect()
+    )
+    assert got == [
+        ("null", None, None, None),
+        ("one", 0, b"\x00\xff", [("text", "one", None, 0)]),
+        ("three", 0, b"xyz", [("text", "three", None, 0)]),
+        ("three", 1, b"yz", [("text", "three", None, 1)]),
+        ("three", 2, b"z", [("text", "three", None, 2)]),
+    ]
+
+    # every row yields nothing: empty batches of the output schema
+    empty = run_row_stage(df, ["key", "n", "blob"], lambda *v: [], out)
+    assert empty.collect() == []
+    assert empty.schema == res.schema
+
+
 def test_normalize_xhtml_matches_pure_python(spark, corpus_path):
     import pyarrow.parquet as pq
 

@@ -13,8 +13,12 @@
   literal in ``scripts/`` or ``xhtmlkit_spark/`` outside ``session.py``
   (``streaming/jobs.py``'s ``_drain_conf`` pins shuffle partitions
   around a drain and is the one exception).
-* No row-wise Python UDF anywhere in ``xhtmlkit_spark/``: Python runs
-  only inside mapInArrow/mapInPandas (the CLAUDE.md invariant).
+* No row-wise Python UDF anywhere in ``xhtmlkit_spark/``, and every
+  Python stage runs on one of two Arrow kernels: a ``doc_fn`` on
+  ``make_doc_stage_fn`` or a ``row_fn`` on ``run_row_stage``. No
+  ``mapInPandas`` call is left in the package, and ``mapInArrow`` is
+  called only in ``operators/extract_stage.py`` and the ``write_wet``
+  sink (``applyInPandasWithState`` is a separate API, not covered).
 * ``tests/goldens.py`` is the only module under ``tests/`` or
   ``scripts/`` that builds a path into ``tests/golden/``, so the golden
   tests and ``scripts/gen_goldens.py`` share one case-to-output rule.
@@ -159,6 +163,29 @@ def test_no_row_wise_udf():
         if lines:
             offenders[str(path.relative_to(_PKG))] = sorted(set(lines))
     assert not offenders, f"udf/pandas_udf used in: {offenders}"
+
+
+# (file, module-level function) → may call mapInArrow outside the kernel
+_MAP_IN_ARROW_SINKS = {("xhtmlkit_spark/sources/io.py", "write_wet")}
+
+
+def test_python_stages_run_on_the_two_kernels():
+    """Every Python stage is a ``doc_fn`` on ``make_doc_stage_fn`` or a
+    ``row_fn`` on ``run_row_stage``: no ``mapInPandas`` anywhere in the
+    package, and ``mapInArrow`` only in the kernel module and the
+    per-partition ``write_wet`` sink."""
+    offenders = {}
+    for path in _SOURCES:
+        tree = _parse(path)
+        rel = _rel(path)
+        for line in _calls(tree, "mapInPandas"):
+            offenders.setdefault(rel, []).append(("mapInPandas", line))
+        if path == _KERNEL:
+            continue
+        for line in _calls(tree, "mapInArrow"):
+            if (rel, _top_level_owner(tree, line)) not in _MAP_IN_ARROW_SINKS:
+                offenders.setdefault(rel, []).append(("mapInArrow", line))
+    assert not offenders, f"Python stages outside the two kernels: {offenders}"
 
 
 _GOLDEN_PATH = re.compile(r"(^|[/\\])golden([/\\]|$)")

@@ -6,8 +6,8 @@ The scale shape for a merges-table tokenizer at 10^12 docs:
   training is inherently global — pair counts over the corpus — and is
   done on a sample in every production pipeline);
 * **encode** is the distributed pass: the merges table (a few KB)
-  ships inside the mapInArrow closure (Spark broadcasts task binaries;
-  no per-row Python, Arrow-batched like extraction).
+  ships inside the row function's closure (Spark broadcasts task
+  binaries; Arrow-batched on the run_row_stage kernel).
 
 No SQL twin exists — rank-greedy merge application is not expressible
 in DuckDB — so the contract query is rows-only; value-level
@@ -17,11 +17,11 @@ pure-Python equality).
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xhtmlkit_spark.operators.extract_stage import run_row_stage
 from xkit.bpe import BPE, train_bpe
 
 __all__ = ["train_bpe_on_sample", "bpe_token_counts"]
@@ -60,23 +60,11 @@ def bpe_token_counts(
     NULL text → NULL count (SQL semantics, matching every other
     text operator here).
     """
+    enc = BPE(merges)  # unpickled once per task: one word cache per task
+    id_field = df.select(id_col).schema[0]
 
-    def count_batches(batches):
-        enc = BPE(merges)  # one encoder (and word cache) per task
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            counts = [
-                enc.count_tokens(t) if t is not None else None for t in texts
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(counts, pa.int64())],
-                names=[id_col, "n_bpe_real"],
-            )
+    def count(doc_id, text):
+        return [(doc_id, enc.count_tokens(text) if text is not None else None)]
 
-    out_schema = T.StructType(
-        [
-            df.select(id_col).schema[0],
-            T.StructField("n_bpe_real", T.LongType()),
-        ]
-    )
-    return df.select(id_col, text_col).mapInArrow(count_batches, out_schema)
+    out = ((id_field.name, id_field.dataType), ("n_bpe_real", T.LongType()))
+    return run_row_stage(df, [id_col, text_col], count, out)

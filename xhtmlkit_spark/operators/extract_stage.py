@@ -15,7 +15,9 @@ in a ``DataFrame.mapInArrow`` stage. Contract points (BASELINE.json
   column-wise, untouched by Python.
 * Every per-document stage of the package (select, normalize,
   markdown, project, harvest) is a ``doc_fn`` plus an output spec run
-  by the one kernel here, :func:`make_doc_stage_fn`.
+  by the one kernel here, :func:`make_doc_stage_fn`. Every other
+  Python stage (file and WARC ingest, CDX, media, BPE) is a ``row_fn``
+  plus the same kind of spec, run by :func:`run_row_stage`.
 
 Column pruning: :func:`extract_spans` selects only
 ``doc_id, *passthrough, spans`` before the stage, so Catalyst prunes
@@ -42,6 +44,7 @@ __all__ = [
     "make_doc_stage_fn",
     "make_extract_fn",
     "run_doc_stage",
+    "run_row_stage",
     "span_metrics",
     "unpack_spans",
 ]
@@ -116,18 +119,41 @@ def _spans_array(values) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(list_offs, pa.int32()), struct)
 
 
+def _out_columns(out: tuple):
+    """An output spec's Arrow fields and its column builder, shared by
+    both kernels. ``out`` lists the columns as ``(name, Spark DataType)``
+    pairs; the Arrow types are derived here, on the driver. The builder
+    turns one batch's output rows (one tuple per row) into its Arrow
+    columns, each built once: a ``SPANS_TYPE`` value is a ``(k, t, m,
+    o)`` parallel-list tuple (or None), assembled flat; any other column
+    is built by ``pa.array``."""
+    # None marks a spans column (flat assembly)
+    types = [None if dt == SPANS_TYPE else to_arrow_type(dt) for _, dt in out]
+    fields = [
+        pa.field(name, _PA_SPANS if t is None else t)
+        for (name, _), t in zip(out, types)
+    ]
+
+    def build(rows: list) -> list:
+        columns = list(zip(*rows)) or [()] * len(types)
+        return [
+            _spans_array(c) if t is None else pa.array(c, t)
+            for c, t in zip(columns, types)
+        ]
+
+    return fields, build
+
+
 def make_doc_stage_fn(doc_fn, n_passthrough: int, out: tuple = _SPANS_OUT):
     """Build an Arrow-batch mapper around any per-doc parallel-list
     function ``doc_fn(kinds, texts, refs, offsets)`` — THE kernel of
     every per-document stage (extract, select, markdown, harvest, ...).
 
     ``out`` lists the output columns as ``(name, Spark DataType)``
-    pairs; the default is one ``spans`` column. ``doc_fn`` returns one
-    value per output column (a tuple; with a one-column ``out``, the
-    value itself). A ``SPANS_TYPE`` value is a ``(k, t, m, o)``
-    parallel-list tuple, assembled flat; any other column is built by
-    ``pa.array`` with the Arrow type derived here, on the driver, from
-    the Spark type. A NULL spans row gives NULL in every output column.
+    pairs (see :func:`_out_columns`); the default is one ``spans``
+    column. ``doc_fn`` returns one value per output column (a tuple;
+    with a one-column ``out``, the value itself). A NULL spans row
+    gives NULL in every output column.
 
     Expects batches with columns ``[doc_id, <n_passthrough cols>, spans]``
     (enforced by :func:`run_doc_stage`'s select) and emits
@@ -135,13 +161,8 @@ def make_doc_stage_fn(doc_fn, n_passthrough: int, out: tuple = _SPANS_OUT):
     """
     spans_idx = n_passthrough + 1
     single = len(out) == 1
-    null_row = None if single else (None,) * len(out)
-    # None marks a spans column (flat assembly)
-    types = [None if dt == SPANS_TYPE else to_arrow_type(dt) for _, dt in out]
-    fields = [
-        pa.field(name, _PA_SPANS if t is None else t)
-        for (name, _), t in zip(out, types)
-    ]
+    null_row = (None,) * len(out)
+    fields, build = _out_columns(out)
 
     def doc_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -152,21 +173,39 @@ def make_doc_stage_fn(doc_fn, n_passthrough: int, out: tuple = _SPANS_OUT):
             for i in range(n_rows):
                 if nulls is None or nulls[i]:
                     s, e = offs[i], offs[i + 1]
-                    rows.append(
-                        doc_fn(kind_l[s:e], text_l[s:e], ref_l[s:e], off_l[s:e])
-                    )
+                    r = doc_fn(kind_l[s:e], text_l[s:e], ref_l[s:e], off_l[s:e])
+                    rows.append((r,) if single else r)
                 else:
                     rows.append(null_row)
-            columns = [rows] if single else (list(zip(*rows)) or [()] * len(out))
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                _spans_array(c) if t is None else pa.array(c, t)
-                for c, t in zip(columns, types)
-            ]
+            cols = [batch.column(j) for j in range(spans_idx)] + build(rows)
             yield pa.RecordBatch.from_arrays(cols, schema=pa.schema(
                 [batch.schema.field(j) for j in range(spans_idx)] + fields
             ))
 
     return doc_batches
+
+
+def run_row_stage(df: DataFrame, cols, row_fn, out: tuple) -> DataFrame:
+    """THE kernel of every Python stage that is not a per-document
+    stage (file and WARC ingest, CDX, media, BPE): prune ``df`` to
+    ``cols`` and call ``row_fn(*values)`` once per input row, with the
+    row's values as Python objects (NULL is None, binary is bytes).
+    ``row_fn`` returns (or yields) that row's output rows, 0..N tuples
+    in ``out`` order; ``out`` is the same ``(name, Spark DataType)``
+    spec as :func:`make_doc_stage_fn`'s. Each batch's output rows
+    become one output batch — an empty one when no row yields any."""
+    fields, build = _out_columns(out)
+    schema = pa.schema(fields)
+
+    def row_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list = []
+            for values in zip(*[c.to_pylist() for c in batch.columns]):
+                rows += row_fn(*values)
+            yield pa.RecordBatch.from_arrays(build(rows), schema=schema)
+
+    out_schema = T.StructType([T.StructField(name, dt) for name, dt in out])
+    return df.select(*cols).mapInArrow(row_batches, out_schema)
 
 
 def make_extract_fn(options: ExtractOptions, n_passthrough: int):

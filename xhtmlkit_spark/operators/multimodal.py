@@ -1,9 +1,10 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata —
-the Spark-side machinery (schemas, Arrow batching via mapInPandas,
-partition shape) is real and tested; the actual codec work is STUBBED
-because no image/audio library exists in this container:
+the Spark-side machinery (schemas, Arrow batching on the
+``run_row_stage`` kernel, partition shape) is real and tested; the
+actual codec work is STUBBED because no image/audio library exists in
+this container:
 
 * :func:`decode_media` raises ``NotImplementedError`` unless a
   decoder is injected — the marked seam for pillow/libav in prod.
@@ -13,7 +14,7 @@ because no image/audio library exists in this container:
 
 Pattern notes for 100 TB: media bytes ride in their own table keyed by
 media_ref (never inline with text spans — they'd destroy scan locality
-for text-only queries); feature extraction is mapInPandas over
+for text-only queries); feature extraction is a row function over
 Arrow-sized batches with binary columns, bounded by
 ``maxRecordsPerBatch`` to keep worker memory flat.
 """
@@ -21,12 +22,11 @@ Arrow-sized batches with binary columns, bounded by
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xhtmlkit_spark.operators.extract_stage import run_row_stage
 
 __all__ = [
     "MEDIA_META_SCHEMA",
@@ -71,63 +71,45 @@ def decode_media(payload: bytes, media_type: str, decoder=None):
     )
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Deterministic fake 'embedding': 16-bin byte histogram, L1-normalized
-    — numerically checkable end-to-end without a codec.
-    """
+def _features(media_ref, media_type, payload, n_bytes):
+    """Deterministic fake 'embedding': 16-bin byte histogram,
+    L1-normalized — numerically checkable end-to-end without a codec."""
     import numpy as np
 
-    for pdf in batches:
-        feats = []
-        for payload in pdf["payload"]:
-            arr = np.frombuffer(payload, dtype=np.uint8)
-            hist = np.bincount(arr >> 4, minlength=_FEATURE_DIM).astype("float64")
-            total = hist.sum() or 1.0
-            feats.append((hist / total).round(6).tolist())
-        yield pd.DataFrame(
-            {
-                "media_ref": pdf["media_ref"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"],
-                "features": feats,
-            }
-        )
+    arr = np.frombuffer(payload, dtype=np.uint8)
+    hist = np.bincount(arr >> 4, minlength=_FEATURE_DIM).astype("float64")
+    total = hist.sum() or 1.0
+    return [(media_ref, media_type, n_bytes, (hist / total).round(6).tolist())]
 
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-    ]
+_FEATURE_OUT = (
+    ("media_ref", T.StringType()),
+    ("media_type", T.StringType()),
+    ("n_bytes", T.LongType()),
+    ("features", T.ArrayType(T.DoubleType())),
 )
 
 
 def media_feature_stage(media_df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over a MEDIA_META_SCHEMA frame."""
-    return media_df.select(
-        "media_ref", "media_type", "payload", "n_bytes"
-    ).mapInPandas(_feature_batches, FEATURE_SCHEMA)
+    """Feature extraction over a MEDIA_META_SCHEMA frame, one row per
+    media row, on the run_row_stage kernel."""
+    cols = ["media_ref", "media_type", "payload", "n_bytes"]
+    return run_row_stage(media_df, cols, _features, _FEATURE_OUT)
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_offset", T.LongType()),
-        T.StructField("frame", T.BinaryType()),
-        T.StructField("n_frame_bytes", T.LongType()),
-    ]
+_FRAME_OUT = (
+    ("media_ref", T.StringType()),
+    ("frame_idx", T.IntegerType()),
+    ("frame_offset", T.LongType()),
+    ("frame", T.BinaryType()),
+    ("n_frame_bytes", T.LongType()),
 )
 
 
 def frame_sample_stage(
     media_df: DataFrame, n_frames: int = 4, frame_bytes: int = 256
 ) -> DataFrame:
-    """Video frame sampling as a mapInPandas 1→N fan-out.
+    """Video frame sampling as a 1→N fan-out on the run_row_stage kernel.
 
     Real decode needs libav (the :func:`decode_media` seam); the
     DISTRIBUTED SHAPE is the point and is fully real: each video row
@@ -141,63 +123,38 @@ def frame_sample_stage(
     within worker memory.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs: list = []
-            idxs: list = []
-            offs: list = []
-            frames: list = []
-            for ref, mtype, payload in zip(
-                pdf["media_ref"], pdf["media_type"], pdf["payload"]
-            ):
-                if mtype == "video":
-                    n = len(payload)
-                    span = max(n - frame_bytes, 0)
-                    for i in range(n_frames):
-                        off = (span * i) // max(n_frames - 1, 1)
-                        chunk = bytes(payload[off : off + frame_bytes])
-                        refs.append(ref)
-                        idxs.append(i)
-                        offs.append(off)
-                        frames.append(chunk)
-                elif mtype == "image":
-                    refs.append(ref)
-                    idxs.append(0)
-                    offs.append(0)
-                    frames.append(bytes(payload))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame_offset": pd.array(offs, dtype="int64"),
-                    "frame": frames,
-                    "n_frame_bytes": pd.array(
-                        [len(f) for f in frames], dtype="int64"
-                    ),
-                }
-            )
+    def frames(ref, mtype, payload):
+        if mtype == "image":
+            return [(ref, 0, 0, payload, len(payload))]
+        if mtype != "video":
+            return []
+        span = max(len(payload) - frame_bytes, 0)
+        rows = []
+        for i in range(n_frames):
+            off = (span * i) // max(n_frames - 1, 1)
+            chunk = payload[off : off + frame_bytes]
+            rows.append((ref, i, off, chunk, len(chunk)))
+        return rows
 
-    return media_df.select("media_ref", "media_type", "payload").mapInPandas(
-        gen, FRAME_SCHEMA
+    return run_row_stage(
+        media_df, ["media_ref", "media_type", "payload"], frames, _FRAME_OUT
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("orig_bytes", T.LongType()),
-    ]
+_RESIZED_OUT = (
+    ("media_ref", T.StringType()),
+    ("media_type", T.StringType()),
+    ("payload", T.BinaryType()),
+    ("n_bytes", T.LongType()),
+    ("orig_bytes", T.LongType()),
 )
 
 
 def resize_stage(
     media_df: DataFrame, target_bytes: int = 1024, resizer=None
 ) -> DataFrame:
-    """Image resize as a mapInPandas transform (the brief's
-    decode→resize step).
+    """Image resize as a row transform on the run_row_stage kernel (the
+    brief's decode→resize step).
 
     Real resizing needs a codec (inject ``resizer(payload, media_type,
     target_bytes) -> bytes`` — pillow in prod, same seam discipline as
@@ -211,58 +168,36 @@ def resize_stage(
     def default_resizer(payload: bytes, media_type: str, target: int) -> bytes:
         n = len(payload)
         if n <= target:
-            return bytes(payload)
+            return payload
         # even deterministic stride; exact target length
         return bytes(payload[(i * n) // target] for i in range(target))
 
     fn = resizer or default_resizer
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for mtype, payload in zip(pdf["media_type"], pdf["payload"]):
-                if mtype == "image":
-                    outs.append(fn(bytes(payload), mtype, target_bytes))
-                else:
-                    outs.append(bytes(payload))
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_type": pdf["media_type"],
-                    "payload": outs,
-                    "n_bytes": pd.array([len(p) for p in outs], dtype="int64"),
-                    "orig_bytes": pd.array(
-                        [len(bytes(p)) for p in pdf["payload"]], dtype="int64"
-                    ),
-                }
-            )
+    def resize(ref, mtype, payload):
+        out = fn(payload, mtype, target_bytes) if mtype == "image" else payload
+        return [(ref, mtype, out, len(out), len(payload))]
 
-    # only the columns gen() reads — n_bytes is recomputed for the
+    # only the columns resize() reads — n_bytes is recomputed for the
     # output, so requiring it on input would be a dead Arrow column
-    return media_df.select("media_ref", "media_type", "payload").mapInPandas(
-        gen, RESIZED_SCHEMA
+    return run_row_stage(
+        media_df, ["media_ref", "media_type", "payload"], resize, _RESIZED_OUT
     )
 
 
 def media_table_from_refs(refs_df: DataFrame, n_bytes: int = 4096) -> DataFrame:
     """Materialize a media table (fake payloads) from a media_ref column —
     the sandbox stand-in for the object-store fetch stage. Stays
-    Arrow-batched via mapInPandas; the ref→type rule is suffix-based."""
+    Arrow-batched on the run_row_stage kernel; the ref→type rule is
+    suffix-based."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [fake_fetch_media(r, n_bytes) for r in pdf["media_ref"]]
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_type": [
-                        "video" if r.endswith((".mp4", ".webm")) else
-                        "audio" if r.endswith((".mp3", ".wav")) else "image"
-                        for r in pdf["media_ref"]
-                    ],
-                    "payload": payloads,
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
+    def fetch(ref):
+        payload = fake_fetch_media(ref, n_bytes)
+        mtype = (
+            "video" if ref.endswith((".mp4", ".webm")) else
+            "audio" if ref.endswith((".mp3", ".wav")) else "image"
+        )
+        return [(ref, mtype, payload, len(payload))]
 
-    return refs_df.select("media_ref").distinct().mapInPandas(gen, MEDIA_META_SCHEMA)
+    out = tuple((f.name, f.dataType) for f in MEDIA_META_SCHEMA)
+    return run_row_stage(refs_df.select("media_ref").distinct(), ["media_ref"], fetch, out)

@@ -13,7 +13,22 @@ anti-join) is format-agnostic.
 
 from __future__ import annotations
 
+import base64
+import gzip
+import hashlib
+import os
+import re
+import uuid
+
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE, run_row_stage
+from xkit.encoding import decode_html_bytes
+from xkit.warc import build_record, http_payload, iter_warc, iter_warc_offsets, surt
 
 __all__ = [
     "read_corpus",
@@ -29,15 +44,15 @@ __all__ = [
 
 
 def _binary_files(
-    spark: SparkSession, location: str, glob: str, recursive: bool, *cols: str
+    spark: SparkSession, location: str, glob: str, recursive: bool
 ) -> DataFrame:
     """``binaryFile`` scan of the files under ``location`` matching
-    ``glob`` (subdirectories too when ``recursive``), projected to
-    ``cols`` — the one raw-file reader behind every file ingest."""
+    ``glob`` (subdirectories too when ``recursive``) — the one raw-file
+    reader behind every file ingest."""
     reader = spark.read.format("binaryFile").option("pathGlobFilter", glob)
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(location).select(*cols)
+    return reader.load(location)
 
 
 def ingest_html_files(
@@ -47,10 +62,10 @@ def ingest_html_files(
     the reference's parse-from-source entry point, A2/A3/A4).
 
     ``binaryFile`` scans the directory; encoding is sniffed per file
-    (BOM → <meta> → UTF-8 fallback, xkit.encoding — never raises) in a
-    mapInPandas stage, and each file becomes one ``(doc_id, spans)``
-    row with a single html span, ready for extract_spans /
-    select_spans / run_pipeline. ``*.pdf`` files (pass e.g.
+    (BOM → <meta> → UTF-8 fallback, xkit.encoding — never raises) by a
+    row function on the run_row_stage kernel, and each file becomes one
+    ``(doc_id, spans)`` row with a single html span, ready for
+    extract_spans / select_spans / run_pipeline. ``*.pdf`` files (pass e.g.
     ``glob="*.{html,pdf}"`` or ``"*"``) become ``pdf`` spans with the
     bytes latin-1-lossless in the string column — the file-based
     entry point for the INTERLEAVED corpus shape, one pipeline for
@@ -62,17 +77,7 @@ def ingest_html_files(
     source splits across executors by file; giant single files are the
     input-side skew with_size_salt then handles.
     """
-    import os
-    import re
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE
-    from xkit.encoding import decode_html_bytes
-
-    raw = _binary_files(spark, location, glob, recursive, "path", "content")
+    raw = _binary_files(spark, location, glob, recursive)
 
     # resolved on the driver, closure-captured: binaryFile paths come
     # back as file: URIs over absolute paths
@@ -85,38 +90,19 @@ def ingest_html_files(
             return p[len(root_abs) + 1 :]
         return p if p != root_abs else p.rsplit("/", 1)[-1]
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content)
-                if path.lower().endswith(".pdf"):
-                    # PDF bytes ride the corpus's string column
-                    # latin-1 (lossless bytes↔str), the same convention
-                    # datagen uses for fixture-PDF spans; extract_doc's
-                    # pdf branch accepts either form
-                    kind, text = "pdf", raw.decode("latin-1")
-                else:
-                    kind, text = "html", decode_html_bytes(raw)
-                rows.append(
-                    {
-                        "doc_id": _doc_id(path),
-                        "spans": [
-                            {
-                                "kind": kind,
-                                "text": text,
-                                "media_ref": None,
-                                "offset": 0,
-                            }
-                        ],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+    def file_doc(path: str, content: bytes):
+        if path.lower().endswith(".pdf"):
+            # PDF bytes ride the corpus's string column latin-1
+            # (lossless bytes↔str), the same convention datagen uses
+            # for fixture-PDF spans; extract_doc's pdf branch accepts
+            # either form
+            kind, text = "pdf", content.decode("latin-1")
+        else:
+            kind, text = "html", decode_html_bytes(content)
+        return [(_doc_id(path), ([kind], [text], [None], [0]))]
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.StringType()), T.StructField("spans", SPANS_TYPE)]
-    )
-    return raw.mapInPandas(decode, schema)
+    out = (("doc_id", T.StringType()), ("spans", SPANS_TYPE))
+    return run_row_stage(raw, ["path", "content"], file_doc, out)
 
 
 def ingest_warc(
@@ -125,8 +111,9 @@ def ingest_warc(
     """WARC archives (the Common Crawl container format) → corpus rows.
 
     ``binaryFile`` scans ``*.warc`` / ``*.warc.gz``; each archive is
-    parsed in a mapInPandas stage (xkit.warc, stdlib-only: gzip-member
-    iteration, record framing, HTTP de-chunk + content-decoding), and
+    parsed by the :func:`warc_docs` row function on the run_row_stage
+    kernel (xkit.warc, stdlib-only: gzip-member iteration, record
+    framing, HTTP de-chunk + content-decoding), and
     every 2xx ``response`` record whose payload is HTML/XHTML or PDF
     becomes one corpus row:
 
@@ -161,77 +148,51 @@ def ingest_warc(
     .warc.gz segments, thousands per crawl — natural parallelism);
     a re-partition after ingest rebalances giant-archive skew.
     """
-    raw = _binary_files(spark, location, glob, recursive, "content")
-    return raw.mapInPandas(_parse_warc_batches, _warc_corpus_schema())
+    raw = _binary_files(spark, location, glob, recursive)
+    return run_row_stage(raw, ["content"], warc_docs, WARC_CORPUS_OUT)
 
 
 _WARC_HTML_MIMES = ("text/html", "application/xhtml+xml")
 
-
-def _warc_corpus_schema():
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import SPANS_TYPE
-
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("fetched_at", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-            T.StructField("spans", SPANS_TYPE),
-        ]
-    )
+# the corpus columns of ingest_warc and streaming_warc_extract
+WARC_CORPUS_OUT = (
+    ("doc_id", T.StringType()),
+    ("url", T.StringType()),
+    ("fetched_at", T.StringType()),
+    ("http_status", T.IntegerType()),
+    ("mime", T.StringType()),
+    ("spans", SPANS_TYPE),
+)
 
 
-def _parse_warc_batches(batches):
-    """mapInPandas body shared by ingest_warc (batch) and
-    streaming_warc_extract (continuous): archive bytes → corpus rows."""
-    import pandas as pd
-
-    from xkit.encoding import decode_html_bytes
-    from xkit.warc import http_payload, iter_warc
-
-    cols = ["doc_id", "url", "fetched_at", "http_status", "mime", "spans"]
-    for pdf in batches:
-        rows = []
-        for content in pdf["content"]:
-            seen: dict[str, int] = {}
-            for rec in iter_warc(bytes(content)):
-                if rec.warc_type != "response":
-                    continue
-                status, hdrs, body = http_payload(rec)
-                if status is None or not (200 <= status < 300):
-                    continue
-                ctype = hdrs.get("content-type", "")
-                mime = ctype.split(";", 1)[0].strip().lower()
-                if mime in _WARC_HTML_MIMES:
-                    kind = "html"
-                    charset = None
-                    if "charset=" in ctype.lower():
-                        charset = ctype.lower().split("charset=", 1)[1].split(";")[0].strip(" \"'")
-                    text = decode_html_bytes(body, http_charset=charset)
-                elif mime == "application/pdf":
-                    kind, text = "pdf", body.decode("latin-1")
-                else:
-                    continue
-                uri = rec.target_uri or rec.record_id or "urn:unknown"
-                n = seen.get(uri, 0)
-                seen[uri] = n + 1
-                rows.append(
-                    {
-                        "doc_id": uri if n == 0 else f"{uri}#dup{n}",
-                        "url": uri,
-                        "fetched_at": rec.date,
-                        "http_status": status,
-                        "mime": mime,
-                        "spans": [
-                            {"kind": kind, "text": text, "media_ref": None, "offset": 0}
-                        ],
-                    }
-                )
-        yield pd.DataFrame(rows, columns=cols)
+def warc_docs(content: bytes):
+    """The row function shared by ingest_warc (batch) and
+    streaming_warc_extract (continuous): one archive's bytes → its
+    corpus rows, in ``WARC_CORPUS_OUT`` order."""
+    seen: dict[str, int] = {}
+    for rec in iter_warc(content):
+        if rec.warc_type != "response":
+            continue
+        status, hdrs, body = http_payload(rec)
+        if status is None or not (200 <= status < 300):
+            continue
+        ctype = hdrs.get("content-type", "")
+        mime = ctype.split(";", 1)[0].strip().lower()
+        if mime in _WARC_HTML_MIMES:
+            kind = "html"
+            charset = None
+            if "charset=" in ctype.lower():
+                charset = ctype.lower().split("charset=", 1)[1].split(";")[0].strip(" \"'")
+            text = decode_html_bytes(body, http_charset=charset)
+        elif mime == "application/pdf":
+            kind, text = "pdf", body.decode("latin-1")
+        else:
+            continue
+        uri = rec.target_uri or rec.record_id or "urn:unknown"
+        n = seen.get(uri, 0)
+        seen[uri] = n + 1
+        doc_id = uri if n == 0 else f"{uri}#dup{n}"
+        yield doc_id, uri, rec.date, status, mime, ([kind], [text], [None], [0])
 
 
 def warc_cdx(
@@ -259,61 +220,42 @@ def warc_cdx(
     sort by (urlkey, timestamp) at write time if a merged index is
     wanted (that global sort is the index build's only exchange).
     """
-    import os
-    from collections.abc import Iterator
+    raw = _binary_files(spark, location, glob, recursive)
+    return run_row_stage(raw, ["path", "content"], _cdx_rows, _CDX_OUT)
 
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    raw = _binary_files(spark, location, glob, recursive, "path", "content")
+_CDX_OUT = (
+    ("urlkey", T.StringType()),
+    ("timestamp", T.StringType()),
+    ("url", T.StringType()),
+    ("mime", T.StringType()),
+    ("status", T.IntegerType()),
+    ("digest", T.StringType()),
+    ("length", T.LongType()),
+    ("offset", T.LongType()),
+    ("filename", T.StringType()),
+)
 
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import base64
-        import hashlib
-        import re as _re
 
-        from xkit.warc import http_payload, iter_warc_offsets, surt
-
-        cols = ["urlkey", "timestamp", "url", "mime", "status", "digest", "length", "offset", "filename"]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for rec, off, length in iter_warc_offsets(bytes(content)):
-                    if rec.warc_type != "response":
-                        continue
-                    status, hdrs, body = http_payload(rec)
-                    uri = rec.target_uri or ""
-                    ts = _re.sub(r"[^0-9]", "", rec.date or "")[:14]
-                    rows.append(
-                        {
-                            "urlkey": surt(uri),
-                            "timestamp": ts,
-                            "url": uri,
-                            "mime": hdrs.get("content-type", "").split(";", 1)[0].strip().lower(),
-                            "status": status,
-                            "digest": base64.b32encode(hashlib.sha1(body).digest()).decode(),
-                            "length": length,
-                            "offset": off,
-                            "filename": fname,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = T.StructType(
-        [
-            T.StructField("urlkey", T.StringType()),
-            T.StructField("timestamp", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("mime", T.StringType()),
-            T.StructField("status", T.IntegerType()),
-            T.StructField("digest", T.StringType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("filename", T.StringType()),
-        ]
-    )
-    return raw.mapInPandas(index, schema)
+def _cdx_rows(path: str, content: bytes):
+    """One archive → its CDX rows, in ``_CDX_OUT`` order."""
+    fname = path.rsplit("/", 1)[-1]
+    for rec, off, length in iter_warc_offsets(content):
+        if rec.warc_type != "response":
+            continue
+        status, hdrs, body = http_payload(rec)
+        uri = rec.target_uri or ""
+        yield (
+            surt(uri),
+            re.sub(r"[^0-9]", "", rec.date or "")[:14],
+            uri,
+            hdrs.get("content-type", "").split(";", 1)[0].strip().lower(),
+            status,
+            base64.b32encode(hashlib.sha1(body).digest()).decode(),
+            length,
+            off,
+            fname,
+        )
 
 
 def write_wet(
@@ -344,10 +286,6 @@ def write_wet(
     per-file manifest [{path, n_records}] — one row per non-empty
     partition, tiny by construction.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     os.makedirs(location, exist_ok=True)
 
     cols = set(df.columns)
@@ -369,13 +307,6 @@ def write_wet(
     )
 
     def write_partition(batches):
-        import gzip as _gzip
-        import hashlib
-        import uuid as _uuid
-        from pyspark import TaskContext
-
-        from xkit.warc import build_record
-
         ctx = TaskContext.get()
         pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
         ext = ".warc.wet.gz" if compress else ".warc.wet"
@@ -397,9 +328,9 @@ def write_wet(
         n = 0
         done = False
         try:
-            for pdf in batches:
+            for batch in batches:
                 for doc_id, uri, date, text in zip(
-                    pdf["doc_id"], pdf["uri"], pdf["date"], pdf["text"]
+                    *[c.to_pylist() for c in batch.columns]
                 ):
                     if f is None:
                         f = open(tmp, "wb")
@@ -407,10 +338,10 @@ def write_wet(
                             "warcinfo",
                             f"software: {software}\r\nformat: WARC File Format 1.0\r\n".encode(),
                             content_type="application/warc-fields",
-                            record_id=f"<urn:uuid:{_uuid.UUID(bytes=hashlib.md5(f'warcinfo-{pid}'.encode()).digest())}>",
+                            record_id=f"<urn:uuid:{uuid.UUID(bytes=hashlib.md5(f'warcinfo-{pid}'.encode()).digest())}>",
                         )
-                        f.write(_gzip.compress(info, mtime=0) if compress else info)
-                    rid = _uuid.UUID(bytes=hashlib.md5(str(doc_id).encode()).digest())
+                        f.write(gzip.compress(info, mtime=0) if compress else info)
+                    rid = uuid.UUID(bytes=hashlib.md5(str(doc_id).encode()).digest())
                     rec = build_record(
                         "conversion",
                         str(text).encode("utf-8"),
@@ -419,7 +350,7 @@ def write_wet(
                         record_id=f"<urn:uuid:{rid}>",
                         content_type="text/plain",
                     )
-                    f.write(_gzip.compress(rec, mtime=0) if compress else rec)
+                    f.write(gzip.compress(rec, mtime=0) if compress else rec)
                     n += 1
             done = True
         finally:
@@ -434,11 +365,10 @@ def write_wet(
                         pass
         if n:
             os.replace(tmp, final)
-            import pandas as pd
-
-            yield pd.DataFrame([{"path": final, "n_records": n}])
-
-    from pyspark.sql import types as T
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([final], pa.string()), pa.array([n], pa.int64())],
+                names=["path", "n_records"],
+            )
 
     manifest_schema = T.StructType(
         [
@@ -446,7 +376,7 @@ def write_wet(
             T.StructField("n_records", T.LongType()),
         ]
     )
-    return [r.asDict() for r in proj.mapInPandas(write_partition, manifest_schema).collect()]
+    return [r.asDict() for r in proj.mapInArrow(write_partition, manifest_schema).collect()]
 
 
 def read_corpus(spark: SparkSession, location: str, fmt: str = "parquet") -> DataFrame:

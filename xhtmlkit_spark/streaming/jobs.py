@@ -432,8 +432,8 @@ def streaming_warc_extract(
 ) -> None:
     """The full parse-while-crawling analogue: WARC archives land
     continuously (a crawler's output directory), each micro-batch
-    parses the new archives (xkit.warc via the shared
-    ``_parse_warc_batches`` stage), runs main-content extraction, and
+    parses the new archives (xkit.warc via the shared ``warc_docs``
+    row function), runs main-content extraction, and
     commits extracted spans to the exactly-once file sink — the
     streaming composition of :func:`ingest_warc` and
     :func:`streaming_extract`. binaryFile is a first-class streaming
@@ -443,9 +443,9 @@ def streaming_warc_extract(
     """
     from pyspark.sql import types as T
 
-    from xhtmlkit_spark.operators.extract_stage import extract_spans
+    from xhtmlkit_spark.operators.extract_stage import extract_spans, run_row_stage
     from xhtmlkit_spark.plans.pipeline import derive_part
-    from xhtmlkit_spark.sources.io import _parse_warc_batches, _warc_corpus_schema
+    from xhtmlkit_spark.sources.io import WARC_CORPUS_OUT, warc_docs
 
     bin_schema = T.StructType(
         [
@@ -462,9 +462,9 @@ def streaming_warc_extract(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir).select("content")
+    stream = reader.load(input_dir)
 
-    corpus = stream.mapInPandas(_parse_warc_batches, _warc_corpus_schema())
+    corpus = run_row_stage(stream, ["content"], warc_docs, WARC_CORPUS_OUT)
     out = extract_spans(
         derive_part(corpus), passthrough=("part", "url", "fetched_at")
     ).select("doc_id", "url", "fetched_at", "spans", "part")

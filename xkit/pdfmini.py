@@ -135,9 +135,15 @@ __all__ = ["extract_pdf_text", "make_fixture_pdf"]
 # inflate (~1/128 of FlateDecode streams, silently). Trailing EOL is
 # stripped per-filter below instead.
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
+# A literal string's body: escapes, plain bytes and balanced unescaped
+# parentheses (ISO 32000-1 §7.3.4.2), nested up to 8 deep — ``re`` has
+# no recursion, so each level wraps the one inside it.
+_LITERAL_BODY = rb"(?:\\.|[^\\()])*"
+for _ in range(8):
+    _LITERAL_BODY = rb"(?:\\.|[^\\()]|\(%s\))*" % _LITERAL_BODY
 # The one PDF string lexer: a literal ``(body)`` or a hex ``<hexbody>``
 # string. Content streams and dict string entries both match through it.
-_STRING_TOKEN = rb"\((?P<body>(?:\\.|[^\\()])*)\)|<(?P<hexbody>[0-9A-Fa-f\s]*)>"
+_STRING_TOKEN = rb"\((?P<body>%s)\)|<(?P<hexbody>[0-9A-Fa-f\s]*)>" % _LITERAL_BODY
 # One combined token scan per content stream: strings are matched FIRST
 # so an operator-looking substring INSIDE a string ('GET' contains
 # 'ET') can never terminate a text object — the old split-on-BT..ET
@@ -156,10 +162,11 @@ _CONTENT_RE = re.compile(
     re.VERBOSE | re.DOTALL,
 )
 # single left-to-right pass (ISO 32000-1 §7.3.4.2): octal, named
-# escapes, backslash + EOL as a dropped line continuation, and unknown
-# \x read as x — sequential .replace() passes corrupted strings like
-# (\\101), resolving the octal against an already-escaped backslash
-_ESC_RE = re.compile(rb"\\(\r\n|[0-7]{1,3}|.)", re.DOTALL)
+# escapes, backslash + EOL as a dropped line continuation, unknown
+# \x read as x, and an unescaped EOL (CR, LF or CRLF) read as one LF —
+# sequential .replace() passes corrupted strings like (\\101),
+# resolving the octal against an already-escaped backslash
+_ESC_RE = re.compile(rb"\\(\r\n|[0-7]{1,3}|.)|\r\n?", re.DOTALL)
 _NAMED_ESC = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"\r\n": b"", b"\r": b"", b"\n": b"",
@@ -169,6 +176,8 @@ _NAMED_ESC = {
 def _unescape_pdf_bytes(body: bytes) -> bytes:
     def sub(m: re.Match) -> bytes:
         g = m.group(1)
+        if g is None:  # unescaped CR or CRLF
+            return b"\n"
         if b"0" <= g[:1] <= b"7":
             return bytes([int(g, 8) & 0xFF])
         return _NAMED_ESC.get(g, g)
